@@ -4,14 +4,19 @@ Modes:
   python bench_extra.py --plans [suffix]       # dump explain("formatted") for
                                                # every headline query to
                                                # plans/r08/<q>_<suffix>.txt
-  python bench_extra.py --profile <name>       # per-stage noop-sink timings
-                                               # for a heavy query family
   python bench_extra.py --time <q1,q2,...>     # min-of-3 noop timings for a
                                                # subset (fast iteration loop)
 
 Methodology is the guide's §1: noop sink so the computation, not the sink,
 is timed; jobs labelled via setJobDescription; min of 3 runs (same policy
 as the frozen bench.py).
+
+Per-layer timing: ``python3 perfbench/run.py --workload <name> --trace 1``
+calls the real operators and records per-span counters (wall, rows,
+shuffle, spill, Python worker init/run) for ``conflate``, ``edit_plan``,
+``segment_ways`` and ``geotag_points``. The MinHash sub-stage breakdown
+(signatures / bands / candidate pairs) has no replacement until the
+per-operator ledger (ROADMAP.md direction 1) covers dedup.
 """
 
 from __future__ import annotations
@@ -112,195 +117,8 @@ def time_subset(names: list[str]) -> None:
     spark.stop()
 
 
-# ---------------------------------------------------------------------------
-# per-stage profiles
-# ---------------------------------------------------------------------------
-
-def profile_conflate(spark):
-    import pyspark.sql.functions as F
-
-    from osm_admin_boundary_conflation_spark import datagen_osm
-    from osm_admin_boundary_conflation_spark.operators import conflation as CF
-
-    world = datagen_osm.build_osm_world(spark, SF_DIR)
-    src_ways, src_rels = world["src_ways"], world["src_rels"]
-    osm_ways, osm_node_tags, osm_rels = (
-        world["osm_ways"], world["osm_node_tags"], world["osm_rels"],
-    )
-
-    _t3(spark, "scan: src_ways", src_ways)
-    _t3(spark, "scan: osm_ways", osm_ways)
-
-    full = CF.conflate(src_ways, src_rels, osm_ways, osm_node_tags, osm_rels)
-    _t3(spark, "conflate FULL", full.select("way_id", "n_rels", "verdict", "osm_way_id", "error_context"))
-
-
-def profile_segment(spark):
-    import pyspark.sql.functions as F
-
-    from osm_admin_boundary_conflation_spark import datagen_osm
-    from osm_admin_boundary_conflation_spark.operators import segmentation as SG
-
-    ways = datagen_osm.build_strip_world(spark, SF_DIR)
-    _t3(spark, "scan: strip ways", ways)
-    corners = SG.detect_corners(ways)
-    _t3(spark, "corners", corners)
-
-    small = ways.filter(F.size("node_ids") < SG.SPLIT_DISTRIBUTED_MIN)
-    pos = small.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
-    corner_pos = (
-        pos.join(corners, "node_id")
-        .groupBy("way_id")
-        .agg(F.array_sort(F.collect_set("pos")).alias("corner_pos"))
-    )
-    _t3(spark, "corner_pos", corner_pos)
-    w = small.join(corner_pos, "way_id", "left").withColumn(
-        "corner_pos", F.coalesce("corner_pos", F.array().cast("array<int>"))
-    )
-    segs_small = w.select(
-        "way_id", "admin_level",
-        F.explode(SG.split_way_udf(F.col("node_ids"), F.col("corner_pos"))).alias("seg_nodes"),
-    )
-    _t3(spark, "segs_small (split udf)", segs_small)
-    # isolate the giant-way row through the same path
-    big_only = ways.filter(F.col("way_id") < 0)
-    pos_b = big_only.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
-    corner_pos_b = (
-        pos_b.join(corners, "node_id")
-        .groupBy("way_id")
-        .agg(F.array_sort(F.collect_set("pos")).alias("corner_pos"))
-    )
-    wb = big_only.join(corner_pos_b, "way_id", "left").withColumn(
-        "corner_pos", F.coalesce("corner_pos", F.array().cast("array<int>"))
-    )
-    segs_big = wb.select(
-        "way_id", "admin_level",
-        F.explode(SG.split_way_udf(F.col("node_ids"), F.col("corner_pos"))).alias("seg_nodes"),
-    )
-    _t3(spark, "segs for OUTER way only (udf)", segs_big)
-    full = SG.segment_ways(ways)
-    _t3(spark, "segment FULL", full.select("fp", "parents", "n_parents", "admin_level"))
-
-
-def profile_skew(spark):
-    import pyspark.sql.functions as F
-
-    from osm_admin_boundary_conflation_spark import datagen
-    from osm_admin_boundary_conflation_spark.operators.spatial_join import geotag_points
-    from osm_admin_boundary_conflation_spark.queries import _skew_points
-    from osm_admin_boundary_conflation_spark.functions.udfs import (
-        cover_wkt_udf, point_in_wkt_udf,
-    )
-
-    pg = _skew_points(spark, SF_DIR)
-    _t3(spark, "skew: points only", pg)
-    boundaries = datagen.build_boundaries(spark, SF_DIR)
-    bcov = boundaries.select("level9_id", "wkt", cover_wkt_udf("wkt").alias("_cells"))
-    bc = bcov.select("level9_id", "wkt", F.explode("_cells").alias("_jcell"))
-    n_salt = 32
-    pg2 = pg.withColumn("_jcell", F.col("cell_id"))
-    pg_s = pg2.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salt)))
-    bc_s = bc.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("long"))
-    joined = pg_s.join(bc_s, ["_jcell", "_salt"], "left").drop("_salt")
-    _t3(spark, "skew: join only (no PiP)", joined)
-    confirmed = joined.withColumn(
-        "inside",
-        F.when(F.col("wkt").isNull(), F.lit(False)).otherwise(
-            point_in_wkt_udf(F.col("lon"), F.col("lat"), F.col("wkt"))
-        ),
-    )
-    _t3(spark, "skew: join + PiP", confirmed)
-    per_page = confirmed.groupBy("url", "lat", "lon", "cell_id").agg(
-        F.sort_array(F.collect_list(F.when(F.col("inside"), F.col("level9_id")))).alias("matches")
-    )
-    _t3(spark, "skew: + per-page agg", per_page)
-    full = geotag_points(pg, boundaries, broadcast_boundaries=False, n_salt=32)
-    agg = (
-        full.filter(F.col("verdict") == "MATCHED")
-        .groupBy("level9_id")
-        .agg(F.count("*").alias("n_points"))
-    )
-    _t3(spark, "skew FULL query", agg)
-
-
-def profile_minhash(spark):
-    import pyspark.sql.functions as F
-
-    from osm_admin_boundary_conflation_spark.operators import dedup as DD
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    base = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("t"))
-    dups = (
-        docs.filter(F.col("doc_id") % 7 == 0)
-        .select((F.col("doc_id") + 2000000).alias("id"),
-                F.concat("text", F.lit(" extra")).alias("t"))
-    )
-    corpus = base.unionByName(dups)
-    n = corpus.count()
-    print(f"corpus rows: {n}")
-    sig = DD.minhash_signatures(corpus)
-    _t3(spark, "minhash: signatures", sig)
-    bands = DD.minhash_bands(corpus)
-    _t3(spark, "minhash: bands", bands)
-    pairs = DD.lsh_candidate_pairs(corpus)
-    _t3(spark, "minhash: candidate pairs", pairs)
-    print(f"candidate pairs: {pairs.count()}")
-    full = DD.minhash_dedup_pairs(corpus, threshold=0.5)
-    _t3(spark, "minhash FULL", full)
-
-
-def profile_edit_plan(spark):
-    import pyspark.sql.functions as F
-
-    from osm_admin_boundary_conflation_spark import datagen_osm
-    from osm_admin_boundary_conflation_spark.operators import conflation as CF
-    from osm_admin_boundary_conflation_spark.operators.edit_plan import edit_plan, edit_summary
-
-    world = datagen_osm.build_osm_world(spark, SF_DIR)
-    verdicts = CF.conflate(
-        world["src_ways"], world["src_rels"], world["osm_ways"],
-        world["osm_node_tags"], world["osm_rels"],
-    )
-    todo = (
-        verdicts.filter(F.col("verdict") == "CHECKED_POSSIBLE")
-        .select("way_id", "osm_way_id", "verdict")
-        .localCheckpoint()
-    )
-    print(f"todo rows: {todo.count()}")
-    plan = edit_plan(todo, world["src_ways"], world["osm_ways"])
-    _t3(spark, "edit_plan rows", plan)
-    _t3(spark, "edit_plan FULL summary", edit_summary(plan))
-
-
-def profile_suffix(spark):
-    from osm_admin_boundary_conflation_spark import queries as Q
-
-    qs = Q.queries()
-    df = qs["suffix_array_doubling"](spark, SF_DIR)
-    _t3(spark, "suffix_array FULL", df)
-
-
-PROFILES = {
-    "conflate": profile_conflate,
-    "segment": profile_segment,
-    "skew": profile_skew,
-    "minhash": profile_minhash,
-    "edit_plan": profile_edit_plan,
-    "suffix": profile_suffix,
-}
-
-
 if __name__ == "__main__":
     if sys.argv[1] == "--plans":
         dump_plans(sys.argv[2] if len(sys.argv) > 2 else "before")
-    elif sys.argv[1] == "--profile":
-        spark = _session()
-        _worlds(spark)
-        for name in sys.argv[2].split(","):
-            print(f"=== profile: {name} ===")
-            PROFILES[name](spark)
-        spark.stop()
     elif sys.argv[1] == "--time":
         time_subset(sys.argv[2].split(","))

@@ -112,7 +112,15 @@ def build_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     try:
-        nbytes = _os.path.getsize(f"{sf_dir}/documents.parquet")
+        path = f"{sf_dir}/documents.parquet"
+        if _os.path.isdir(path):  # Spark-written dataset: sum its data files
+            nbytes = sum(
+                e.stat().st_size
+                for e in _os.scandir(path)
+                if e.is_file() and not e.name.startswith(("_", "."))
+            )
+        else:
+            nbytes = _os.path.getsize(path)
         if nbytes > 4 * 1024 * 1024 and docs.rdd.getNumPartitions() < par:
             docs = docs.repartition(par, F.col("doc_id"))
     except OSError:  # pragma: no cover — defensive

@@ -147,34 +147,15 @@ def _cover_masks(mp: list[list[np.ndarray]], res: int):
 MAX_COVER_CELLS = 512
 
 
-def cover_polygon_adaptive(
+def cover_polygon_adaptive_full(
     mp: list[list[np.ndarray]], base_res: int, max_cells: int = MAX_COVER_CELLS
-) -> list[str]:
+) -> list[tuple[str, bool]]:
     """Coarsen resolution per polygon until the covering fits max_cells
     (the H3 'compact' analogue): a country-sized polygon covers at r2,
     a city block at base_res. The pages side joins at every resolution
     present (multi-res equi join in operators/spatial_join.py), so big
-    polygons cost O(max_cells) index rows instead of O(area)."""
-    from . import geometry as G
-
-    res = base_res
-    while res > 0:
-        size = cell_size_deg(res)
-        min_lon, min_lat, max_lon, max_lat = G.bbox(mp)
-        est = ((max_lat - min_lat) / size + 2) * ((max_lon - min_lon) / size + 2)
-        if est <= max_cells:
-            cover = cover_polygon(mp, res)
-            if len(cover) <= max_cells:
-                return cover
-        res -= 1
-    return cover_polygon(mp, 0)
-
-
-def cover_polygon_adaptive_full(
-    mp: list[list[np.ndarray]], base_res: int, max_cells: int = MAX_COVER_CELLS
-) -> list[tuple[str, bool]]:
-    """cover_polygon_adaptive with the interior flag — identical cell
-    set and resolution choice, flags per cover_polygon_full."""
+    polygons cost O(max_cells) index rows instead of O(area). Cells
+    carry the interior flag of cover_polygon_full."""
     from . import geometry as G
 
     res = base_res
@@ -188,41 +169,6 @@ def cover_polygon_adaptive_full(
                 return cover
         res -= 1
     return cover_polygon_full(mp, 0)
-
-
-def _rect_intersects_mp(lo_lon, lo_lat, hi_lon, hi_lat, mp) -> bool:
-    from . import geometry as G
-
-    probes = np.array(
-        [
-            [lo_lon, lo_lat],
-            [hi_lon, lo_lat],
-            [hi_lon, hi_lat],
-            [lo_lon, hi_lat],
-            [(lo_lon + hi_lon) / 2.0, (lo_lat + hi_lat) / 2.0],
-        ]
-    )
-    if G.points_in_multipolygon(probes, mp).any():
-        return True
-    # any polygon vertex inside the rect
-    for poly in mp:
-        for ring in poly:
-            inside = (
-                (ring[:, 0] >= lo_lon)
-                & (ring[:, 0] <= hi_lon)
-                & (ring[:, 1] >= lo_lat)
-                & (ring[:, 1] <= hi_lat)
-            )
-            if inside.any():
-                return True
-    # edge crossing: clip each ring's segments against the rect
-    rect = G.rect_ring(lo_lon, lo_lat, hi_lon, hi_lat)
-    for poly in mp:
-        for ring in poly:
-            clipped = G.clip_convex(ring, rect)
-            if len(clipped) >= 3:
-                return True
-    return False
 
 
 def parent_cell(cell_id: str) -> str:

@@ -266,10 +266,6 @@ def _seg_line_intersect(p1, p2, a, b):
     return np.array([p1[0] + t * dx1, p1[1] + t * dy1])
 
 
-def _tri_area(tri: np.ndarray) -> float:
-    return abs(ring_area_signed(tri))
-
-
 def _poly_tris(poly: list[np.ndarray]) -> tuple[list[np.ndarray], list[np.ndarray]]:
     """Triangulate outer ring and holes separately."""
     outer = ear_clip(poly[0]) if poly else []
@@ -554,25 +550,6 @@ def _points_to_polyline_dist(pts: np.ndarray, line: np.ndarray) -> np.ndarray:
     proj = a + t[:, :, None] * ab
     d = np.sqrt(((p - proj) ** 2).sum(axis=2))
     return d.min(axis=1)
-
-
-def line_length_m(coords: np.ndarray) -> float:
-    if len(coords) < 2:
-        return 0.0
-    d = haversine_m(coords[:-1, 0], coords[:-1, 1], coords[1:, 0], coords[1:, 1])
-    return float(np.sum(d))
-
-
-def rect_ring(min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> np.ndarray:
-    return np.array(
-        [
-            [min_lon, min_lat],
-            [max_lon, min_lat],
-            [max_lon, max_lat],
-            [min_lon, max_lat],
-            [min_lon, min_lat],
-        ]
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -59,39 +59,6 @@ def extract_geo(text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lat": lats, "lon": lons})
 
 
-def md5_fingerprint(text: pd.Series) -> pd.Series:
-    """Whole-document content fingerprint (md5 hex of utf-8 bytes)."""
-    return text.map(lambda t: hashlib.md5((t or "").encode("utf-8")).hexdigest())
-
-
-def rolling_fingerprint(text: pd.Series, window: int = 16, mod: int = 1 << 61) -> pd.Series:
-    """Polynomial rolling-hash document fingerprint: min rolling hash over
-    character windows — a deterministic locality-preserving signature."""
-    base = 131
-
-    def one(t: str) -> int:
-        if not t:
-            return 0
-        data = t.encode("utf-8")
-        if len(data) <= window:
-            h = 0
-            for ch in data:
-                h = (h * base + ch) % mod
-            return h
-        h = 0
-        pw = pow(base, window - 1, mod)
-        best = None
-        for i, ch in enumerate(data):
-            h = (h * base + ch) % mod
-            if i >= window:
-                h = (h - data[i - window] * pw * base) % mod
-            if i >= window - 1:
-                best = h if best is None else min(best, h)
-        return best
-
-    return text.map(one)
-
-
 def lang_id(text: pd.Series) -> pd.Series:
     """n-gram/stopword-marker language heuristic → 'en'|'sr'|'de'|'und'."""
 

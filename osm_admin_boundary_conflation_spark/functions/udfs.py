@@ -56,21 +56,6 @@ def token_count_udf(text: pd.Series) -> pd.Series:
     return T.token_count(text).astype("int64")
 
 
-@pandas_udf(StringType())
-def md5_fingerprint_udf(text: pd.Series) -> pd.Series:
-    return T.md5_fingerprint(text)
-
-
-@pandas_udf(LongType())
-def rolling_fingerprint_udf(text: pd.Series) -> pd.Series:
-    return T.rolling_fingerprint(text).astype("int64")
-
-
-@pandas_udf(ArrayType(LongType()))
-def minhash_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: T.minhash_signature(t or ""))
-
-
 @pandas_udf(LongType())
 def simhash_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: T.simhash64(t or "")).astype("int64")
@@ -188,19 +173,6 @@ def utm_roundtrip_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lon": lo, "lat": la})
 
 
-@pandas_udf(ArrayType(StringType()))
-def cover_wkt_udf(wkt: pd.Series) -> pd.Series:
-    """G21 polygon→covering-cell-set (boundary side of the cell hash
-    join). Adaptive resolution: big polygons coarsen until the covering
-    fits MAX_COVER_CELLS, so index size is O(1) per polygon."""
-    from ..datagen import CELL_RES
-
-    memo = _parse_memo(wkt)
-    return wkt.map(
-        lambda w: C.cover_polygon_adaptive(memo[w], CELL_RES) if w is not None else []
-    )
-
-
 _COVER_FULL_SCHEMA = ArrayType(
     StructType(
         [StructField("cell", StringType()), StructField("full", BooleanType())]
@@ -210,10 +182,12 @@ _COVER_FULL_SCHEMA = ArrayType(
 
 @pandas_udf(_COVER_FULL_SCHEMA)
 def cover_wkt_full_udf(wkt: pd.Series) -> pd.Series:
-    """cover_wkt_udf + a fully-interior flag per cell (S2 interior
-    covering): points landing in a full=True cell are inside the polygon
-    by construction and skip the point-in-polygon confirm entirely.
-    Same cell set and adaptive resolution as cover_wkt_udf."""
+    """G21 polygon→covering-cell-set (boundary side of the cell hash
+    join) with a fully-interior flag per cell (S2 interior covering):
+    points landing in a full=True cell are inside the polygon by
+    construction and skip the point-in-polygon confirm entirely.
+    Adaptive resolution: big polygons coarsen until the covering fits
+    MAX_COVER_CELLS, so index size is O(1) per polygon."""
     from ..datagen import CELL_RES
 
     memo = _parse_memo(wkt)
@@ -266,15 +240,6 @@ def cell_expr(lon_col, lat_col, res: int):
     row = F.floor((lat_col + F.lit(90.0)) / F.lit(size)).cast("long")
     col = F.floor((lon_col + F.lit(180.0)) / F.lit(size)).cast("long")
     return F.concat(F.lit(f"r{res}:"), row.cast("string"), F.lit(":"), col.cast("string"))
-
-
-def bearing_expr(lon1, lat1, lon2, lat2):
-    """G8 compass bearing as built-in SQL math (conflate.py:338-355)."""
-    lat1r, lat2r = F.radians(lat1), F.radians(lat2)
-    dlon = F.radians(lon2 - lon1)
-    x = F.sin(dlon) * F.cos(lat2r)
-    y = F.cos(lat1r) * F.sin(lat2r) - F.sin(lat1r) * F.cos(lat2r) * F.cos(dlon)
-    return F.pmod(F.degrees(F.atan2(x, y)) + F.lit(360.0), F.lit(360.0))
 
 
 def haversine_expr(lon1, lat1, lon2, lat2):

@@ -61,17 +61,6 @@ _GEOM_SCHEMA = StructType(
 )
 
 
-def _quirk_bearing(a: np.ndarray, b: np.ndarray) -> float:
-    """conflate.py:389-390 passes (lon,lat) coords into a (lat,lon)
-    bearing function; reproduce the swap exactly."""
-    return float(G.compass_bearing(a[1], a[0], b[1], b[0]))
-
-
-def _line_invalid(c: np.ndarray) -> bool:
-    """shapely-LineString-invalid analogue: <2 points or zero length."""
-    return len(c) < 2 or bool(np.all(np.abs(c - c[0]).max(axis=1) < 1e-15))
-
-
 def _hav(lon1, lat1, lon2, lat2):
     return G.haversine_m(lon1, lat1, lon2, lat2)
 

@@ -196,18 +196,6 @@ def prefix_block_pairs(
 
 
 @pandas_udf(DoubleType())
-def jaccard_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
-    def one(a, b):
-        sa, sb = set(T.shingles(a or "")), set(T.shingles(b or ""))
-        if not sa and not sb:
-            return 1.0
-        u = len(sa | sb)
-        return len(sa & sb) / u if u else 0.0
-
-    return pd.Series([one(a, b) for a, b in zip(ta, tb)])
-
-
-@pandas_udf(DoubleType())
 def containment3_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
     """|shingles(a) ∩ shingles(b)| / |shingles(a)| — directed containment."""
 

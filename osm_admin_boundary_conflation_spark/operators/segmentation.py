@@ -15,72 +15,20 @@ shared-border way segments:
       (translation.py:295-324)
 
 Scale: corner detection is one explode + groupBy count on node_id;
-splitting is a scalar Arrow UDF per way; dedup is a groupBy on the
-fingerprint — three shuffles, all on well-distributed keys.
+splitting is one whole-stage-codegen'd JVM expression per way
+(split_way_expr); dedup is a groupBy on the fingerprint — three
+shuffles, all on well-distributed keys.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType, StringType
+from pyspark.sql.types import StringType
 
 from ..functions.geometry import canonical_node_fingerprint
-
-# ways at or above this node count take the fully distributed window
-# splitter instead of the per-way JVM split expression: OSM caps ways at
-# 2000 nodes, so in-model data always takes the expression path
-# (parallel across ways — the right scale shape for many-small-ways
-# input). The window path exists for out-of-model giants (a whole
-# national perimeter as one way) that would straggle or OOM a single
-# task. With the r8 JVM expression the single-task crossover moved up:
-# the sf1.0 strip perimeter (3M nodes) splits 2.3 s faster through the
-# expression than through the single-partition-key window path, so the
-# threshold sits at 4M — one task holding ~64 MB of node ids, still
-# comfortably inside an executor; beyond that the window path's
-# distributed reassembly wins by not materializing the nested result.
-SPLIT_DISTRIBUTED_MIN = 4_000_000
-
-
-@pandas_udf(ArrayType(ArrayType(LongType())))
-def split_way_udf(node_ids: pd.Series, corner_pos: pd.Series) -> pd.Series:
-    """G13: split a way's node list at corner positions. Closed ways
-    wrap around: the piece after the last corner merges with the piece
-    before the first (translation.py:72-79)."""
-
-    def one(nodes, corners) -> list[list[int]]:
-        nodes = list(nodes)
-        if not nodes:
-            return []
-        closed = len(nodes) > 1 and nodes[0] == nodes[-1]
-        core = nodes[:-1] if closed else nodes
-        corner_list = [] if corners is None else list(corners)
-        idxs = sorted(int(i) for i in corner_list if i < len(core))
-        if not idxs:
-            return [nodes]
-        if closed:
-            segs = []
-            k = len(idxs)
-            for j in range(k):
-                a, b = idxs[j], idxs[(j + 1) % k]
-                if j < k - 1:
-                    segs.append(core[a : b + 1])
-                else:  # wraparound merge
-                    segs.append(core[a:] + core[: b + 1])
-            return segs
-        segs = []
-        prev = 0
-        for i in idxs:
-            if i > prev:
-                segs.append(core[prev : i + 1])
-            prev = i
-        if prev < len(core) - 1:
-            segs.append(core[prev:])
-        return segs
-
-    return pd.Series([one(n, c) for n, c in zip(node_ids, corner_pos)])
 
 
 @pandas_udf(StringType())
@@ -89,11 +37,15 @@ def fingerprint_udf(node_ids: pd.Series) -> pd.Series:
 
 
 def split_way_expr(node_ids, corner_pos):
-    """G13 splitting as a pure JVM expression — behaviourally identical
-    to split_way_udf (differential-tested in tests/test_segmentation.py)
-    but whole-stage-codegen'd: no Arrow boundary, no per-way Python.
-    The 300k-node strip-world perimeter alone cost ~2 s in a single
-    Python task through the UDF (guide §4.1: prefer built-ins).
+    """G13: split a way's node list at corner positions. Closed ways
+    wrap around: the piece after the last corner merges with the piece
+    before the first (translation.py:72-79).
+
+    A pure JVM expression, whole-stage-codegen'd: no Arrow boundary, no
+    per-way Python (differential-tested against a plain-Python oracle in
+    tests/test_segmentation.py). It serves every way, including the
+    300k-node strip-world perimeter (3M at sf1.0), which alone cost ~2 s
+    in one Python task when split per way in Python.
 
     Every derived array (core, corner indexes, cut points) is bound to a
     lambda variable via the transform-over-singleton idiom; referencing
@@ -112,7 +64,7 @@ def split_way_expr(node_ids, corner_pos):
         def with_idxs(ix):
             k = F.size(ix)
             # open way: segments between consecutive cut points
-            # [0] + idxs + [nc-1] (deduped) — matches the UDF's
+            # [0] + idxs + [nc-1] (deduped) — matches the oracle's
             # prev/emit loop including corners at 0 or nc-1
             cuts = F.array_distinct(
                 F.concat(F.array(F.lit(0)), ix, F.array((nc - 1).cast("int")))
@@ -186,83 +138,6 @@ def lint_metrics():
     ]
 
 
-def split_ways_distributed(ways: DataFrame, corners: DataFrame) -> DataFrame:
-    """G13 splitting for ARBITRARILY long ways, fully distributed — no
-    per-way nested-array materialization, no single-task straggler:
-
-      posexplode → corner flag (join on node_id) → per-way window
-      cumsum of corner flags → segment id arithmetic (corners duplicate
-      into the adjacent segment; closed ways wrap the head rows after
-      the tail with ord = pos + core_n) → groupBy (way, seg) reassembly.
-
-    Byte-identical to split_way_udf (differential-tested, see
-    tests/test_segmentation.py). → (way_id, admin_level, seg_nodes)."""
-    n = F.size("node_ids")
-    is_closed = (n > 1) & (F.element_at("node_ids", 1) == F.element_at("node_ids", -1))
-    base = ways.select(
-        "way_id",
-        "admin_level",
-        n.alias("n"),
-        is_closed.alias("closed"),
-        F.posexplode("node_ids").alias("pos", "node_id"),
-    )
-    # closed ways operate on the open core (closing duplicate dropped)
-    base = base.filter(~F.col("closed") | (F.col("pos") < F.col("n") - 1))
-    base = base.withColumn(
-        "core_n", F.when(F.col("closed"), F.col("n") - 1).otherwise(F.col("n"))
-    )
-    flagged = base.join(
-        corners.select("node_id", F.lit(True).alias("is_corner")), "node_id", "left"
-    ).withColumn("ic", F.coalesce("is_corner", F.lit(False)).cast("int"))
-    w_run = Window.partitionBy("way_id").orderBy("pos")
-    w_all = Window.partitionBy("way_id")
-    flagged = flagged.withColumn("c_le", F.sum("ic").over(w_run))
-    flagged = flagged.withColumn("k", F.max("c_le").over(w_all))
-
-    closed_c, open_c = F.col("closed"), ~F.col("closed")
-    k, c_le, ic, pos, core_n = (F.col(c) for c in ("k", "c_le", "ic", "pos", "core_n"))
-
-    # closed way with NO corners stays whole (incl. its closing node):
-    # pass the original rows through untouched
-    whole_closed = ways.join(
-        flagged.filter(closed_c & (k == 0)).select("way_id").distinct(), "way_id", "leftsemi"
-    ).select("way_id", "admin_level", F.col("node_ids").alias("seg_nodes"))
-
-    splittable = flagged.filter(open_c | (k > 0))
-    # main emission: the segment each row's position belongs to
-    main_seg = F.when(open_c, c_le - ic).otherwise(
-        F.when(c_le == 0, k - 1).otherwise(c_le - 1)
-    )
-    main_ord = F.when(closed_c & (c_le == 0), pos + core_n).otherwise(pos)
-    main = splittable.select(
-        "way_id", "admin_level", main_seg.alias("seg"), main_ord.alias("ord"), "node_id"
-    )
-    # corner rows also END the adjacent segment
-    dup_rows = splittable.filter(ic == 1)
-    dup_open = dup_rows.filter(open_c & (pos < F.col("n") - 1)).select(
-        "way_id", "admin_level", (c_le - ic + 1).alias("seg"), pos.alias("ord"), "node_id"
-    )
-    dup_closed = dup_rows.filter(closed_c).select(
-        "way_id",
-        "admin_level",
-        F.when(c_le == 1, k - 1).otherwise(c_le - 2).alias("seg"),
-        F.when(c_le == 1, pos + core_n).otherwise(pos).alias("ord"),
-        "node_id",
-    )
-    assembled = (
-        main.unionByName(dup_open)
-        .unionByName(dup_closed)
-        .groupBy("way_id", "admin_level", "seg")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("ord", "node_id"))), lambda s: s["node_id"]
-            ).alias("seg_nodes")
-        )
-    )
-    out = assembled.filter(F.size("seg_nodes") >= 2).select("way_id", "admin_level", "seg_nodes")
-    return out.unionByName(whole_closed)
-
-
 def segment_ways(ways: DataFrame, lint_observation=None) -> DataFrame:
     """ways(way_id, node_ids, admin_level) → deduped segment table
     (fp, parents, n_parents, admin_level, node_ids).
@@ -273,29 +148,15 @@ def segment_ways(ways: DataFrame, lint_observation=None) -> DataFrame:
         ways = ways.observe(lint_observation, *lint_metrics())
     corners = detect_corners(ways)
 
-    small = ways.filter(F.size("node_ids") < SPLIT_DISTRIBUTED_MIN)
-    big = ways.filter(F.size("node_ids") >= SPLIT_DISTRIBUTED_MIN)
-
-    # small (in-model OSM) ways: per-way Arrow UDF, parallel across ways.
-    # Corner positions computed for the small side only — a giant way
-    # would otherwise funnel a huge collect_set through one group.
-    pos = small.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
+    # corner positions per way; ways without corners get an empty list
+    pos = ways.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
     corner_pos = (
         pos.join(corners, "node_id")  # corner set can be large at scale: shuffle equi join, AQE may still broadcast
         .groupBy("way_id")
         .agg(F.array_sort(F.collect_set("pos")).alias("corner_pos"))
     )
-    w = small.join(corner_pos, "way_id", "left").withColumn(
+    w = ways.join(corner_pos, "way_id", "left").withColumn(
         "corner_pos", F.coalesce("corner_pos", F.array().cast("array<int>"))
-    )
-    # JVM expression split (split_way_expr ≡ split_way_udf, differential-
-    # tested): removes the Arrow boundary from the hottest segmentation
-    # stage — the pandas UDF cost ~4 s of the 5.7 s segment_tiles wall
-    # at sf0.1, ~2 s of it the 300k-node perimeter in one Python task.
-    segs_small = w.select(
-        "way_id",
-        "admin_level",
-        F.explode(split_way_expr(F.col("node_ids"), F.col("corner_pos"))).alias("seg_nodes"),
     )
     # persist the split segments: the open/ring fingerprint branches
     # below are FILTERS of this table re-joined by union, so without the
@@ -304,7 +165,11 @@ def segment_ways(ways: DataFrame, lint_observation=None) -> DataFrame:
     # The persisted rows are skinny (way_id, admin_level, node-id list);
     # a long-lived deployment would materialize this segment table
     # anyway.
-    segs = segs_small.unionByName(split_ways_distributed(big, corners)).persist()
+    segs = w.select(
+        "way_id",
+        "admin_level",
+        F.explode(split_way_expr(F.col("node_ids"), F.col("corner_pos"))).alias("seg_nodes"),
+    ).persist()
     # canonical fingerprint: OPEN segments (the overwhelming majority —
     # rings survive splitting only when a closed way has no corners)
     # stay JVM-side (integer-array lexicographic least of the two

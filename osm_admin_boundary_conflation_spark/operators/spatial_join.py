@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame
 from ..functions.udfs import (
     cell_expr,
     cover_wkt_full_udf,
-    cover_wkt_udf,
     extract_geo_udf,
     extract_text_udf,
     point_in_wkt_udf,
@@ -61,11 +60,6 @@ def extract_pages_geo(pages: DataFrame, res: int, observe: bool = False) -> Data
             F.count("lat").alias("rows_with_geo"),
         )
     return d
-
-
-def boundary_cells(boundaries: DataFrame, res: int) -> DataFrame:
-    """boundaries(level9_id, wkt) → one row per (boundary, covering cell)."""
-    return boundaries.withColumn("cell_id", F.explode(cover_wkt_udf("wkt")))
 
 
 def geotag_pages(

@@ -17,6 +17,8 @@ Structured-Streaming-native form of the tumbling-window rollup
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
@@ -81,6 +83,7 @@ def stream_window_counts_with_drops(
         .agg(F.count("*").alias("n_events"))
         .select(F.col("win.start").alias("window_start"), "n_events")
     )
+    first_batch = _next_batch_id(checkpoint_dir)
     query = (
         agg.writeStream.format("parquet")
         .option("path", output_dir)
@@ -90,21 +93,33 @@ def stream_window_counts_with_drops(
         .start()
     )
     query.awaitTermination()
-    # recentProgress retains only the last ~numRecentProgressUpdates
-    # (default 100) batches: a replay longer than that would silently
-    # undercount drops (ADVICE r07) — assert instead of undercounting.
+    # recentProgress retains only the last numRecentProgressUpdates - 1
+    # (default 100) batches: a longer replay would silently undercount
+    # drops — assert instead of undercounting. The buffer never grows
+    # past its cap, so its length cannot tell a run that fills it from a
+    # longer one; the oldest retained batchId can: it is this run's
+    # first batch unless one was evicted.
     progress = list(query.recentProgress)
-    retention = int(
-        spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100")
-    )
-    if len(progress) >= retention:
+    if progress and int(progress[0]["batchId"]) > first_batch:
+        retention = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100")
         raise RuntimeError(
-            f"stream_window_counts_with_drops: {len(progress)} progress updates "
-            f"reached the recentProgress retention limit ({retention}); drop "
-            "counts would be incomplete — raise the limit or use a listener"
+            f"stream_window_counts_with_drops: progress for batches "
+            f"{first_batch}..{int(progress[0]['batchId']) - 1} was evicted by the "
+            f"recentProgress retention limit ({retention}); drop counts would be "
+            "incomplete — raise the limit or use a listener"
         )
     dropped = 0
     for prog in progress:
         for op in prog.get("stateOperators") or []:
             dropped += int(op.get("numRowsDroppedByWatermark") or 0)
     return dropped
+
+
+def _next_batch_id(checkpoint_dir: str) -> int:
+    """Id of the first micro-batch a query on this checkpoint runs: one
+    past the last committed batch, 0 on a fresh checkpoint."""
+    commits = os.path.join(checkpoint_dir, "commits")
+    if not os.path.isdir(commits):
+        return 0
+    done = [int(f) for f in os.listdir(commits) if f.isdigit()]
+    return max(done) + 1 if done else 0

@@ -49,13 +49,13 @@ def test_cover_polygon_filters_corners():
 def test_cover_polygon_adaptive_coarsens():
     # a huge polygon must coarsen resolution to fit MAX_COVER_CELLS
     big = np.array([[0.0, 0.0], [30.0, 0.0], [30.0, 20.0], [0.0, 20.0], [0.0, 0.0]])
-    cover = C.cover_polygon_adaptive([[big]], base_res=6, max_cells=256)
+    cover = [c for c, _ in C.cover_polygon_adaptive_full([[big]], base_res=6, max_cells=256)]
     assert 0 < len(cover) <= 256
     res = int(cover[0].split(":")[0][1:])
     assert res < 6
     # a small polygon keeps base resolution
     small = np.array([[20.0, 44.0], [20.1, 44.0], [20.1, 44.1], [20.0, 44.1], [20.0, 44.0]])
-    cover_s = C.cover_polygon_adaptive([[small]], base_res=6, max_cells=256)
+    cover_s = [c for c, _ in C.cover_polygon_adaptive_full([[small]], base_res=6, max_cells=256)]
     assert cover_s[0].startswith("r6:")
 
 

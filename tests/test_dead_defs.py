@@ -1,0 +1,81 @@
+"""Dead-definition guard: every top-level package ``def``/``class`` must
+be referenced somewhere in the repo (package, tests, tools, scripts).
+
+Pure ``ast`` pass over the source tree — no Spark, no imports of the
+package. A definition counts as referenced when its name appears
+anywhere as an ``ast.Name``, an ``ast.Attribute`` attribute, an import
+alias, or an identifier-shaped string constant (``__all__``, registry
+keys, ``getattr`` names). Definitions carrying a decorator other than
+``pandas_udf`` are registered through that decorator (``@q`` queries,
+``@given`` tests, ...) and are out of scope.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "osm_admin_boundary_conflation_spark"
+_SKIP_DIRS = {"__pycache__", "spark-warehouse", "metastore_db"}
+
+
+def _py_files(root: str):
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = sorted(
+            d for d in dirnames if not d.startswith(".") and d not in _SKIP_DIRS
+        )
+        for f in sorted(filenames):
+            if f.endswith(".py"):
+                yield os.path.join(dirpath, f)
+
+
+def _decorator_name(d: ast.expr) -> str:
+    if isinstance(d, ast.Call):
+        d = d.func
+    if isinstance(d, ast.Attribute):
+        return d.attr
+    if isinstance(d, ast.Name):
+        return d.id
+    return ""
+
+
+def _references(tree: ast.AST) -> set[str]:
+    refs: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            refs.add(node.attr)
+        elif isinstance(node, ast.alias):
+            refs.update(node.name.split("."))
+            if node.asname:
+                refs.add(node.asname)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node.value.isidentifier():
+                refs.add(node.value)
+    return refs
+
+
+def find_dead_defs(root: str = ROOT) -> list[str]:
+    refs: set[str] = set()
+    candidates: list[tuple[str, str]] = []
+    pkg_dir = os.path.join(root, PACKAGE)
+    for path in _py_files(root):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        refs |= _references(tree)
+        if not path.startswith(pkg_dir + os.sep):
+            continue
+        rel = os.path.relpath(path, root)
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if all(_decorator_name(d) == "pandas_udf" for d in node.decorator_list):
+                candidates.append((rel, node.name))
+    return sorted(f"{rel}:{name}" for rel, name in candidates if name not in refs)
+
+
+def test_no_unreferenced_package_definitions():
+    dead = find_dead_defs()
+    assert dead == [], "unreferenced top-level definitions:\n  " + "\n  ".join(dead)

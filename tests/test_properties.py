@@ -64,7 +64,7 @@ def test_centroid_inside_convex(ring):
 @settings(max_examples=20, deadline=None)
 def test_cover_contains_all_vertex_cells(ring):
     mp = [[ring]]
-    cover = set(C.cover_polygon_adaptive(mp, base_res=5))
+    cover = {c for c, _ in C.cover_polygon_adaptive_full(mp, base_res=5)}
     res = int(next(iter(cover)).split(":")[0][1:])
     for lon, lat in ring[:-1]:
         (cid,) = C.encode_cells([lon], [lat], res)

@@ -6,6 +6,56 @@ from osm_admin_boundary_conflation_spark import datagen_osm
 from osm_admin_boundary_conflation_spark.operators import segmentation as SG
 
 
+def _split_way_oracle(nodes, corners) -> list[list[int]]:
+    """Plain-Python G13 splitter (splitWay, translation.py:46-82): split
+    at corner positions; closed ways merge the piece after the last
+    corner with the piece before the first (translation.py:72-79)."""
+    nodes = list(nodes)
+    if not nodes:
+        return []
+    closed = len(nodes) > 1 and nodes[0] == nodes[-1]
+    core = nodes[:-1] if closed else nodes
+    corner_list = [] if corners is None else list(corners)
+    idxs = sorted(int(i) for i in corner_list if i < len(core))
+    if not idxs:
+        return [nodes]
+    if closed:
+        segs = []
+        k = len(idxs)
+        for j in range(k):
+            a, b = idxs[j], idxs[(j + 1) % k]
+            if j < k - 1:
+                segs.append(core[a : b + 1])
+            else:  # wraparound merge
+                segs.append(core[a:] + core[: b + 1])
+        return segs
+    segs = []
+    prev = 0
+    for i in idxs:
+        if i > prev:
+            segs.append(core[prev : i + 1])
+        prev = i
+    if prev < len(core) - 1:
+        segs.append(core[prev:])
+    return segs
+
+
+def _expr_vs_oracle(spark, cases):
+    """(split_way_expr output, oracle output) per case index."""
+    rows = [(i, n, c) for i, (n, c) in enumerate(cases)]
+    df = spark.createDataFrame(
+        rows, "id long, node_ids array<long>, corner_pos array<int>"
+    )
+    got = {
+        r["id"]: [list(s) for s in r["segs"]]
+        for r in df.select(
+            "id", SG.split_way_expr(F.col("node_ids"), F.col("corner_pos")).alias("segs")
+        ).collect()
+    }
+    want = {i: _split_way_oracle(n, c) for i, (n, c) in enumerate(cases)}
+    return got, want
+
+
 def _run(spark, sf_dir):
     ways = datagen_osm.build_strip_world(spark, sf_dir)
     out = SG.segment_ways(ways)
@@ -78,81 +128,13 @@ def test_lint_observed_metrics(spark):
     assert obs2.get == {"n_ways": 3, "dup_nodes": 2, "one_node_ways": 1}
 
 
-def test_distributed_splitter_matches_udf(spark, sf_dir):
-    """split_ways_distributed must produce byte-identical segments to the
-    Arrow-UDF splitter on the same input — full strip world, forced down
-    both paths via the threshold."""
-    import osm_admin_boundary_conflation_spark.operators.segmentation as seg_mod
-
-    ways = datagen_osm.build_strip_world(spark, sf_dir)
-    old = seg_mod.SPLIT_DISTRIBUTED_MIN
-
-    def run():
-        out = SG.segment_ways(ways)
-        return sorted(
-            (r["fp"], r["parents"], r["n_parents"], r["admin_level"], tuple(r["node_ids"]))
-            for r in out.collect()
-        )
-
-    try:
-        seg_mod.SPLIT_DISTRIBUTED_MIN = 1  # everything distributed
-        a = run()
-        seg_mod.SPLIT_DISTRIBUTED_MIN = 10**9  # everything Arrow UDF
-        b = run()
-    finally:
-        seg_mod.SPLIT_DISTRIBUTED_MIN = old
-    assert a == b
-
-
-def test_distributed_splitter_randomized(spark):
-    """Randomized differential check: open/closed ways with random
-    corner sets — the window splitter equals the UDF splitter."""
-    import random
-
-    import osm_admin_boundary_conflation_spark.operators.segmentation as seg_mod
-
-    rng = random.Random(7)
-    rows = []
-    for wid in range(60):
-        m = rng.randint(2, 12)
-        nodes = [wid * 1000 + i for i in range(m)]
-        if rng.random() < 0.5 and m >= 4:
-            nodes.append(nodes[0])  # closed
-        rows.append((wid, nodes, "9"))
-    # corner nodes: a random subset of all node ids (incl. endpoints,
-    # duplicates across ways impossible by construction)
-    all_nodes = sorted({n for _, ns, _ in rows for n in ns})
-    corner_ids = [n for n in all_nodes if rng.random() < 0.35]
-    ways = spark.createDataFrame(rows, "way_id long, node_ids array<long>, admin_level string")
-    corners = spark.createDataFrame([(n,) for n in corner_ids], "node_id long")
-
-    dist = SG.split_ways_distributed(ways, corners)
-    got_a = sorted(
-        (r["way_id"], tuple(r["seg_nodes"])) for r in dist.collect()
-    )
-
-    import pyspark.sql.functions as F
-
-    pos = ways.select("way_id", F.posexplode("node_ids").alias("pos", "node_id"))
-    corner_pos = (
-        pos.join(corners, "node_id")
-        .groupBy("way_id")
-        .agg(F.array_sort(F.collect_set("pos")).alias("corner_pos"))
-    )
-    w = ways.join(corner_pos, "way_id", "left").withColumn(
-        "corner_pos", F.coalesce("corner_pos", F.array().cast("array<int>"))
-    )
-    udf_out = w.select(
-        "way_id", F.explode(SG.split_way_udf(F.col("node_ids"), F.col("corner_pos"))).alias("seg_nodes")
-    )
-    got_b = sorted((r["way_id"], tuple(r["seg_nodes"])) for r in udf_out.collect())
-    assert got_a == got_b
-
-
 def test_split_expr_matches_udf_edge_cases(spark):
-    """split_way_expr (JVM) ≡ split_way_udf (Arrow) on the full edge
+    """split_way_expr (JVM) ≡ the plain-Python oracle on the full edge
     matrix: open/closed, corners at 0 / n-1 / adjacent / none / all,
-    single-node ways, empty corner lists, corners past the core."""
+    single-node ways, empty corner lists, corners past the core, and a
+    closed ring the size of the sf0.1 strip perimeter."""
+    n_big = 300_000
+    big_ring = list(range(1, n_big)) + [1]  # n_big nodes, closed
     cases = [
         ([], []),
         ([1], []),
@@ -176,53 +158,25 @@ def test_split_expr_matches_udf_edge_cases(spark):
         ([1, 2, 3, 4, 1], [3, 1]),  # unsorted corner list
         ([5, 5], []),  # closed 2-node degenerate
         ([5, 5], [0]),
+        (big_ring, [0, n_big // 2, n_big - 2]),  # long closed ring
     ]
-    rows = [(i, n, c) for i, (n, c) in enumerate(cases)]
-    df = spark.createDataFrame(
-        rows, "id long, node_ids array<long>, corner_pos array<int>"
-    )
-    got_expr = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_expr(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    got_udf = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_udf(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    assert got_expr == got_udf
+    got, want = _expr_vs_oracle(spark, cases)
+    assert got == want
 
 
 def test_split_expr_randomized_vs_udf(spark):
     """Randomized differential: 200 random open/closed ways with random
-    corner subsets — JVM expression equals the Arrow UDF."""
+    corner subsets — JVM expression equals the plain-Python oracle."""
     import random
 
     rng = random.Random(11)
-    rows = []
+    cases = []
     for wid in range(200):
         m = rng.randint(1, 15)
         nodes = [wid * 1000 + i for i in range(m)]
         if rng.random() < 0.4 and m >= 3:
             nodes.append(nodes[0])
         corners = sorted({rng.randrange(0, m + 2) for _ in range(rng.randint(0, 6))})
-        rows.append((wid, nodes, corners))
-    df = spark.createDataFrame(
-        rows, "id long, node_ids array<long>, corner_pos array<int>"
-    )
-    a = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_expr(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    b = {
-        r["id"]: [list(s) for s in r["segs"]]
-        for r in df.select(
-            "id", SG.split_way_udf(F.col("node_ids"), F.col("corner_pos")).alias("segs")
-        ).collect()
-    }
-    assert a == b
+        cases.append((nodes, corners))
+    got, want = _expr_vs_oracle(spark, cases)
+    assert got == want

@@ -168,3 +168,64 @@ def test_stream_dedup_suppresses_across_batches(spark, tmp_path):
         .collect()
     }
     assert got == want and len(got) == 3
+
+
+def test_stream_drop_count_retention_guard(spark, tmp_path):
+    """The drop-count undercount guard fires only when a batch's progress
+    was evicted from recentProgress: a retention equal to the run's
+    batch count passes, one less raises."""
+    import os
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from osm_admin_boundary_conflation_spark.streaming.stream_windows import (
+        stream_window_counts_with_drops,
+    )
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    # one file per micro-batch; the last holds a straggler far behind
+    # the watermark. Replay order pinned via mtimes.
+    hours = [[10, 10], [12, 13], [14, 1]]
+    for i, hs in enumerate(hours):
+        ts = [datetime(2024, 1, 1, h, 5, tzinfo=timezone.utc) for h in hs]
+        t = pa.table(
+            {
+                "event_id": pa.array([10 * i + j for j in range(len(hs))], pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+                "user_id": pa.array([1] * len(hs), pa.int64()),
+                "event_type": ["view"] * len(hs),
+                "value": [1.0] * len(hs),
+                "props": ["{}"] * len(hs),
+            }
+        )
+        f = in_dir / f"part-{i}.parquet"
+        pq.write_table(t, f)
+        os.utime(f, (1_600_000_000 + 100 * i,) * 2)
+
+    def run(tag, retention):
+        ck = str(tmp_path / f"ck_{tag}")
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", str(retention))
+        spark.conf.set("spark.sql.shuffle.partitions", "1")  # one state store
+        try:
+            dropped = stream_window_counts_with_drops(
+                spark, str(in_dir), str(tmp_path / f"out_{tag}"), ck
+            )
+        finally:
+            spark.conf.unset("spark.sql.streaming.numRecentProgressUpdates")
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        return dropped, len([f for f in os.listdir(f"{ck}/commits") if f.isdigit()])
+
+    # three data batches plus the no-data batch that advances the
+    # watermark. Spark keeps numRecentProgressUpdates - 1 updates, so a
+    # limit of n_batches + 1 retains every batch and n_batches evicts one
+    n_batches = 4
+    dropped, committed = run("exact", n_batches + 1)
+    assert committed == n_batches
+    assert dropped == 1  # the hour-1 straggler's window
+    with pytest.raises(RuntimeError, match="evicted"):
+        run("short", n_batches)

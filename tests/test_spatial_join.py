@@ -144,3 +144,33 @@ def test_ann_topk_plan_is_take_ordered(spark, sf_correct):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "TakeOrderedAndProject" in plan, name
         assert "Window" not in plan, name
+
+
+def test_build_pages_spreads_large_directory_corpus(spark, tmp_path):
+    """A Spark-style documents.parquet DIRECTORY holding one >4 MiB file
+    still trips build_pages' single-split guard: the corpus size is
+    summed over the directory's files, not read off the directory
+    inode."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = tmp_path / "documents.parquet"
+    docs.mkdir()
+    rng = random.Random(4)
+    n = 1200  # 1200 x 5000 chars, written uncompressed: ~5.7 MiB
+    table = pa.table(
+        {
+            "doc_id": pa.array(range(n), pa.int64()),
+            "text": [rng.randbytes(2500).hex() for _ in range(n)],
+            "lang": ["en"] * n,
+        }
+    )
+    pq.write_table(table, docs / "part-00000.parquet", compression="none")
+    (docs / "_SUCCESS").write_bytes(b"")
+    assert (docs / "part-00000.parquet").stat().st_size > 4 * 1024 * 1024
+
+    par = spark.sparkContext.defaultParallelism
+    assert spark.read.parquet(str(docs)).rdd.getNumPartitions() < par
+    assert datagen.build_pages(spark, str(tmp_path)).rdd.getNumPartitions() == par

@@ -56,15 +56,6 @@ def test_simhash_similarity():
     assert 0 <= ha < (1 << 63)
 
 
-def test_fingerprints_deterministic():
-    s = pd.Series(["abc def ghi jkl mno pqr stu vwx", ""])
-    assert T.md5_fingerprint(s).tolist() == T.md5_fingerprint(s).tolist()
-    r1 = T.rolling_fingerprint(s)
-    r2 = T.rolling_fingerprint(s)
-    assert r1.tolist() == r2.tolist()
-    assert r1[1] == 0
-
-
 def test_jvm_minhash_signatures_bit_exact(spark):
     """The JVM-side minhash path (explode → md5/conv → long-math affine
     mins) must equal functions.text.minhash_signature bit-for-bit —
