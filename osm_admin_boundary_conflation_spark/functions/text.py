@@ -19,7 +19,6 @@ import numpy as np
 import pandas as pd
 
 _TAG_RE = re.compile(rb"<[^>]*>")
-_WS_RE = re.compile(r"\s+")
 _GEO_RE = re.compile(r"lat (-?\d+\.\d{4}) lon (-?\d+\.\d{4})")
 
 # tiny deterministic stopword lists for the n-gram language heuristic
@@ -38,8 +37,9 @@ def extract_text(html: pd.Series) -> pd.Series:
             return ""
         raw = bytes(b)
         stripped = _TAG_RE.sub(b" ", raw)
-        s = stripped.decode("utf-8", errors="replace")
-        return _WS_RE.sub(" ", s).strip()
+        # split() breaks on the str.isspace() code points, the same set
+        # re's ``\s`` matches (pinned by tests/test_text.py)
+        return " ".join(stripped.decode("utf-8", errors="replace").split())
 
     return html.map(one)
 

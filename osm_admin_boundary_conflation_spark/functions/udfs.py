@@ -36,14 +36,23 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return T.extract_text(html)
 
 
-_GEO_SCHEMA = StructType(
-    [StructField("lat", DoubleType()), StructField("lon", DoubleType())]
+_PAGE_SCHEMA = StructType(
+    [
+        StructField("text", StringType()),
+        StructField("lat", DoubleType()),
+        StructField("lon", DoubleType()),
+    ]
 )
 
 
-@pandas_udf(_GEO_SCHEMA)
-def extract_geo_udf(text: pd.Series) -> pd.DataFrame:
-    return T.extract_geo(text)
+@pandas_udf(_PAGE_SCHEMA)
+def extract_page_udf(html: pd.Series) -> pd.DataFrame:
+    """html binary → (text, lat, lon): one Python pass per page, so the
+    text the geo scan reads is the text the struct returns."""
+    text = T.extract_text(html)
+    geo = T.extract_geo(text)
+    geo.insert(0, "text", text.to_numpy())
+    return geo
 
 
 @pandas_udf(StringType())

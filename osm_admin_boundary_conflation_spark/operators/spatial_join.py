@@ -3,8 +3,8 @@
 Pipeline (SURVEY.md §3.1 recast, stages map 1:1 to the reference's
 measure_quality flow):
 
-  pages(html) ─ extract_text (Arrow UDF, G20)
-             ─ extract_geo   (Arrow UDF)
+  pages(html) ─ extract_page (one Arrow UDF, one Python pass per page:
+                              extract_text (G20) → extract_geo)
              ─ cell encode   (built-in expr, G21 — JVM-side, codegen)
   boundaries ─ cover cells   (Arrow UDF over WKT, one call per boundary)
              ─ explode(cells)
@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame
 from ..functions.udfs import (
     cell_expr,
     cover_wkt_full_udf,
-    extract_geo_udf,
-    extract_text_udf,
+    extract_page_udf,
     point_in_wkt_udf,
 )
 
@@ -49,9 +48,8 @@ def extract_pages_geo(pages: DataFrame, res: int, observe: bool = False) -> Data
     analogue of the reference's running diagnostic counters,
     translation.py:247): rows scanned + rows with extractable geo,
     retrievable via df.observation / QueryExecutionListener."""
-    d = pages.withColumn("text", extract_text_udf("html"))
-    d = d.withColumn("_geo", extract_geo_udf("text"))
-    d = d.withColumn("lat", F.col("_geo.lat")).withColumn("lon", F.col("_geo.lon")).drop("_geo")
+    d = pages.withColumn("_page", extract_page_udf("html"))
+    d = d.withColumns({c: F.col(f"_page.{c}") for c in ("text", "lat", "lon")}).drop("_page")
     d = d.withColumn("cell_id", cell_expr(F.col("lon"), F.col("lat"), res))
     if observe:
         d = d.observe(
@@ -107,7 +105,15 @@ def geotag_points(
     """The join+confirm+verdict tail of geotag_pages over already-
     extracted points pg(url, lat, lon, cell_id) — exposed so skew
     benchmarks and pre-extracted corpora can drive the join directly
-    without paying the html-extract stage."""
+    without paying the html-extract stage.
+
+    Precondition: ``url`` is unique in ``pg``. The verdict aggregate
+    groups on url alone and carries lat/lon/cell_id as min(), so two
+    distinct points sharing a url are NOT kept apart: they merge into
+    one row whose coordinates are the per-column minima of both (a
+    point neither input had) and whose matches are the union of both
+    points' boundaries. Nothing checks this; deduplicate or re-key the
+    input before calling."""
     # persist the covering BEFORE the explode: the covering UDF (the only
     # non-trivial boundary-side work) runs once, and the resolution-level
     # distinct below scans one row per BOUNDARY, not per covering cell

@@ -1,0 +1,25 @@
+"""tools/plan_audit.summarize on literal executed-plan strings (no Spark)."""
+
+from tools.plan_audit import summarize
+
+# extract_text chained into extract_geo AND returned on its own: the
+# worker evaluates each output chain separately, so extract_text runs
+# twice per page
+_CHAINED = (
+    "+- ArrowEvalPython [extract_geo_udf(extract_text_udf(html#2)#5)#8, "
+    "extract_text_udf(html#2)#5], [pythonUDF0#9, pythonUDF1#10], 200"
+)
+_FUSED = "+- ArrowEvalPython [extract_page_udf(html#2)#5], [pythonUDF0#9], 200"
+# two different UDFs sharing a built-in argument expression
+_SHARED_BUILTIN = (
+    "+- ArrowEvalPython [point_in_wkt_udf(cast(lon#1 as double), lat#2, wkt#3)#7, "
+    "cover_wkt_full_udf(cast(lon#1 as double))#8], [pythonUDF0#9, pythonUDF1#10], 200"
+)
+
+
+def test_dup_udf_counts_double_evaluated_chain():
+    assert summarize(_CHAINED)["dup_udf"] == 1
+    assert summarize(_FUSED)["dup_udf"] == 0
+    assert summarize(_SHARED_BUILTIN)["dup_udf"] == 0
+    assert summarize("\n".join([_CHAINED, _FUSED, _CHAINED]))["dup_udf"] == 2
+    assert summarize(_CHAINED)["arrow"] == 1

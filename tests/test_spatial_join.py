@@ -75,6 +75,19 @@ def test_extracted_text_byte_identical_across_runs(spark, sf_dir):
     assert ra == rb
 
 
+def test_extract_pages_geo_is_one_python_pass(spark, sf_dir):
+    """html→text→geo is one ArrowEvalPython node holding one UDF, so
+    extract_text runs once per page, not once per output column."""
+    import re
+
+    d = SJ.extract_pages_geo(datagen.build_pages(spark, sf_dir), res=6)
+    plan = d._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"ArrowEvalPython \[(.*?)\], \[(.*?)\]", plan)
+    assert len(nodes) == 1, plan
+    udfs, outputs = nodes[0]
+    assert udfs.startswith("extract_page_udf(") and "," not in outputs, nodes
+
+
 def test_observed_metrics(spark, sf_dir):
     """A9: named observation counters on the extraction stage."""
     import pyspark.sql.functions as F

@@ -1,3 +1,6 @@
+import random
+import re
+
 import pandas as pd
 
 from osm_admin_boundary_conflation_spark.functions import text as T
@@ -9,6 +12,66 @@ def test_extract_text_byte_identical():
     out2 = T.extract_text(html.copy())
     assert out1.tolist() == ["Hello World !", "", "plain"]
     assert [s.encode() for s in out1] == [s.encode() for s in out2]
+
+
+def _extract_text_regex_oracle(b) -> str:
+    """The earlier extract_text body: tag strip, decode, then the
+    ``\\s+`` regex collapse. Kept as the byte-identity reference."""
+    if b is None:
+        return ""
+    s = re.sub(rb"<[^>]*>", b" ", bytes(b)).decode("utf-8", errors="replace")
+    return re.sub(r"\s+", " ", s).strip()
+
+
+_ALL_SPACES = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+
+
+def _assert_matches_oracle(cases):
+    got = T.extract_text(pd.Series(cases, dtype=object)).tolist()
+    want = [_extract_text_regex_oracle(b) for b in cases]
+    bad = [(c, g, w) for c, g, w in zip(cases, got, want) if g.encode() != w.encode()]
+    assert not bad, bad[:5]
+
+
+def test_extract_text_matches_regex_oracle_edge_cases():
+    named = "\x1c\x1d\x1e\x1f\x85\xa0\u1680\u2028\u2029\u202f\u205f\u3000"
+    named += "".join(chr(c) for c in range(0x2000, 0x200B))
+    assert set(named) <= set(_ALL_SPACES)
+    # the precondition of the split/join form: both whitespace classes
+    # are the same set of code points
+    assert re.findall(r"\s", "".join(map(chr, range(0x110000)))) == _ALL_SPACES
+    cases = [None, b"", b" ", b" \t\r\n\x0b\x0c ", "\xa0\u3000\u2028".encode()]
+    for ws in _ALL_SPACES:
+        e = ws.encode()
+        cases += [e, b"a" + e + b"b", e + b"a" + e + e + b"b" + e, b"<i>" + e + b"</i>" + e]
+    cases.append("".join(_ALL_SPACES).encode())
+    cases += [
+        b"a\xffb",  # lone invalid byte
+        b"\xff",
+        b"x \xe2\x80",  # U+2028 cut after two of its three bytes
+        b"\xc2 y",  # U+00A0 cut after its lead byte
+        b"a\xe3\x80<b>\x80 c",  # a tag splits a U+3000 sequence
+        b"a < b",  # unterminated tag runs to the end
+        b"<b>x</b",
+        b"text <p",
+        b"<p\n>  text \t</p>",
+        b"a<br>\n<br>b",
+        b"<  >  <\t>",
+    ]
+    _assert_matches_oracle(cases)
+
+
+def test_extract_text_matches_regex_oracle_random_sweep():
+    rng = random.Random(20260517)
+    pieces = [b"<", b">", b"<b>", b"</p>", b"a", b"Z", b"lat", b"\xff", b"\xe2\x80"]
+    pieces += [ws.encode() for ws in _ALL_SPACES]
+    cases = []
+    for _ in range(20_000):
+        if rng.random() < 0.25:
+            cases.append(bytes(rng.randrange(256) for _ in range(rng.randrange(12))))
+        else:
+            cases.append(b"".join(rng.choice(pieces) for _ in range(rng.randrange(16))))
+    _assert_matches_oracle(cases)
 
 
 def test_extract_geo():

@@ -167,6 +167,33 @@ INLINE_WORLD = {
 }
 
 
+def _udf_names(udf_list: str) -> list[str]:
+    """Names of the Python UDF calls in an ArrowEvalPython UDF list,
+    nested calls included. A UDF call prints as ``name(args)#id``;
+    built-in expressions in its arguments carry no ``#id`` after their
+    closing paren and are skipped."""
+    names = []
+    for m in re.finditer(r"(\w+)\(", udf_list):
+        depth, i = 1, m.end()
+        while depth and i < len(udf_list):
+            depth += {"(": 1, ")": -1}.get(udf_list[i], 0)
+            i += 1
+        if re.match(r"#\d+", udf_list[i:]):
+            names.append(m.group(1))
+    return names
+
+
+def count_dup_udf(plan: str) -> int:
+    """ArrowEvalPython nodes whose UDF list names one function twice:
+    ``[g(x), f(g(x))]`` runs g once per output chain, so g is evaluated
+    twice per row."""
+    dup = 0
+    for m in re.finditer(r"ArrowEvalPython \[(.*?)\], \[", plan):
+        names = _udf_names(m.group(1))
+        dup += len(names) != len(set(names))
+    return dup
+
+
 def summarize(plan: str) -> dict[str, int]:
     # an Exchange SinglePartition whose child is a keys=[] partial
     # aggregate is the canonical global scalar aggregate: ONE row per
@@ -200,6 +227,7 @@ def summarize(plan: str) -> dict[str, int]:
         "python_row": plan.count("BatchEvalPython"),
         "nested_loop": plan.count("BroadcastNestedLoopJoin") + plan.count("CartesianProduct"),
         "single_part": sp_total - sp_benign,
+        "dup_udf": count_dup_udf(plan),
     }
 
 
@@ -234,6 +262,7 @@ def main() -> None:
         r
         for r in rows
         if r.get("python_row")
+        or r.get("dup_udf")
         or (r.get("nested_loop") and r["name"] not in NESTED_LOOP_SCALAR_OK)
         # skew_diagnosis and rrf_fusion left this exemption list in r7:
         # their global ranks now run as two-phase bucket ranks
@@ -293,7 +322,8 @@ def main() -> None:
         )
     out += [
         "",
-        f"**Red-flag queries (row-python / nested-loop / unexpected 1-partition): "
+        f"**Red-flag queries (row-python / double-evaluated UDF / nested-loop / "
+        f"unexpected 1-partition): "
         f"{[r['name'] for r in flagged] or 'none'}**",
         "",
     ]
