@@ -12,11 +12,14 @@ keys). The Spark-native equivalents:
 - *resume* = if the stage table exists and is complete, read it instead
   of recomputing (whole-stage memoization), plus `resume_anti_join` for
   row-level resume: work_list LEFT ANTI JOIN checkpoint ON key;
-- a *metrics table* appended per stage with per-partition lineage rows
-  (run_id, stage, partition_id, rows_out, wall hint) — FIXTURES.md F5.
+- a *metrics ledger* with per-partition lineage rows (run_id, stage,
+  partition_id, rows_out, wall hint) — FIXTURES.md F5. Each recomputed
+  stage adds one parquet file to `_metrics/`, written to a dot-prefixed
+  temp name and renamed into place (atomic_write's tmp+rename).
 
-No driver-side loops: metrics are computed with one
-`spark_partition_id()` groupBy on the stage output.
+No Spark job for the metrics: the rows are read from the committed
+part-file footers. `part-NNNNN-*` is written by write task NNNNN, so
+partition_id is the stage's real output layout.
 """
 
 from __future__ import annotations
@@ -24,10 +27,26 @@ from __future__ import annotations
 import os
 import time
 
-import pyspark.sql.functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 SUCCESS_MARK = "_SUCCESS"
+
+LEDGER_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("partition_id", pa.int32()),
+        ("rows_out", pa.int64()),
+        ("stage_wall_ms", pa.int64()),
+    ]
+)
+
+
+def _visible(d: str) -> list[str]:
+    """Data files Spark reads in `d`: hidden (`.`/`_`) names skipped."""
+    return sorted(f for f in os.listdir(d) if not f.startswith((".", "_")))
 
 
 class StageRunner:
@@ -40,17 +59,11 @@ class StageRunner:
     no _SUCCESS marker and are recomputed).
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        checkpoint_dir: str,
-        run_id: str = "run",
-        metrics_fmt: str = "parquet",
-    ):
+    def __init__(self, spark: SparkSession, checkpoint_dir: str, run_id: str = "run"):
         self.spark = spark
         self.dir = checkpoint_dir
         self.run_id = run_id
-        self.metrics_fmt = metrics_fmt  # 'parquet' | 'snapshot' (versioned)
+        self.ledger = os.path.join(checkpoint_dir, "_metrics")
         self.recomputed: list[str] = []
         self.resumed: list[str] = []
 
@@ -60,58 +73,43 @@ class StageRunner:
     def is_done(self, stage: str) -> bool:
         return os.path.exists(os.path.join(self._path(stage), SUCCESS_MARK))
 
-    def stage(self, name: str, build, partition_by: list[str] | None = None) -> DataFrame:
+    def stage(self, name: str, build) -> DataFrame:
         path = self._path(name)
         if self.is_done(name):
             self.resumed.append(name)
             return self.spark.read.parquet(path)
         t0 = time.time()
-        df = build()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        build().write.mode("overwrite").parquet(path)
         self.recomputed.append(name)
-        out = self.spark.read.parquet(path)
-        self._log_metrics(name, out, wall_s=time.time() - t0)
-        return out
+        self._log_metrics(name, path, wall_s=time.time() - t0)
+        return self.spark.read.parquet(path)
 
-    def _log_metrics(self, stage: str, out: DataFrame, wall_s: float) -> None:
-        metrics = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows_out"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows_out",
-                F.lit(round(wall_s * 1000)).cast("long").alias("stage_wall_ms"),
-            )
+    def _log_metrics(self, stage: str, path: str, wall_s: float) -> None:
+        rows: dict[int, int] = {}
+        for f in _visible(path):  # part-NNNNN-<uuid>-cMMM...: NNNNN = task partition
+            pid = int(f.split("-")[1])
+            rows[pid] = rows.get(pid, 0) + pq.read_metadata(os.path.join(path, f)).num_rows
+        n = len(rows)
+        wall_ms = round(wall_s * 1000)
+        table = pa.table(
+            [[self.run_id] * n, [stage] * n, list(rows), list(rows.values()), [wall_ms] * n],
+            schema=LEDGER_SCHEMA,
         )
-        if self.metrics_fmt == "snapshot":
-            # versioned lineage: one append COMMIT per stage, so the
-            # metrics table's history is itself the run ledger (the
-            # north rule's metrics-to-Iceberg contract; snapshot layer
-            # is the sandbox stand-in, swap confined to sources/io.py)
-            from ..sources import snapshot_table as ST
-
-            ST.write_append_snapshot(metrics, os.path.join(self.dir, "_metrics"))
-        else:
-            metrics.write.mode("append").parquet(os.path.join(self.dir, "_metrics"))
+        os.makedirs(self.ledger, exist_ok=True)
+        final = f"{len(_visible(self.ledger)):05d}-{stage}.parquet"
+        tmp = os.path.join(self.ledger, f".{final}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.ledger, final))
 
     def metrics(self) -> DataFrame:
-        if self.metrics_fmt == "snapshot":
-            from ..sources import snapshot_table as ST
-
-            return ST.read_snapshot(self.spark, os.path.join(self.dir, "_metrics"))
-        return self.spark.read.parquet(os.path.join(self.dir, "_metrics"))
+        return self.spark.read.parquet(self.ledger)
 
     def metrics_history(self) -> list[dict]:
-        """The versioned run ledger (snapshot metrics only): one append
-        commit per recomputed stage, in commit order."""
-        from ..sources import snapshot_table as ST
-
-        return ST.snapshot_history(os.path.join(self.dir, "_metrics"))
+        """The run ledger: one entry per recomputed stage, in commit order."""
+        return [
+            {"file": f, "rows": pq.read_table(os.path.join(self.ledger, f)).to_pylist()}
+            for f in _visible(self.ledger)
+        ]
 
 
 def resume_anti_join(work: DataFrame, checkpoint: DataFrame, keys: list[str]) -> DataFrame:

@@ -134,12 +134,14 @@ def render_report(
 def write_report(verdicts: DataFrame, path: str, max_grid_rows: int = 10000) -> dict:
     """Aggregate in Spark, render driver-side, write the artifact.
     Returns the stats dict (for tests / logs)."""
-    counts = {
-        r["verdict"]: r["n"]
-        for r in verdicts.groupBy("verdict").agg(F.count("*").alias("n")).collect()
-    }
+    per_verdict = (
+        verdicts.groupBy("verdict")
+        .agg(F.count("*").alias("n"), F.count("osm_way_id").alias("with_osm"))
+        .collect()
+    )
+    counts = {r["verdict"]: r["n"] for r in per_verdict}
     total_ways = sum(counts.values())
-    ways_with_osm = verdicts.filter(F.col("osm_way_id").isNotNull()).count()
+    ways_with_osm = sum(r["with_osm"] for r in per_verdict)
     count_per_error = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
     grid = [
         r.asDict()

@@ -2,6 +2,8 @@
 
 import re
 
+import pyspark.sql.functions as F
+
 from osm_admin_boundary_conflation_spark import datagen_osm
 from osm_admin_boundary_conflation_spark.operators import conflation as CF
 from osm_admin_boundary_conflation_spark.report import write_report
@@ -19,6 +21,10 @@ def test_report_artifact_counts_and_links(spark, sf_dir, tmp_path):
     path = str(tmp_path / "report.html")
     stats = write_report(verdicts, path, max_grid_rows=500)
     html = open(path, encoding="utf-8").read()
+
+    # the one per-verdict aggregate agrees with independent counts
+    assert stats["total_ways"] == verdicts.count()
+    assert stats["ways_with_osm"] == verdicts.filter(F.col("osm_way_id").isNotNull()).count()
 
     # stats embedded verbatim
     assert f"<strong>Total ways</strong> &mdash; {stats['total_ways']}" in html
