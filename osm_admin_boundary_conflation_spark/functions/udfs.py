@@ -207,27 +207,6 @@ def cover_wkt_full_udf(wkt: pd.Series) -> pd.Series:
     )
 
 
-_ENDPOINT_SCHEMA = StructType(
-    [
-        StructField("endpoint_dist_m", DoubleType()),
-        StructField("should_reverse", BooleanType()),
-    ]
-)
-
-
-@pandas_udf(_ENDPOINT_SCHEMA)
-def endpoint_match_udf(src: pd.Series, osm: pd.Series) -> pd.DataFrame:
-    """G7 (conflate.py:278-294) per coords-array pair."""
-    d = np.zeros(len(src))
-    r = np.zeros(len(src), dtype=bool)
-    for i, (a, b) in enumerate(zip(src, osm)):
-        if a is None or b is None or len(a) < 2 or len(b) < 2:
-            d[i], r[i] = np.inf, False
-            continue
-        d[i], r[i] = G.endpoint_match(np.asarray(list(a)), np.asarray(list(b)))
-    return pd.DataFrame({"endpoint_dist_m": d, "should_reverse": r})
-
-
 @pandas_udf(DoubleType())
 def hausdorff_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     out = np.zeros(len(a))

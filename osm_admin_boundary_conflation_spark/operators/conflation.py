@@ -200,7 +200,11 @@ def conflate(
     unglue_ways_as_needed: bool = False,
 ) -> DataFrame:
     """→ (way_id, n_rels, verdict, osm_way_id, error_context,
-        endpoint_dist_m, hausdorff_m, n_unglued).
+        endpoint_dist_m, hausdorff_m, n_unglued, should_reverse).
+
+    ``should_reverse`` is the battery's G7 orientation decision
+    (conflate.py:272-273), which edit_plan applies to the source coords;
+    NULL on unmatched rows.
 
     ``unglue_ways_as_needed`` mirrors the config.yml flag gating
     unglue_ways (conflate.py:150-186, invoked at :221-238): a sharing
@@ -525,6 +529,7 @@ def conflate(
         F.when(reached_share_scan, F.coalesce("n_unglued", F.lit(0)))
         .otherwise(F.lit(0))
         .alias("n_unglued"),
+        g["should_reverse"].alias("should_reverse"),
     )
 
     # unmatched branches (0 or >1 candidates, >=3 relations)
@@ -549,5 +554,6 @@ def conflate(
         F.lit(None).cast("double").alias("endpoint_dist_m"),
         F.lit(None).cast("double").alias("hausdorff_m"),
         F.lit(0).cast("long").alias("n_unglued"),
+        F.lit(None).cast("boolean").alias("should_reverse"),
     )
     return scored.unionByName(unmatched_out)

@@ -10,7 +10,9 @@ write-back sink is a table of edits, not a remote API).
 
 Positional alignment is the reference's zip (J10): posexplode both
 sides, full-outer join on position. Reversal (conflate.py:272-273) is
-applied to the source coords first.
+applied to the source coords first; the decision is the verdict
+battery's G7 ``should_reverse`` column, read from the verdicts, not
+recomputed here.
 
 Edit counts per way follow from the reference's loop bounds:
   n_updates = min(n_osm, n_src) - 1 + 1(last-node fix)
@@ -23,26 +25,17 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.udfs import endpoint_match_udf
-
 
 def edit_plan(
     verdicts: DataFrame, src_ways: DataFrame, osm_ways: DataFrame
 ) -> DataFrame:
-    """→ one row per intended edit:
-    (way_id, osm_way_id, op, node_id, pos, lon, lat)."""
-    todo = verdicts.filter(F.col("verdict") == "CHECKED_POSSIBLE").select("way_id", "osm_way_id")
-    s = src_ways.select("way_id", F.col("coords").alias("src_coords"))
-    # one join fetches BOTH osm columns (node ids for the positional zip,
-    # coords for the reversal decision): the previous second join re-read
-    # the whole osm_ways coords payload from parquet a second time —
-    # ~0.6 s of the edit_plan wall at sf0.1 (guide §6: the array columns
-    # dominate the scan).
-    o = osm_ways.select(
-        "osm_way_id",
-        F.col("node_ids").alias("osm_nodes"),
-        F.col("coords").alias("osm_coords"),
+    """verdicts(way_id, osm_way_id, verdict, should_reverse) → one row
+    per intended edit: (way_id, osm_way_id, op, node_id, pos, lon, lat)."""
+    todo = verdicts.filter(F.col("verdict") == "CHECKED_POSSIBLE").select(
+        "way_id", "osm_way_id", "should_reverse"
     )
+    s = src_ways.select("way_id", F.col("coords").alias("src_coords"))
+    o = osm_ways.select("osm_way_id", F.col("node_ids").alias("osm_nodes"))
     # broadcast the TODO side explicitly: size estimates made the planner
     # broadcast the array-payload way tables instead (BuildRight on every
     # join in plans/r08/edit_plan_summary_before.txt), serializing every
@@ -51,13 +44,10 @@ def edit_plan(
     # wrong after filters — hint the side you know is small).
     d = F.broadcast(todo).join(s, "way_id")
     d = F.broadcast(d).join(o, "osm_way_id")
-
-    # reversal decision exactly as the reference takes it (G7)
-    d = d.withColumn("_em", endpoint_match_udf(F.col("src_coords"), F.col("osm_coords")))
     d = d.withColumn(
         "src_aligned",
-        F.when(F.col("_em.should_reverse"), F.reverse("src_coords")).otherwise(F.col("src_coords")),
-    ).drop("_em", "osm_coords")
+        F.when(F.col("should_reverse"), F.reverse("src_coords")).otherwise(F.col("src_coords")),
+    )
 
     d = d.withColumn("n_src", F.size("src_aligned")).withColumn("n_osm", F.size("osm_nodes"))
     d = d.withColumn("src_last", F.element_at("src_aligned", -1))

@@ -15,25 +15,16 @@ shared-border way segments:
       (translation.py:295-324)
 
 Scale: corner detection is one explode + groupBy count on node_id;
-splitting is one whole-stage-codegen'd JVM expression per way
-(split_way_expr); dedup is a groupBy on the fingerprint — three
-shuffles, all on well-distributed keys.
+splitting (split_way_expr) and fingerprinting (fingerprint_expr, open
+segments and rings alike) are whole-stage-codegen'd JVM expressions
+per way, with no Python worker; dedup is a groupBy on the fingerprint —
+three shuffles, all on well-distributed keys.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
-
-from ..functions.geometry import canonical_node_fingerprint
-
-
-@pandas_udf(StringType())
-def fingerprint_udf(node_ids: pd.Series) -> pd.Series:
-    return node_ids.map(lambda ids: canonical_node_fingerprint(list(ids)))
 
 
 def split_way_expr(node_ids, corner_pos):
@@ -107,6 +98,53 @@ def split_way_expr(node_ids, corner_pos):
     )
 
 
+def _id_list(ids):
+    """Node-id array → "id,id,..." (fingerprints, representative key)."""
+    return F.array_join(F.transform(ids, lambda x: x.cast("string")), ",")
+
+
+def fingerprint_expr(node_ids):
+    """G15: rotation/reversal-invariant fingerprint of a node-id list as
+    one JVM expression, equal to geometry.canonical_node_fingerprint.
+
+    Open lists: "O:" + the lesser of (ids, reversed ids). Rings (first
+    id == last id): "R:" + the lexicographically least rotation, over
+    both orientations, of the core (the ring without its closing id).
+    That rotation starts at an occurrence of the minimum id, so only
+    those k are candidates: rotation k of the core and rotation m-1-k of
+    its reversal, O(n x occurrences of the min) per ring. core, its
+    reversal and its minimum are bound to lambda variables
+    (transform-over-singleton, as in split_way_expr): left unbound,
+    array_min would be re-evaluated per element inside the filter."""
+
+    def serialize(prefix, ids):
+        return F.concat(F.lit(prefix), _id_list(ids))
+
+    def bind(value, fn):
+        return F.get(F.transform(F.array(value), fn), 0)
+
+    def rot(c, m, k):
+        return F.concat(F.slice(c, k + 1, m - k), F.slice(c, 1, k))
+
+    def ring_fp(c):
+        m = F.size(c)
+
+        def least_rotation(r, mn):
+            ks = F.filter(F.sequence(F.lit(0), m - 1), lambda k: F.get(c, k) == mn)
+            return F.aggregate(
+                ks, c, lambda acc, k: F.least(acc, rot(c, m, k), rot(r, m, m - 1 - k))
+            )
+
+        best = bind(F.reverse(c), lambda r: bind(F.array_min(c), lambda mn: least_rotation(r, mn)))
+        return serialize("R:", best)
+
+    n = F.size(node_ids)
+    is_ring = (n > 1) & (F.get(node_ids, 0) == F.get(node_ids, n - 1))
+    return F.when(is_ring, bind(F.slice(node_ids, 1, n - 1), ring_fp)).otherwise(
+        serialize("O:", F.least(node_ids, F.reverse(node_ids)))
+    )
+
+
 def detect_corners(ways: DataFrame, min_ways: int = 3) -> DataFrame:
     """J8: nodes present in >= min_ways distinct ways → corner nodes.
 
@@ -158,43 +196,16 @@ def segment_ways(ways: DataFrame, lint_observation=None) -> DataFrame:
     w = ways.join(corner_pos, "way_id", "left").withColumn(
         "corner_pos", F.coalesce("corner_pos", F.array().cast("array<int>"))
     )
-    # persist the split segments: the open/ring fingerprint branches
-    # below are FILTERS of this table re-joined by union, so without the
-    # persist the entire corner-detection + split pipeline executes once
-    # per branch (2x per action — verified in the r08 plan profile).
-    # The persisted rows are skinny (way_id, admin_level, node-id list);
-    # a long-lived deployment would materialize this segment table
-    # anyway.
     segs = w.select(
         "way_id",
         "admin_level",
         F.explode(split_way_expr(F.col("node_ids"), F.col("corner_pos"))).alias("seg_nodes"),
-    ).persist()
-    # canonical fingerprint: OPEN segments (the overwhelming majority —
-    # rings survive splitting only when a closed way has no corners)
-    # stay JVM-side (integer-array lexicographic least of the two
-    # orientations ≡ python min(ids, ids[::-1])); rotation-canonical
-    # RING fingerprints keep the Arrow kernel.
-    is_ring = (F.size("seg_nodes") > 1) & (
-        F.element_at("seg_nodes", 1) == F.element_at("seg_nodes", -1)
-    )
-    fp_open = F.concat(
-        F.lit("O:"),
-        F.array_join(
-            F.transform(
-                F.least(F.col("seg_nodes"), F.reverse("seg_nodes")), lambda x: x.cast("string")
-            ),
-            ",",
-        ),
-    )
-    opens = segs.filter(~is_ring).withColumn("fp", fp_open)
-    rings = segs.filter(is_ring).withColumn("fp", fingerprint_udf(F.col("seg_nodes")))
-    segs = opens.unionByName(rings)
+    ).withColumn("fp", fingerprint_expr(F.col("seg_nodes")))
     # min_by on a canonical serialization, NOT first(): segments sharing
     # a fingerprint differ by rotation/reversal, and first() would make
     # node_ids vary run-to-run with partitioning — violating the
     # byte-identical-output rule (VERDICT r01 #3)
-    seg_key = F.array_join(F.transform("seg_nodes", lambda x: x.cast("string")), ",")
+    seg_key = _id_list(F.col("seg_nodes"))
     return segs.withColumn("seg_key", seg_key).groupBy("fp").agg(
         F.array_join(F.array_sort(F.collect_set("way_id")), ",").alias("parents"),
         F.count("*").alias("n_parents"),

@@ -1,11 +1,11 @@
 """Table IO seam (SURVEY.md §7): the engine reads and writes through
 these two functions only, so the storage layer is swappable at ONE
-point.
+point: the ``fmt`` argument of each call, default ``"parquet"``.
 
-- format='parquet' (default): plain parquet directories; atomic via
+- fmt='parquet' (default): plain parquet directories; atomic via
   Spark's output committer (the analogue of the reference's
   atomic_write.py tmp+rename).
-- format='snapshot': the from-scratch snapshot-versioned layer in
+- fmt='snapshot': the from-scratch snapshot-versioned layer in
   sources/snapshot_table.py — atomic manifest commits, time travel,
   history; the daily-diff capability (refresh-osm-data.sh's
   today/yesterday PBF pair) as a real, tested runtime. This replaces
@@ -18,22 +18,17 @@ point.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from . import snapshot_table
-
-TABLE_FORMAT = os.environ.get("ENGINE_TABLE_FORMAT", "parquet")
 
 
 def read_table(
     spark: SparkSession,
     location: str,
-    fmt: str | None = None,
+    fmt: str = "parquet",
     version: int | None = None,
 ) -> DataFrame:
-    fmt = fmt or TABLE_FORMAT
     if fmt == "snapshot":
         return snapshot_table.read_snapshot(spark, location, version=version)
     return spark.read.parquet(location)
@@ -43,10 +38,9 @@ def write_table(
     df: DataFrame,
     location: str,
     mode: str = "overwrite",
-    fmt: str | None = None,
+    fmt: str = "parquet",
     partition_by: list[str] | None = None,
 ) -> None:
-    fmt = fmt or TABLE_FORMAT
     if fmt == "snapshot":
         # Honor the caller's intent instead of silently full-replacing
         # (ADVICE r04 item 3): append routes to an append commit,

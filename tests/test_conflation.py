@@ -209,3 +209,51 @@ def test_battery_big_batch_memory_bounded():
     # matched jittered pairs: all alive, tiny hausdorff
     assert (out["hausdorff_m"] >= 0).all()
     assert peak < 900 * 1024 * 1024, f"peak {peak/1e6:.0f} MB"
+
+
+def test_should_reverse_is_the_endpoint_rule(verdicts, spark, sf_dir):
+    """The verdicts carry the battery's G7 orientation: on every row
+    that reaches the endpoint check it equals geometry.endpoint_match's
+    decision (CHECKED_POSSIBLE, which edit_plan applies, and case 3,
+    whose rule reverses); unmatched rows hold NULL."""
+    import numpy as np
+
+    from osm_admin_boundary_conflation_spark.functions import geometry as G
+
+    world = datagen_osm.build_osm_world(spark, sf_dir)
+    checked = verdicts.filter(
+        F.col("verdict").isin("CHECKED_POSSIBLE", "ERROR_END_POINTS_FAR_APART")
+    ).select("way_id", "osm_way_id", "verdict", "should_reverse")
+    rows = (
+        checked.join(world["src_ways"].select("way_id", "coords"), "way_id")
+        .join(
+            world["osm_ways"].select("osm_way_id", F.col("coords").alias("osm_coords")),
+            "osm_way_id",
+        )
+        .collect()
+    )
+    assert {r["verdict"] for r in rows} == {"CHECKED_POSSIBLE", "ERROR_END_POINTS_FAR_APART"}
+    for r in rows:
+        want = G.endpoint_match(np.asarray(r["coords"]), np.asarray(r["osm_coords"]))[1]
+        assert r["should_reverse"] is want, r["way_id"]
+    assert {r["should_reverse"] for r in rows} == {True, False}
+
+    unmatched = verdicts.filter(F.col("osm_way_id").isNull())
+    assert unmatched.count() > 0
+    assert unmatched.filter(F.col("should_reverse").isNotNull()).count() == 0
+
+
+def test_edit_plan_runs_no_python(verdicts, spark, sf_dir):
+    """edit_plan applies the verdicts' should_reverse instead of running
+    the endpoint rule again: no ArrowEvalPython node in its executed plan
+    (the verdict battery's own UDF is cut off by the checkpoint)."""
+    import re
+
+    from osm_admin_boundary_conflation_spark.operators.edit_plan import edit_plan
+
+    world = datagen_osm.build_osm_world(spark, sf_dir)
+    todo = verdicts.drop("case").localCheckpoint()
+    plan_df = edit_plan(todo, world["src_ways"], world["osm_ways"])
+    assert plan_df.count() > 0
+    plan = plan_df._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"ArrowEvalPython", plan), plan

@@ -79,3 +79,22 @@ def find_dead_defs(root: str = ROOT) -> list[str]:
 def test_no_unreferenced_package_definitions():
     dead = find_dead_defs()
     assert dead == [], "unreferenced top-level definitions:\n  " + "\n  ".join(dead)
+
+
+def test_package_compiles_without_warnings():
+    """Every repo source compiles with warnings as errors, so an invalid
+    string escape (a SyntaxWarning today, an error in a later Python)
+    cannot creep into a query or its oracle SQL."""
+    import warnings
+
+    failed = []
+    for path in _py_files(ROOT):
+        with open(path, encoding="utf-8") as fh:
+            src = fh.read()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            try:
+                compile(src, path, "exec")
+            except (SyntaxError, Warning) as e:
+                failed.append(f"{os.path.relpath(path, ROOT)}: {e}")
+    assert failed == [], "\n".join(failed)

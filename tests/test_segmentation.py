@@ -1,8 +1,12 @@
 """Segmentation determinism (translation.py pipeline analogue)."""
 
+import random
+import re
+
 import pyspark.sql.functions as F
 
 from osm_admin_boundary_conflation_spark import datagen_osm
+from osm_admin_boundary_conflation_spark.functions.geometry import canonical_node_fingerprint
 from osm_admin_boundary_conflation_spark.operators import segmentation as SG
 
 
@@ -167,8 +171,6 @@ def test_split_expr_matches_udf_edge_cases(spark):
 def test_split_expr_randomized_vs_udf(spark):
     """Randomized differential: 200 random open/closed ways with random
     corner subsets — JVM expression equals the plain-Python oracle."""
-    import random
-
     rng = random.Random(11)
     cases = []
     for wid in range(200):
@@ -180,3 +182,63 @@ def test_split_expr_randomized_vs_udf(spark):
         cases.append((nodes, corners))
     got, want = _expr_vs_oracle(spark, cases)
     assert got == want
+
+
+def _fingerprints(spark, lists):
+    df = spark.createDataFrame(list(enumerate(lists)), "id long, node_ids array<long>")
+    rows = df.select("id", SG.fingerprint_expr(F.col("node_ids")).alias("fp")).collect()
+    return [r["fp"] for r in sorted(rows, key=lambda r: r["id"])]
+
+
+def test_fingerprint_expr_matches_python_oracle(spark):
+    """fingerprint_expr (JVM) ≡ canonical_node_fingerprint on a seeded
+    batch: open lists and rings, duplicate ids, a minimum that repeats,
+    1- and 2-id cores, large ids, and rotated/reversed ring copies."""
+    rng = random.Random(13)
+    lists = [[], [7], [7, 7], [3, 3, 3], [4, 9, 4], [9, 4, 9], [2, 1, 2, 1, 2], [10**12, 1, 10**12]]
+    for _ in range(600):
+        m = rng.randint(1, 10)
+        scale = rng.choice([1, 10**12])
+        ids = [rng.randint(1, rng.randint(1, 5)) * scale for _ in range(m)]
+        if rng.random() < 0.6:
+            k = rng.randrange(m)
+            core = ids[k:] + ids[:k]
+            if rng.random() < 0.5:
+                core = core[::-1]
+            lists += [ids + ids[:1], core + core[:1]]
+        else:
+            lists.append(ids)
+    got = _fingerprints(spark, lists)
+    assert got == [canonical_node_fingerprint(ids) for ids in lists]
+
+
+def test_fingerprint_expr_long_ring(spark):
+    """A 20,000-node ring and its rotated reversal share one fingerprint,
+    equal to an O(n) min-anchored oracle (the ids are distinct, so the
+    least rotation of each orientation starts at the unique minimum)."""
+    core = list(range(1, 20_001))
+    random.Random(5).shuffle(core)
+    rev = core[::-1]
+    rotated_rev = rev[777:] + rev[:777]
+
+    def anchored(c):
+        k = c.index(min(c))
+        return c[k:] + c[:k]
+
+    want = "R:" + ",".join(map(str, min(anchored(core), anchored(core[::-1]))))
+    got = _fingerprints(spark, [core + core[:1], rotated_rev + rotated_rev[:1]])
+    assert got == [want, want]
+
+
+def test_segment_ways_plan_is_one_jvm_pass(spark):
+    """segment_ways runs no Python worker, caches nothing, and reads its
+    split segments once: no ArrowEvalPython, InMemoryRelation or Union
+    node in the executed plan."""
+    ways = spark.createDataFrame(
+        [(1, [1, 2, 3, 4, 1], "9"), (2, [3, 4, 5], "9"), (3, [4, 6, 3], "9")],
+        "way_id long, node_ids array<long>, admin_level string",
+    )
+    out = SG.segment_ways(ways)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"ArrowEvalPython|InMemoryRelation|Union", plan), plan
