@@ -31,7 +31,13 @@ as endpoint_dist_m.
 
 Scale: every join is an equi join on way/node/ref keys; the node→way
 reverse index is a linear explode; geometry runs in one Arrow batch
-stage. No driver-side loops, no per-row Python.
+stage. No driver-side loops, no per-row Python. The plan is cut at two
+eager localCheckpoint leaves — the candidate-resolved ways with their
+OSM payload, and the per-pair node-sharing flags — so one call is three
+short queries: the two checkpoints when ``conflate`` is called, then the
+flags/battery/verdict query over two ``Scan ExistingRDD`` leaves at the
+caller's action. conflate caches nothing: a cached subtree read by
+several branches is planned again in each of them.
 """
 
 from __future__ import annotations
@@ -215,7 +221,14 @@ def conflate(
     endpoint); both require BOTH ways tagged ("boundary in disguise"
     check, :147-148) and the node itself untagged (:173-175). The
     duplicated-node count rides out as ``n_unglued`` (the dry-run edit
-    analogue of NodeCreate+WayUpdate)."""
+    analogue of NodeCreate+WayUpdate).
+
+    The call is eager: it runs the two checkpoint queries (candidate-
+    resolved ways, sharing-pair flags) before it returns, and leaves two
+    locally checkpointed RDDs behind. As in graph.py, a lost local-
+    checkpoint block cannot be recomputed: if an executor holding one is
+    lost, the action on the returned DataFrame fails instead of
+    recomputing the lineage."""
     # Trim giant payloads at the source: a way with >=2000 nodes is
     # ERROR_TOO_MANY_NODES by count alone (conflate.py:365-368), so its
     # coord array never rides through any shuffle.
@@ -280,19 +293,6 @@ def conflate(
         F.count("*").alias("n_cands"),
         F.array_sort(F.collect_list("osm_way_id")).alias("cand_ids"),
     )
-    # persist the candidate-resolved ways: FIVE downstream branches
-    # (node explode, osm-way join, relation scan, node-tag probe, the
-    # unmatched union) consume this subtree — without a persist each
-    # branch recomputes the whole membership + candidate-index DAG.
-    # Payloads are already trimmed, so the cached rows are skinny.
-    ways = (
-        ways.join(cand_agg, "way_id", "left")
-        .withColumn("n_cands", F.coalesce("n_cands", F.lit(0)))
-        .persist()
-    )
-    matched = ways.filter((F.col("n_cands") == 1) & (F.col("n_rels").isin(1, 2))).withColumn(
-        "osm_way_id", F.col("cand_ids")[0]
-    )
 
     # ---- stage C: predicate flags per candidate ---------------------------
     # Giant coord arrays never ride through shuffles: a source way with
@@ -312,11 +312,33 @@ def conflate(
         F.when(F.size("node_ids") < 2000, F.col("node_ids")).alias("osm_node_ids"),
         F.col("tags").alias("osm_tags"),
     ).hint("merge")
-    matched = matched.join(ow, "osm_way_id", "left")
-    # node-level checks are moot for too_many rows: don't explode their ids
-    matched = matched.withColumn(
-        "osm_node_ids", F.when(F.col("n_src") < 2000, F.col("osm_node_ids"))
-    ).persist()  # consumed by node explode, relation scan, tag probe, final select
+    # Leaf 1: every way with its candidate resolved and its OSM payload
+    # joined (NULL unless matched), checkpointed once. Every downstream
+    # branch (node explode, relation scan, tag probe, final select, the
+    # unmatched rows) scans these materialized rows instead of planning
+    # the membership + candidate-index DAG again. n_rels and n_cands are
+    # never NULL, and n_rels = 0 implies n_cands = 0, so ~is_matched is
+    # exactly (n_cands != 1) | (n_rels > 2).
+    is_matched = (F.col("n_cands") == 1) & F.col("n_rels").isin(1, 2)
+    ways = (
+        ways.join(cand_agg, "way_id", "left")
+        .withColumn("n_cands", F.coalesce("n_cands", F.lit(0)))
+        .select(
+            "way_id",
+            "n_rels",
+            "n_cands",
+            "cand_ids",
+            "n_src",
+            "coords",
+            is_matched.alias("is_matched"),
+            F.when(is_matched, F.col("cand_ids")[0]).alias("osm_way_id"),
+        )
+        .join(ow, "osm_way_id", "left")
+        # node-level checks are moot for too_many rows: don't explode their ids
+        .withColumn("osm_node_ids", F.when(F.col("n_src") < 2000, F.col("osm_node_ids")))
+        .localCheckpoint(eager=True)
+    )
+    matched = ways.filter(F.col("is_matched"))
 
     tags = F.col("osm_tags")
     national_tag = tags["admin_level"].isNotNull() & (tags["admin_level"].cast("int") <= 2)
@@ -360,12 +382,11 @@ def conflate(
     #      per action at sf0.1);
     #   2. only those surviving ways are re-exploded WITH the tag flags
     #      and endpoint positions the sharing rules need.
-    # The pruned index is persisted: it is the node→way reverse index a
-    # long-lived deployment keeps, and five downstream consumers of the
-    # conflation DAG re-trigger this subtree otherwise. At a scale where
-    # the candidate set outgrows broadcast, swap the semi-join for a
-    # bloom-filter prune (same shape, approximate membership + the exact
-    # inner join below unchanged).
+    # The pruned index has one reader (`shared`), so it is not cached;
+    # the pair_flags checkpoint below materializes what it feeds. At a
+    # scale where the candidate set outgrows broadcast, swap the
+    # semi-join for a bloom-filter prune (same shape, approximate
+    # membership + the exact inner join below unchanged).
     cand_node_ids = cand_nodes.select("node_id").distinct()
     touching_ways = (
         osm_ways.select(F.col("osm_way_id"), F.explode("node_ids").alias("node_id"))
@@ -388,7 +409,6 @@ def conflate(
         )
         .withColumn("nw_end", (F.col("nw_pos") == 0) | (F.col("nw_pos") == F.col("nw_n") - 1))
         .drop("nw_pos", "nw_n")
-        .persist()
     )
     shared = (
         cand_nodes.join(node_way, "node_id")
@@ -398,10 +418,10 @@ def conflate(
     )
     d1 = F.col("cand_tagged") & F.col("nw_tagged") & ~F.col("cand_end") & ~F.col("node_has_tags")
     d2 = F.col("cand_tagged") & F.col("nw_tagged") & ~F.col("nw_end") & ~F.col("node_has_tags")
-    # persisted: TWO branches consume the sharing pairs (share_flags
-    # below and the relation scan's `sharing` leg), and each would
-    # otherwise re-run the cand_nodes⋈node_way join + aggregation
-    # (~0.9 s per action at sf0.1). One skinny row per sharing way pair.
+    # Leaf 2, checkpointed: TWO branches consume the sharing pairs
+    # (share_flags below and the relation scan's `sharing` leg), and each
+    # would otherwise re-run the cand_nodes⋈node_way join + aggregation.
+    # One skinny row per sharing way pair.
     pair_flags = shared.groupBy("way_id", "nw_way").agg(
         F.first("nw_nat").alias("nw_nat"),
         F.first("nw_other").alias("nw_other"),
@@ -409,7 +429,7 @@ def conflate(
         F.max(d2.cast("int")).alias("ok2"),
         F.sum(d1.cast("long")).alias("n1"),
         F.sum(d2.cast("long")).alias("n2"),
-    ).persist()
+    ).localCheckpoint(eager=True)
     # unglue direction order (conflate.py:221-230): try the candidate
     # boundary first; only if that fails, unglue the other way
     unglued = (
@@ -533,7 +553,7 @@ def conflate(
     )
 
     # unmatched branches (0 or >1 candidates, >=3 relations)
-    unmatched = ways.filter((F.col("n_cands") != 1) | (F.col("n_rels") > 2))
+    unmatched = ways.filter(~F.col("is_matched"))
     u_verdict = (
         F.when(F.col("n_rels") >= 3, "ERROR_OVERLAPPING_WAYS")
         .when((F.col("n_rels") == 2) & (F.col("n_cands") == 0), "ERROR_SHARED_WAY_NOT_FOUND")

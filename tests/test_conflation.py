@@ -89,32 +89,66 @@ def test_conflated_pairs_have_small_hausdorff(verdicts):
 
 
 def test_parallelism_invariance(spark, sf_dir):
-    """North rule: identical verdicts at different shuffle parallelism
-    (the conflation analogue of the geotag salting-invariance test)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    """North rule: identical verdict rows at different shuffle
+    parallelism (the conflation analogue of the geotag salting-invariance
+    test), with every broadcast join swapped for a shuffle join, and with
+    AQE off. Confs are set before ``conflate`` is called: its two
+    checkpoint queries are planned and run at call time."""
     world = datagen_osm.build_osm_world(spark, sf_dir)
 
-    def run():
-        out = CF.conflate(
-            world["src_ways"],
-            world["src_rels"],
-            world["osm_ways"],
-            world["osm_node_tags"],
-            world["osm_rels"],
-        )
-        return sorted(
-            (r["way_id"], r["verdict"], r["osm_way_id"], r["error_context"])
-            for r in out.collect()
-        )
+    def run(**conf):
+        saved = {k: spark.conf.get(k) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            out = CF.conflate(
+                world["src_ways"],
+                world["src_rels"],
+                world["osm_ways"],
+                world["osm_node_tags"],
+                world["osm_rels"],
+            )
+            return sorted(tuple(r) for r in out.collect())
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
 
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        a = run()
-        spark.conf.set("spark.sql.shuffle.partitions", "17")
-        b = run()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert a == b
+    base = run()
+    assert len(base) > 0
+    assert run(**{"spark.sql.shuffle.partitions": "3"}) == base
+    assert run(**{"spark.sql.shuffle.partitions": "17"}) == base
+    assert run(**{"spark.sql.autoBroadcastJoinThreshold": "-1"}) == base
+    assert run(**{"spark.sql.adaptive.enabled": "false"}) == base
+
+
+def test_plan_cuts_at_two_checkpoints(verdicts, spark, sf_dir, tmp_path):
+    """The verdict query plans over two materialized leaves (the
+    checkpointed candidate-resolved ways and sharing-pair flags), not
+    over nested caches: its executed plan holds no InMemoryRelation, and
+    one call adds exactly two persistent RDDs. The world tables are
+    staged as parquet and read back, as conflate_engine.py's conflate
+    job stages them, so no world cache enters the plan."""
+    world = datagen_osm.build_osm_world(spark, sf_dir)
+    staged = {}
+    for name, df in world.items():
+        df.write.parquet(str(tmp_path / name))
+        staged[name] = spark.read.parquet(str(tmp_path / name))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = CF.conflate(
+        staged["src_ways"],
+        staged["src_rels"],
+        staged["osm_ways"],
+        staged["osm_node_tags"],
+        staged["osm_rels"],
+    )
+    added = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(added) == 2, added
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan, plan
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        tuple(r) for r in verdicts.drop("case").collect()
+    )
 
 
 def test_unglue_matrix(spark, sf_dir):

@@ -23,3 +23,23 @@ def test_dup_udf_counts_double_evaluated_chain():
     assert summarize(_SHARED_BUILTIN)["dup_udf"] == 0
     assert summarize("\n".join([_CHAINED, _FUSED, _CHAINED]))["dup_udf"] == 2
     assert summarize(_CHAINED)["arrow"] == 1
+
+
+# a cached relation read by a cached relation: the inner cache prints
+# once inside the outer one's plan and once at its own read
+_NESTED_CACHE = """\
++- InMemoryTableScan [way_id#1, n_cands#2]
+   +- InMemoryRelation [way_id#1, n_cands#2], StorageLevel(disk, memory, deserialized, 1 replicas)
+      +- *(2) Project [way_id#1, n_cands#2]
+         +- InMemoryTableScan [way_id#1]
+            +- InMemoryRelation [way_id#1], StorageLevel(disk, memory, deserialized, 1 replicas)
+               +- *(1) Scan ExistingRDD[way_id#1]
++- InMemoryTableScan [way_id#1]
+   +- InMemoryRelation [way_id#1], StorageLevel(disk, memory, deserialized, 1 replicas)
+      +- *(1) Scan ExistingRDD[way_id#1]"""
+
+
+def test_inmem_counts_cached_relation_prints():
+    assert summarize(_NESTED_CACHE)["inmem"] == 3
+    assert summarize(_FUSED)["inmem"] == 0
+    assert summarize("+- *(1) Scan ExistingRDD[way_id#1]")["inmem"] == 0

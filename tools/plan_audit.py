@@ -166,6 +166,17 @@ INLINE_WORLD = {
     "geotag_knn",
 }
 
+# queries that call conflation.conflate: the call runs its two
+# checkpoint queries (candidate-resolved ways, sharing-pair flags), so
+# the summarized plan is the verdict query over those two leaves
+CONFLATE_CHECKPOINTS = {
+    "conflate_verdicts",
+    "conflate_verdicts_unglue",
+    "conflate_verdict_counts",
+    "conflate_report",
+    "edit_plan_summary",
+}
+
 
 def _udf_names(udf_list: str) -> list[str]:
     """Names of the Python UDF calls in an ArrowEvalPython UDF list,
@@ -228,6 +239,9 @@ def summarize(plan: str) -> dict[str, int]:
         "nested_loop": plan.count("BroadcastNestedLoopJoin") + plan.count("CartesianProduct"),
         "single_part": sp_total - sp_benign,
         "dup_udf": count_dup_udf(plan),
+        # a cached relation prints its whole plan at every read, and a
+        # cache nested in a cache prints it again: the count is the blow-up
+        "inmem": plan.count("InMemoryRelation"),
     }
 
 
@@ -305,6 +319,8 @@ def main() -> None:
             notes.append("harness")
         if r["name"] in INLINE_WORLD:
             notes.append("world read from materialized parquet (bench-style setup)")
+        if r["name"] in CONFLATE_CHECKPOINTS:
+            notes.append("conflate's two checkpoint queries run before the summarized plan")
         if r["name"] in NESTED_LOOP_SCALAR_OK and r["nested_loop"]:
             notes.append("nested-loop = 1-row scalar crossJoin (hand-audited)")
         if r["name"] == "quality_deciles" and r["single_part"]:
