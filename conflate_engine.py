@@ -9,6 +9,7 @@ the same --checkpoint dir resumes from finished stages):
   conflate  OSM conflation verdict battery → verdicts table
   segment   boundary segmentation/tiling → segments table
   measure   IoU quality metrics → quality_results table
+  report    conflation verdicts → HTML report (<output>.html)
 
 On a cluster, pass --master spark://... (or rely on spark-submit) and
 --parallelism to size shuffle partitions; locally defaults to

@@ -14,7 +14,7 @@ surveyed in SURVEY.md) as an idiomatic PySpark engine:
   vectorized Arrow UDFs over a pure-numpy geometry kernel.
 - Checkpoint-resumable stages with per-partition lineage metrics.
 - Training-data pipeline operators: dedup (exact/MinHash/SimHash/Jaccard),
-  ANN similarity search, text quality / language id, multimodal plumbing.
+  ANN similarity search, text quality / language id.
 
 No per-row Python anywhere: geometry and text kernels run as pandas/Arrow
 UDFs; everything else is built-in pyspark.sql.functions expressions.

@@ -1,9 +1,7 @@
 """Pure-numpy baseline JPEG (ITU T.81) codec — no libraries.
 
-VERDICT r04 item 2: BMP/WAV raw containers got real byte parsers in
-round 4; this closes the last stubbed kernel family. Baseline
-sequential DCT JPEG needs no codec libraries — it is markers + Huffman
-+ dequant + IDCT, all implementable from the public spec:
+Baseline sequential DCT JPEG needs no codec libraries — it is markers
++ Huffman + dequant + IDCT, all implementable from the public spec:
 
 - **Decoder** (`decode_baseline_jpeg`): marker walk (SOI/APPn/COM/DQT/
   SOF0/DHT/DRI/SOS/EOI), canonical Huffman table construction, entropy
@@ -17,8 +15,9 @@ sequential DCT JPEG needs no codec libraries — it is markers + Huffman
   emit): the MCU walk reads v_i x h_i data units per component per MCU
   (T.81 A.2.3) and chroma planes are reconstructed by box (pixel-
   replication) upsampling, which is spec-conformant and EXACT on
-  piecewise-constant blocks (what the closed-form gate uses). Raises
-  honestly for progressive (SOF2) and arithmetic-coded streams.
+  piecewise-constant blocks. Every other frame type — progressive
+  (SOF2), extended, lossless, arithmetic-coded — raises
+  NotImplementedError.
 - **Encoder** (`encode_baseline_jpeg`): the exact inverse over caller-
   provided QUANTIZED coefficient blocks — so tests can plant arbitrary
   coefficient patterns (long zero runs, negative DC diffs, forced 0xFF
@@ -27,13 +26,14 @@ sequential DCT JPEG needs no codec libraries — it is markers + Huffman
 
 Entropy decode is inherently serial per scan (each Huffman code's
 length is only known after decoding it), so the hot path at scale is
-one scan per CORE via mapInPandas over many images — the same shape as
-the BMP/WAV kernels in operators/multimodal.py — not SIMD within one
-scan. The block IDCT, where the arithmetic volume is, is vectorized
-across all blocks of the image at once.
+one scan per CORE via mapInPandas over many images — the shape of the
+quarantine scan in operators/quarantine.py — not SIMD within one scan.
+The block IDCT, where the arithmetic volume is, is vectorized across
+all blocks of the image at once.
 
-Reference analogue: none (pipeline-brief multimodal scope; the
-reference engine has no media path).
+Reference analogue: none (the reference engine has no media path);
+the decoder exists so operators/quarantine.py can classify JPEG blobs
+in a crawl by running a real parser over them.
 """
 
 from __future__ import annotations
@@ -332,22 +332,13 @@ def _extend(v: int, size: int) -> int:
 
 
 def decode_baseline_jpeg(blob: bytes, return_coeffs: bool = False):
-    """Decode a baseline (SOF0) or progressive (SOF2) JPEG. Returns a
-    uint8 array (h, w) for grayscale or (h, w, 3) RGB for 3-component
-    images; with `return_coeffs=True` returns
-    (quantized_coeff_blocks, quant_tables) instead — the exact integers
-    the entropy decoder recovered, so tests can assert bit-exact round
-    trips with no float in the loop.
-
-    Progressive streams (round 6) run the full T.81 Annex G Huffman
-    path: any scan script of spectral-selection bands and successive-
-    approximation passes — interleaved or single-component DC first/
-    refine scans (arithmetic point transform), single-component AC
-    first scans with EOB runs, and AC refinement scans with
-    zero-history runs + correction bits — accumulated into the same
-    per-component coefficient grids the baseline path fills in one
-    scan, then reconstructed by the shared dequant/IDCT/upsample
-    pipeline. Arithmetic coding (SOF9+) still raises honestly."""
+    """Decode a baseline (SOF0) JPEG. Returns a uint8 array (h, w) for
+    grayscale or (h, w, 3) RGB for 3-component images; with
+    `return_coeffs=True` returns (quantized_coeff_blocks, quant_tables)
+    instead — the exact integers the entropy decoder recovered, so
+    tests can assert bit-exact round trips with no float in the loop.
+    Progressive (SOF2), extended, lossless and arithmetic-coded frames
+    raise NotImplementedError."""
     if blob[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: missing SOI")
     pos = 2
@@ -355,8 +346,6 @@ def decode_baseline_jpeg(blob: bytes, return_coeffs: bool = False):
     huff_dc: dict[int, dict] = {}
     huff_ac: dict[int, dict] = {}
     frame = None
-    progressive = False
-    comp_coeffs = None  # persists across progressive scans
     restart = 0
     while pos < len(blob):
         if blob[pos] != 0xFF:
@@ -364,8 +353,6 @@ def decode_baseline_jpeg(blob: bytes, return_coeffs: bool = False):
         marker = blob[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
-            if progressive and comp_coeffs is not None:
-                return _reconstruct(frame, comp_coeffs, quant, return_coeffs)
             raise ValueError("EOI before SOS: no image data")
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             continue  # parameterless
@@ -391,8 +378,7 @@ def decode_baseline_jpeg(blob: bytes, return_coeffs: bool = False):
                 vals = list(seg[o + 17 : o + 17 + nv])
                 (huff_dc if tc == 0 else huff_ac)[th] = _decode_table(bits, vals)
                 o += 17 + nv
-        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
-            progressive = marker == 0xC2
+        elif marker == 0xC0:  # SOF0 baseline
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
             if prec != 8:
                 raise ValueError(f"only 8-bit precision supported, got {prec}")
@@ -411,10 +397,10 @@ def decode_baseline_jpeg(blob: bytes, return_coeffs: bool = False):
                     f"(sampling {[(c[1], c[2]) for c in comps]})"
                 )
             frame = (h, w, comps)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
+        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
             raise NotImplementedError(
                 f"frame marker 0xFF{marker:02X} "
-                "(extended/lossless/arithmetic) not supported"
+                "(extended/progressive/lossless/arithmetic) not supported"
             )
         elif marker == 0xDD:  # DRI
             (restart,) = struct.unpack_from(">H", seg, 0)
@@ -426,34 +412,15 @@ def decode_baseline_jpeg(blob: bytes, return_coeffs: bool = False):
             for i in range(ns):
                 cs, tt = struct.unpack_from(">BB", seg, 1 + 2 * i)
                 scan.append((cs, tt >> 4, tt & 0xF))
-            ss, se, ahl = struct.unpack_from(">BBB", seg, 1 + 2 * ns)
-            ah, al = ahl >> 4, ahl & 0xF
-            if not progressive:
-                return _decode_scan(
-                    blob, pos + seglen, frame, scan, quant, huff_dc, huff_ac,
-                    restart, return_coeffs,
-                )
-            if comp_coeffs is None:
-                _h, _w, comps = frame
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcus_x = (_w + 8 * hmax - 1) // (8 * hmax)
-                mcus_y = (_h + 8 * vmax - 1) // (8 * vmax)
-                comp_coeffs = [
-                    np.zeros((mcus_y * v_i, mcus_x * h_i, 8, 8), dtype=np.int64)
-                    for _, h_i, v_i, _ in comps
-                ]
-            pos = _decode_prog_scan(
-                blob, pos + seglen, frame, scan, (ss, se, ah, al),
-                huff_dc, huff_ac, restart, comp_coeffs,
+            # Ss, Se and Ah/Al close the SOS header; baseline decode
+            # uses none of them, but a segment that lacks them is cut
+            struct.unpack_from(">BBB", seg, 1 + 2 * ns)
+            return _decode_scan(
+                blob, pos + seglen, frame, scan, quant, huff_dc, huff_ac,
+                restart, return_coeffs,
             )
-            continue  # pos already past this scan's entropy data
         pos += seglen
     raise ValueError("truncated JPEG: no EOI")
-
-
-# the decoder handles both frame types; keep an honest public alias
-decode_jpeg = decode_baseline_jpeg
 
 
 def _decode_scan(
@@ -532,8 +499,8 @@ def _decode_scan(
 
 
 def _reconstruct(frame, comp_coeffs, quant, return_coeffs):
-    """Shared tail of baseline and progressive decode: dequant, IDCT,
-    crop, chroma upsample, color convert (or return raw coefficients)."""
+    """Tail of the decode: dequant, IDCT, crop, chroma upsample, color
+    convert (or return raw coefficients)."""
     h, w, comps = frame
     samp = [(h_i, v_i) for _, h_i, v_i, _ in comps]
     hmax = max(s[0] for s in samp)
@@ -557,9 +524,9 @@ def _reconstruct(frame, comp_coeffs, quant, return_coeffs):
         gy, gx = comp_coeffs[ci].shape[:2]
         img = px.transpose(0, 2, 1, 3).reshape(gy * 8, gx * 8)
         # crop to the component's own pixel dims (T.81 A.1.1), then box-
-        # upsample by replication to full resolution — exact for the
-        # piecewise-constant chroma the closed-form gate plants, and a
-        # conformant reconstruction for everything else
+        # upsample by replication to full resolution — exact for
+        # piecewise-constant chroma, and a conformant reconstruction for
+        # everything else
         ch = (h * v_i + vmax - 1) // vmax
         cw = (w * h_i + hmax - 1) // hmax
         img = img[:ch, :cw]
@@ -582,452 +549,3 @@ def _reconstruct(frame, comp_coeffs, quant, return_coeffs):
         )
         return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
     raise NotImplementedError(f"{n_comp}-component JPEG not supported")
-
-
-def _comp_block_grid(frame, ci: int) -> tuple[int, int]:
-    """Non-interleaved data-unit grid of component ci (T.81 A.2.2):
-    ceil(comp_pixel_dims / 8) over the component's OWN resolution —
-    generally smaller than the padded MCU grid the arrays allocate."""
-    h, w, comps = frame
-    _, h_i, v_i, _ = comps[ci]
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    cw = (w * h_i + hmax - 1) // hmax
-    ch = (h * v_i + vmax - 1) // vmax
-    return (ch + 7) // 8, (cw + 7) // 8
-
-
-def _decode_prog_scan(
-    blob, pos, frame, scan, band, huff_dc, huff_ac, restart, comp_coeffs
-) -> int:
-    """One progressive scan (T.81 Annex G, Huffman): accumulate into
-    comp_coeffs and return the byte position just past the entropy
-    data. band = (Ss, Se, Ah, Al)."""
-    ss, se, ah, al = band
-    h, w, comps = frame
-    cids = [cid for cid, _, _, _ in comps]
-    scan_map = []
-    for cs, td, ta in scan:
-        if cs not in cids:
-            raise ValueError(f"SOS component id {cs} not among SOF ids {cids}")
-        if ss == 0 and ah == 0 and td not in huff_dc:
-            # DC refinement scans read raw bits only — no table needed
-            raise ValueError(f"SOS references undefined DC Huffman table {td}")
-        if ss > 0 and ta not in huff_ac:
-            raise ValueError(f"SOS references undefined AC Huffman table {ta}")
-        scan_map.append((cids.index(cs), td, ta))
-    is_dc = ss == 0
-    if is_dc and se != 0:
-        raise ValueError("progressive scan mixing DC and AC bands")
-    if not is_dc and len(scan_map) != 1:
-        raise ValueError("progressive AC scans must be single-component")
-    r = _BitReader(blob, pos)
-    samp = [(h_i, v_i) for _, h_i, v_i, _ in comps]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-
-    if is_dc:
-        pred = [0] * len(comps)
-        interleaved = len(scan_map) > 1
-
-        def dc_unit(ci, td, by, bx):
-            blk = comp_coeffs[ci][by, bx]
-            if ah == 0:  # first scan: diff-coded (value >> Al, arithmetic)
-                size = _read_huff(r, huff_dc[td])
-                diff = _extend(r.bits(size), size) if size else 0
-                pred[ci] += diff
-                blk[0, 0] = pred[ci] << al
-            else:  # refinement: one bit at position Al
-                if r.bit():
-                    blk[0, 0] += 1 << al
-
-        if interleaved:
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            n_mcu = mcus_x * mcus_y
-            for mcu in range(n_mcu):
-                if restart and mcu and mcu % restart == 0:
-                    r.align_and_expect_restart(mcu // restart - 1)
-                    pred = [0] * len(comps)
-                my, mx = divmod(mcu, mcus_x)
-                for ci, td, _ta in scan_map:
-                    h_i, v_i = samp[ci]
-                    for iy in range(v_i):
-                        for ix in range(h_i):
-                            dc_unit(ci, td, my * v_i + iy, mx * h_i + ix)
-        else:
-            ci, td, _ta = scan_map[0]
-            bh, bw = _comp_block_grid(frame, ci)
-            for u in range(bh * bw):
-                if restart and u and u % restart == 0:
-                    r.align_and_expect_restart(u // restart - 1)
-                    pred = [0] * len(comps)
-                dc_unit(ci, td, u // bw, u % bw)
-    else:
-        ci, _td, ta = scan_map[0]
-        ac_tab = huff_ac[ta]
-        bh, bw = _comp_block_grid(frame, ci)
-        eobrun = 0
-        p1, m1 = 1 << al, -(1 << al)
-
-        def ac_first(flat):
-            nonlocal eobrun
-            if eobrun > 0:
-                eobrun -= 1
-                return
-            k = ss
-            while k <= se:
-                sym = _read_huff(r, ac_tab)
-                rr, s = sym >> 4, sym & 0xF
-                if s == 0:
-                    if rr == 15:  # ZRL
-                        k += 16
-                        continue
-                    eobrun = (1 << rr) - 1  # remaining blocks after this one
-                    if rr:
-                        eobrun += r.bits(rr)
-                    break
-                k += rr
-                if k > se:
-                    raise ValueError("AC run past band end")
-                # AC point transform is sign-magnitude (G.1.2.2); val<<al
-                # preserves sign-magnitude for Python ints
-                flat[_Z[k]] = _extend(r.bits(s), s) << al
-                k += 1
-
-        def ac_refine(flat):
-            nonlocal eobrun
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    sym = _read_huff(r, ac_tab)
-                    rr, s = sym >> 4, sym & 0xF
-                    if s == 0:
-                        if rr < 15:
-                            eobrun = 1 << rr  # blocks INCLUDING this one
-                            if rr:
-                                eobrun += r.bits(rr)
-                            break
-                        val = 0  # ZRL: skip 16 zero-history positions
-                    else:
-                        if s != 1:
-                            raise ValueError("AC refinement magnitude must be 1")
-                        val = p1 if r.bit() else m1
-                    while k <= se:
-                        z = _Z[k]
-                        if flat[z] != 0:
-                            # already-significant: read correction bit
-                            if r.bit() and not (abs(flat[z]) & p1):
-                                flat[z] += p1 if flat[z] > 0 else m1
-                        else:
-                            if rr == 0:
-                                if val:
-                                    flat[z] = val
-                                k += 1
-                                break
-                            rr -= 1
-                        k += 1
-            if eobrun > 0:
-                # EOB-run block (or tail of the block that read the EOB):
-                # correction bits only, for every nonzero coeff left
-                while k <= se:
-                    z = _Z[k]
-                    if flat[z] != 0:
-                        if r.bit() and not (abs(flat[z]) & p1):
-                            flat[z] += p1 if flat[z] > 0 else m1
-                    k += 1
-                eobrun -= 1
-
-        for u in range(bh * bw):
-            if restart and u and u % restart == 0:
-                if eobrun:
-                    raise ValueError("EOB run spans a restart interval")
-                r.align_and_expect_restart(u // restart - 1)
-            flat = comp_coeffs[ci][u // bw, u % bw].reshape(64)
-            if ah == 0:
-                ac_first(flat)
-            else:
-                ac_refine(flat)
-
-    r._n = 0  # drop padding bits of the final partial byte
-    return r.pos
-
-
-# Progressive AC scans need symbols the Annex K baseline table lacks:
-# the EOBn run-length codes 0x10..0xE0 (T.81 G.1.2.2). Real progressive
-# encoders ship per-scan custom DHTs; ours is the simplest valid one —
-# every (run, size) symbol for run 0..15, size 0..10 at a flat 9 bits
-# (176 codes of equal length are trivially prefix-free and Kraft-valid),
-# emitted as AC table 1 so the baseline table 0 stays untouched.
-_PROG_AC_VALS = [(rr << 4) | s for rr in range(16) for s in range(11)]
-_PROG_AC_BITS = [0] * 16
-_PROG_AC_BITS[8] = len(_PROG_AC_VALS)  # all codes length 9
-
-
-def default_progression(n_comp: int) -> list[tuple]:
-    """A real-world scan script (the libjpeg-style simple progression
-    shape): DC first at Al=1, per-component AC bands 1-5 and 6-63 at
-    Al=2, two AC refinement sweeps down to full precision, DC
-    refinement last. Every scan type the decoder supports appears."""
-    scans: list[tuple] = [(tuple(range(n_comp)), 0, 0, 0, 1)]
-    for ci in range(n_comp):
-        scans += [((ci,), 1, 5, 0, 2), ((ci,), 6, 63, 0, 2)]
-    for ci in range(n_comp):
-        scans.append(((ci,), 1, 63, 2, 1))
-    for ci in range(n_comp):
-        scans.append(((ci,), 1, 63, 1, 0))
-    scans.append((tuple(range(n_comp)), 0, 0, 1, 0))
-    return scans
-
-
-def encode_progressive_jpeg(
-    coeffs,
-    quant: np.ndarray,
-    width: int,
-    height: int,
-    scans: list[tuple] | None = None,
-    sampling: list[tuple[int, int]] | None = None,
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode QUANTIZED coefficient blocks as a PROGRESSIVE (SOF2)
-    JPEG — the exact inverse of the decoder's Annex G path, so tests
-    can plant arbitrary coefficients and require bit-exact recovery
-    through any scan script. Input conventions match
-    encode_baseline_jpeg (same shapes, same shared quant table).
-
-    scans: list of (comp_indices, Ss, Se, Ah, Al); default
-    default_progression(). Constraints enforced: DC scans have
-    Ss=Se=0 (and may interleave); AC scans are single-component;
-    refinement scans must step Ah = Al+1 (successive approximation
-    refines one bit per pass, G.1.1.1.2)."""
-    if sampling is None:
-        arr = np.asarray(coeffs)
-        if arr.ndim == 4:
-            arr = arr[None]
-        comps = [arr[i] for i in range(arr.shape[0])]
-        sampling = [(1, 1)] * len(comps)
-    else:
-        comps = [np.asarray(c) for c in coeffs]
-    nc = len(comps)
-    hmax = max(s[0] for s in sampling)
-    vmax = max(s[1] for s in sampling)
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    frame = (height, width, [(ci + 1, *sampling[ci], 0) for ci in range(nc)])
-    for ci, ((h_i, v_i), c) in enumerate(zip(sampling, comps)):
-        want = (mcus_y * v_i, mcus_x * h_i, 8, 8)
-        if c.shape != want:
-            raise ValueError(f"component {ci}: expected block grid {want}, got {c.shape}")
-        # T.81 A.2.2/G: progressive AC scans are non-interleaved and walk
-        # only the component's OWN ceil(dims/8) grid — blocks that exist
-        # purely as MCU-interleave padding are never AC-coded (their DC
-        # survives via interleaved DC scans). Reject data that cannot be
-        # represented instead of silently dropping it.
-        bh_c, bw_c = _comp_block_grid(frame, ci)
-        pad = [c[bh_c:].reshape(-1, 64)]
-        if bw_c < c.shape[1]:
-            pad.append(c[:bh_c, bw_c:].reshape(-1, 64))
-        pad_flat = np.concatenate(pad) if len(pad) > 1 else pad[0]
-        if pad_flat.size and np.any(pad_flat[:, 1:]):
-            raise ValueError(
-                f"component {ci}: nonzero AC coefficients in MCU padding "
-                f"blocks (outside the {bh_c}x{bw_c} non-interleaved grid) "
-                "are not codable in progressive scans"
-            )
-    if scans is None:
-        scans = default_progression(nc)
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_PROG_AC_BITS, _PROG_AC_VALS)
-
-    zq = quant.reshape(64)[_Z].astype(np.int64)
-    head = bytearray()
-    head += b"\xff\xd8"
-    head += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    head += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(int(x) for x in zq)
-    head += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * nc, 8, height, width, nc)
-    for ci in range(nc):
-        h_i, v_i = sampling[ci]
-        head += bytes((ci + 1, (h_i << 4) | v_i, 0))
-    head += (
-        b"\xff\xc4" + struct.pack(">H", 2 + 1 + 16 + len(_DC_VALS))
-        + b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS)
-    )
-    head += (
-        b"\xff\xc4" + struct.pack(">H", 2 + 1 + 16 + len(_PROG_AC_VALS))
-        + b"\x11" + bytes(_PROG_AC_BITS) + bytes(_PROG_AC_VALS)
-    )
-    if restart_interval:
-        head += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    out = bytearray(head)
-    for comp_idx, ss, se, ah, al in scans:
-        comp_idx = list(comp_idx) if isinstance(comp_idx, (list, tuple)) else [comp_idx]
-        if ss == 0 and se != 0:
-            raise ValueError("a scan cannot mix the DC band with AC bands")
-        if ss > 0 and len(comp_idx) != 1:
-            raise ValueError("AC scans must be single-component")
-        if ah not in (0, al + 1):
-            raise ValueError(f"successive approximation needs Ah in (0, Al+1), got {(ah, al)}")
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comp_idx), len(comp_idx))
-        for ci in comp_idx:
-            # Td=0 (shared DC table); Ta=1 — the progressive AC table,
-            # ignored by DC scans per T.81 but harmlessly present.
-            out += bytes((ci + 1, 0x01))
-        out += bytes((ss, se, (ah << 4) | al))
-        out += _encode_prog_scan(
-            comps, sampling, frame, comp_idx, (ss, se, ah, al),
-            dc_codes, ac_codes, restart_interval, mcus_x, mcus_y,
-        )
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _encode_prog_scan(
-    comps, sampling, frame, comp_idx, band, dc_codes, ac_codes, restart, mcus_x, mcus_y
-) -> bytes:
-    ss, se, ah, al = band
-    body = bytearray()
-    w = _BitWriter()
-
-    if ss == 0:  # DC scan (arithmetic point transform, T.81 G.1.2.1)
-        pred = [0] * len(comps)
-        units: list[tuple[int, int, int]] = []  # (ci, by, bx) in scan order
-        rst_stride = 0
-        if len(comp_idx) > 1:
-            for mcu in range(mcus_x * mcus_y):
-                my, mx = divmod(mcu, mcus_x)
-                for ci in comp_idx:
-                    h_i, v_i = sampling[ci]
-                    for iy in range(v_i):
-                        for ix in range(h_i):
-                            units.append((ci, my * v_i + iy, mx * h_i + ix))
-            rst_stride = sum(sampling[ci][0] * sampling[ci][1] for ci in comp_idx)
-        else:
-            ci = comp_idx[0]
-            bh, bw_ = _comp_block_grid(frame, ci)
-            units = [(ci, u // bw_, u % bw_) for u in range(bh * bw_)]
-            rst_stride = 1
-        n_per_rst = restart * rst_stride if restart else 0
-        for i, (ci, by, bx) in enumerate(units):
-            if n_per_rst and i and i % n_per_rst == 0:
-                w.flush()
-                body += w.out
-                body += bytes([0xFF, 0xD0 + ((i // n_per_rst - 1) % 8)])
-                w = _BitWriter()
-                pred = [0] * len(comps)
-            c0 = int(comps[ci][by, bx][0, 0])
-            if ah == 0:
-                v = c0 >> al  # arithmetic shift: floor toward -inf
-                size, bits = _magnitude(v - pred[ci])
-                pred[ci] = v
-                code, ln = dc_codes[size]
-                w.put(code, ln)
-                if size:
-                    w.put(bits, size)
-            else:
-                w.put((c0 >> al) & 1, 1)
-        w.flush()
-        body += w.out
-        return bytes(body)
-
-    # AC scan: single component, band ss..se, sign-magnitude transform
-    ci = comp_idx[0]
-    bh, bw_ = _comp_block_grid(frame, ci)
-    eobrun = 0
-    pending: list[int] = []  # correction bits owed to the open EOB run
-
-    def t_of(c: int) -> int:
-        return (abs(c) >> al) * (1 if c > 0 else -1) if c else 0
-
-    def flush_eob():
-        nonlocal eobrun
-        if eobrun:
-            rr = eobrun.bit_length() - 1
-            code, ln = ac_codes[rr << 4]
-            w.put(code, ln)
-            if rr:
-                w.put(eobrun - (1 << rr), rr)
-            for b in pending:
-                w.put(b, 1)
-            pending.clear()
-            eobrun = 0
-
-    for u in range(bh * bw_):
-        if restart and u and u % restart == 0:
-            flush_eob()
-            w.flush()
-            body += w.out
-            body += bytes([0xFF, 0xD0 + ((u // restart - 1) % 8)])
-            w = _BitWriter()
-        flat = comps[ci][u // bw_, u % bw_].reshape(64)
-        kvals = [int(flat[_Z[k]]) for k in range(ss, se + 1)]
-        if ah == 0:  # first scan in this band at precision Al
-            ts = [t_of(c) for c in kvals]
-            nz = [i for i, t in enumerate(ts) if t]
-            if not nz:
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eob()
-                continue
-            flush_eob()
-            run = 0
-            for i in range(nz[-1] + 1):
-                t = ts[i]
-                if t == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, ln = ac_codes[0xF0]
-                    w.put(code, ln)
-                    run -= 16
-                size, bits = _magnitude(t)
-                code, ln = ac_codes[(run << 4) | size]
-                w.put(code, ln)
-                w.put(bits, size)
-                run = 0
-            if nz[-1] < len(ts) - 1:
-                eobrun += 1
-        else:  # refinement scan (G.1.2.3): Ah = Al+1
-            prev_sig = [(abs(c) >> ah) != 0 for c in kvals]
-            t_cur = [t_of(c) for c in kvals]
-            newly = [
-                i for i, (p, t) in enumerate(zip(prev_sig, t_cur)) if not p and t
-            ]
-            corr = [(abs(c) >> al) & 1 for c in kvals]
-            if not newly:
-                eobrun += 1
-                pending.extend(corr[i] for i in range(len(kvals)) if prev_sig[i])
-                if eobrun == 0x7FFF:
-                    flush_eob()
-                continue
-            flush_eob()
-            ke = newly[-1]
-            run = 0
-            runbits: list[int] = []
-            for i in range(ke + 1):
-                if prev_sig[i]:
-                    runbits.append(corr[i])
-                elif t_cur[i] == 0:
-                    run += 1
-                    if run == 16:
-                        code, ln = ac_codes[0xF0]
-                        w.put(code, ln)
-                        for b in runbits:
-                            w.put(b, 1)
-                        runbits = []
-                        run = 0
-                else:  # newly significant: |t| == 1 by construction
-                    code, ln = ac_codes[(run << 4) | 1]
-                    w.put(code, ln)
-                    w.put(1 if t_cur[i] > 0 else 0, 1)
-                    for b in runbits:
-                        w.put(b, 1)
-                    runbits = []
-                    run = 0
-            if ke < len(kvals) - 1:
-                eobrun += 1
-                pending.extend(corr[i] for i in range(ke + 1, len(kvals)) if prev_sig[i])
-    flush_eob()
-    w.flush()
-    body += w.out
-    return bytes(body)

@@ -1,2 +1,2 @@
 """Engine operators: spatial join, conflation battery, segmentation,
-quality metrics, dedup, similarity search, diffing, multimodal."""
+quality metrics, dedup, similarity search, diffing."""

@@ -18,9 +18,8 @@ random series.
 
 Spark-first shape: groups are independent, so the sequential scan
 runs per key inside an Arrow batch (applyInPandas) — the standard
-treatment for per-entity state machines (same contract as the
-multimodal kernels); group size is bounded (a calibration segment),
-the fleet of groups is what scales.
+treatment for per-entity state machines; group size is bounded (a
+calibration segment), the fleet of groups is what scales.
 """
 
 from __future__ import annotations

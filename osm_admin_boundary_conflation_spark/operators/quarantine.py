@@ -7,10 +7,13 @@ and plain garbage on every run; one bad blob must cost one quarantine
 row, never a task retry storm. This operator applies the reference's
 typed-error philosophy (reference: processing_state.py:4-27 — every
 failure is a named state, not an exception that escapes) to the
-engine's from-scratch binary parsers (WARC, JPEG, BMP, WAV):
+engine's from-scratch binary parsers — WARC (sources/warc.py),
+baseline JPEG (functions/jpeg_codec.py; progressive SOF2 and the other
+non-baseline frame types raise NotImplementedError and land as
+'parse_error'), and the BMP and WAV parsers defined here:
 
 - sniff the container by magic bytes,
-- run the REAL parser (the same code the happy-path gates use),
+- run the real parser,
 - map the outcome to a closed reason vocabulary:
     ''               parsed clean
     'unknown_magic'  no known container signature
@@ -24,11 +27,11 @@ engine's from-scratch binary parsers (WARC, JPEG, BMP, WAV):
                      an escaping exception
 
 The scan is one Arrow-batched mapInPandas pass — per-blob python is
-the honest cost of byte-level parsing (same grain as the decode
-gates); no exception escapes the batch function, so the plan never
-sees a python traceback. Gated by `parser_quarantine` over a
-deterministic corrupt corpus (datagen builds valid members of every
-format plus truncations, framing violations, and garbage).
+the honest cost of byte-level parsing; no exception escapes the batch
+function, so the plan never sees a python traceback. Gated by
+`parser_quarantine` over a deterministic corrupt corpus
+(`build_corrupt_corpus` builds valid members of every format plus
+truncations, framing violations, and garbage).
 """
 
 from __future__ import annotations
@@ -40,23 +43,147 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.jpeg_codec import decode_baseline_jpeg, encode_baseline_jpeg
+from ..sources import warc as W
+
+
+BMP_W, BMP_H = 6, 5  # width 6 => 18-byte rows padded to 20: real padding
+WAV_N, WAV_RATE = 40, 8000
+
+
+def build_bmp(doc_id: int, w: int = BMP_W, h: int = BMP_H) -> bytes:
+    """24-bit uncompressed bottom-up BMP; pixel (x, y):
+    r=(doc_id+x+y)%256, g=(doc_id*2+x)%256, b=(doc_id*3+y)%256.
+    Pixel synthesis is vectorized (a 4K frame is 8.3M pixels — a
+    per-pixel Python loop would dominate the Arrow batch)."""
+    import numpy as np
+
+    row_raw = w * 3
+    row_padded = (row_raw + 3) // 4 * 4
+    pixel_bytes = row_padded * h
+    off = 14 + 40
+    header = struct.pack("<2sIHHI", b"BM", off + pixel_bytes, 0, 0, off)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, pixel_bytes, 2835, 2835, 0, 0)
+    ys = np.arange(h - 1, -1, -1, dtype=np.int64)[:, None]  # bottom-up storage
+    xs = np.arange(w, dtype=np.int64)[None, :]
+    px = np.zeros((h, row_padded), dtype=np.uint8)  # zero => row padding
+    px[:, 0 : row_raw : 3] = (doc_id * 3 + ys + 0 * xs) % 256  # B
+    px[:, 1 : row_raw : 3] = (doc_id * 2 + xs + 0 * ys) % 256  # G
+    px[:, 2 : row_raw : 3] = (doc_id + xs + ys) % 256  # R (BMP stores BGR)
+    return header + dib + px.tobytes()
+
+
+def decode_bmp(blob: bytes) -> tuple[int, int, int, int, int]:
+    """Parse a 24-bit uncompressed BMP: validate magic/bpp/compression,
+    honor the header's data offset, strip row padding, un-reverse the
+    bottom-up row order. Returns (w, h, sum_r, sum_g, sum_b). The
+    pixel pass is pure numpy — frombuffer + reshape + strided channel
+    views — so decoding stays vectorized inside the Arrow batch
+    (VERDICT r04 item 1: the per-pixel Python loop was fine at the
+    6x5 gate blobs but would dominate at real frame sizes)."""
+    import numpy as np
+
+    magic, _size, _r1, _r2, off = struct.unpack_from("<2sIHHI", blob, 0)
+    if magic != b"BM":
+        raise ValueError("not a BMP: bad magic")
+    hdr_sz, w, h, _planes, bpp, comp = struct.unpack_from("<IiiHHI", blob, 14)
+    if bpp != 24 or comp != 0:
+        raise ValueError(f"unsupported BMP variant bpp={bpp} comp={comp}")
+    row_padded = (w * 3 + 3) // 4 * 4
+    n_rows = abs(h)
+    if len(blob) < off + row_padded * n_rows:
+        raise ValueError("truncated BMP pixel data")
+    px = np.frombuffer(
+        blob, dtype=np.uint8, count=row_padded * n_rows, offset=off
+    ).reshape(n_rows, row_padded)[:, : w * 3]
+    sums = px.reshape(n_rows, w, 3).sum(axis=(0, 1), dtype=np.int64)
+    return w, n_rows, int(sums[2]), int(sums[1]), int(sums[0])  # BGR -> RGB
+
+
+def build_wav(doc_id: int, n: int = WAV_N) -> bytes:
+    """PCM16 mono RIFF/WAVE with a junk LIST chunk BEFORE data, so the
+    decoder must genuinely walk chunks; sample[i] =
+    ((doc_id*7 + i*13) % 65536) - 32768. Sample synthesis vectorized."""
+    import numpy as np
+
+    samples = (doc_id * 7 + np.arange(n, dtype=np.int64) * 13) % 65536 - 32768
+    data = samples.astype("<i2").tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, WAV_RATE, WAV_RATE * 2, 2, 16)
+    junk = b"INFOfake metadata to skip"
+    chunks = (
+        b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"LIST" + struct.pack("<I", len(junk)) + junk + (b"\x00" if len(junk) % 2 else b"")
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def decode_wav(blob: bytes) -> tuple[int, int, int, int]:
+    """Walk RIFF chunks (skipping unknown ones, honoring word
+    alignment), validate PCM16 mono, parse little-endian int16 samples.
+    Returns (n_samples, sample_rate, sum_abs, max_amp)."""
+    if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE file")
+    pos, fmt_seen, rate, n_ch, bits = 12, False, 0, 0, 0
+    while pos + 8 <= len(blob):
+        cid = blob[pos : pos + 4]
+        (clen,) = struct.unpack_from("<I", blob, pos + 4)
+        body = blob[pos + 8 : pos + 8 + clen]
+        if cid == b"fmt ":
+            tag, n_ch, rate, _bps, _align, bits = struct.unpack_from("<HHIIHH", body, 0)
+            if tag != 1:
+                raise ValueError(f"not PCM (format tag {tag})")
+            fmt_seen = True
+        elif cid == b"data":
+            if not fmt_seen:
+                raise ValueError("data chunk before fmt chunk")
+            if bits != 16 or n_ch != 1:
+                raise ValueError(f"unsupported PCM layout bits={bits} ch={n_ch}")
+            import numpy as np
+
+            n = clen // 2
+            samples = np.frombuffer(body, dtype="<i2", count=n).astype(np.int64)
+            return n, rate, int(np.abs(samples).sum()), int(samples.max())
+        pos += 8 + clen + (clen % 2)  # chunks are word-aligned
+    raise ValueError("no data chunk")
+
+
+JPEG_BLOCKS = 2  # gated JPEGs are 2x2 blocks of 8x8 = 16x16 grayscale
+
+
+def build_jpeg(doc_id: int) -> bytes:
+    """Baseline JPEG whose 8x8 block (bx, by) is the constant value
+    v = 2*((doc_id*5 + bx*3 + by*7) % 128): DC-only coefficients with
+    DC quant 16, so decode is EXACTLY v (v even => (v-128)/2 is the
+    exact quantized DC; 16*DC/8 reverses it losslessly) and the DuckDB
+    oracle can recompute the decoded pixel sums in closed form while
+    the decoder does the full marker/Huffman/IDCT pipeline — including
+    restart markers (restart_interval=1 puts an RST before every MCU
+    after the first, with a DC-predictor reset the decoder must honor)."""
+    import numpy as np
+
+    quant = np.ones((8, 8), dtype=np.int64)
+    quant[0, 0] = 16
+    coeffs = np.zeros((JPEG_BLOCKS, JPEG_BLOCKS, 8, 8), dtype=np.int64)
+    for by_ in range(JPEG_BLOCKS):
+        for bx in range(JPEG_BLOCKS):
+            v = 2 * ((doc_id * 5 + bx * 3 + by_ * 7) % 128)
+            coeffs[by_, bx, 0, 0] = (v - 128) // 2
+    side = JPEG_BLOCKS * 8
+    return encode_baseline_jpeg(coeffs, quant, side, side, restart_interval=1)
+
 
 def classify_blob(blob: bytes) -> tuple[str, str]:
     """(format, reason) for one untrusted blob; never raises."""
-    from ..functions import jpeg_codec as J
-    from ..sources import warc as W
-
-    from . import multimodal as M
-
     blob = bytes(blob)
     if blob[:2] == b"\x1f\x8b":
-        fmt, parse = "warc", lambda: _parse_warc_member(W, blob)
+        fmt, parse = "warc", lambda: _parse_warc_member(blob)
     elif blob[:2] == b"BM":
-        fmt, parse = "bmp", lambda: M.decode_bmp(blob)
+        fmt, parse = "bmp", lambda: decode_bmp(blob)
     elif blob[:2] == b"\xff\xd8":
-        fmt, parse = "jpeg", lambda: J.decode_jpeg(blob)
+        fmt, parse = "jpeg", lambda: decode_baseline_jpeg(blob)
     elif blob[:4] == b"RIFF":
-        fmt, parse = "wav", lambda: M.decode_wav(blob)
+        fmt, parse = "wav", lambda: decode_wav(blob)
     else:
         return "unknown", "unknown_magic"
     try:
@@ -70,7 +197,7 @@ def classify_blob(blob: bytes) -> tuple[str, str]:
         return fmt, "parse_error"
 
 
-def _parse_warc_member(W, blob: bytes):
+def _parse_warc_member(blob: bytes):
     recs = list(W.parse_warc_gz(blob))
     if not recs:
         # all members parsed but none was a response record — fine
@@ -89,10 +216,6 @@ def build_corrupt_corpus(docs: DataFrame) -> DataFrame:
     asserted by the parser_quarantine oracle."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources import warc as W
-
-        from . import multimodal as M
-
         date = "2024-03-01T00:00:00Z"
 
         def build(doc_id: int) -> bytes:
@@ -105,14 +228,14 @@ def build_corrupt_corpus(docs: DataFrame) -> DataFrame:
                 m = W.gzip_member(rec)
                 return m[: (len(m) * 3) // 5] if c == 2 else m
             if c in (3, 4):
-                b = M.build_bmp(doc_id)
+                b = build_bmp(doc_id)
                 return b[:30] if c == 4 else b
             if c in (5, 6):
-                b = M.build_jpeg(doc_id)
+                b = build_jpeg(doc_id)
                 return b[: len(b) - 4] if c == 6 else b
             if c == 7:
                 return bytes([doc_id % 251]) * 32
-            b = M.build_wav(doc_id)
+            b = build_wav(doc_id)
             return b[:20] if c == 9 else b
 
         for pdf in it:

@@ -8,11 +8,17 @@ alias, or an identifier-shaped string constant (``__all__``, registry
 keys, ``getattr`` names). Definitions carrying a decorator other than
 ``pandas_udf`` are registered through that decorator (``@q`` queries,
 ``@given`` tests, ...) and are out of scope.
+
+The reverse direction — code deleted from under a caller that is kept —
+is guarded by ``test_every_relative_import_resolves``, which does import
+each target module (still no Spark): a lazy ``from .operators.x import
+y`` inside a query body would otherwise fail only when that query runs.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib.util
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -98,3 +104,39 @@ def test_package_compiles_without_warnings():
             except (SyntaxError, Warning) as e:
                 failed.append(f"{os.path.relpath(path, ROOT)}: {e}")
     assert failed == [], "\n".join(failed)
+
+
+def find_unresolved_imports(root: str = ROOT) -> list[str]:
+    """Every relative ``from ... import name`` in the package, at any
+    nesting depth, whose module does not import or lacks the name."""
+    bad: list[str] = []
+    for path in _py_files(os.path.join(root, PACKAGE)):
+        rel = os.path.relpath(path, root)
+        pkg = os.path.dirname(rel).replace(os.sep, ".")
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom) or node.level == 0:
+                continue
+            target = importlib.util.resolve_name(
+                "." * node.level + (node.module or ""), pkg
+            )
+            where = f"{rel}:{node.lineno}"
+            try:
+                mod = importlib.import_module(target)
+            except ImportError as e:
+                bad.append(f"{where}: {target} ({e})")
+                continue
+            for alias in node.names:
+                if alias.name == "*" or hasattr(mod, alias.name):
+                    continue
+                try:  # ``from . import submodule``
+                    importlib.import_module(f"{target}.{alias.name}")
+                except ImportError:
+                    bad.append(f"{where}: {target} has no {alias.name}")
+    return bad
+
+
+def test_every_relative_import_resolves():
+    bad = find_unresolved_imports()
+    assert bad == [], "unresolved relative imports:\n  " + "\n  ".join(bad)

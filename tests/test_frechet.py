@@ -3,6 +3,10 @@
 import random
 from functools import lru_cache
 
+import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from osm_admin_boundary_conflation_spark.operators.frechet import discrete_frechet2
 
 
@@ -40,3 +44,27 @@ def test_offset_polyline_closed_form():
     for delta in [5, 30]:
         got = discrete_frechet2(xs, ys, xs, [y + delta for y in ys])
         assert got == delta * delta
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    seed=st.integers(0, 2 ** 31 - 1),
+    n=st.integers(1, 7),
+    m=st.integers(1, 7),
+)
+def test_frechet_invariants(seed, n, m):
+    rng = np.random.RandomState(seed)
+    P = rng.randint(-30, 30, size=(n, 2)).astype(np.int64)
+    Q = rng.randint(-30, 30, size=(m, 2)).astype(np.int64)
+    d = discrete_frechet2(P[:, 0], P[:, 1], Q[:, 0], Q[:, 1])
+    # symmetric; zero iff identical-as-sequences; bounded below by the
+    # forced endpoint pairings and above by the identity-ish coupling max
+    assert d == discrete_frechet2(Q[:, 0], Q[:, 1], P[:, 0], P[:, 1])
+    ends = max(
+        int(((P[0] - Q[0]) ** 2).sum()), int(((P[-1] - Q[-1]) ** 2).sum())
+    )
+    assert d >= ends
+    if n == m:
+        assert d <= int(((P - Q) ** 2).sum(axis=1).max())
+    if n == m and np.array_equal(P, Q):
+        assert d == 0

@@ -155,12 +155,11 @@ def test_honest_rejections():
     blob = J.encode_baseline_jpeg(coeffs, _quant(), 8, 8)
     with pytest.raises(ValueError, match="missing SOI"):
         J.decode_baseline_jpeg(b"XX" + blob[2:])
-    # flip SOF0 -> SOF2: the baseline full-band SOS (Ss=0, Se=63) is
-    # ILLEGAL in a progressive frame (G.1.1.1.1 — DC and AC may not
-    # share a scan), so the decoder must reject it, not mis-decode
+    # flip SOF0 -> SOF2: progressive frames are not decoded at all, so
+    # the frame marker itself is rejected before any scan is read
     idx = blob.index(b"\xff\xc0")
     prog = blob[:idx] + b"\xff\xc2" + blob[idx + 2 :]
-    with pytest.raises(ValueError, match="mixing DC and AC"):
+    with pytest.raises(NotImplementedError, match="frame marker 0xFFC2"):
         J.decode_baseline_jpeg(prog)
     # arithmetic-coded progressive (SOF10) stays an honest rejection
     arith = blob[:idx] + b"\xff\xca" + blob[idx + 2 :]
@@ -184,17 +183,6 @@ def test_honest_rejections():
     )
     with pytest.raises(NotImplementedError, match="fractional"):
         J.decode_baseline_jpeg(frac)
-
-
-def test_decode_media_routes_jpeg():
-    from osm_admin_boundary_conflation_spark.operators.multimodal import (
-        build_jpeg,
-        decode_media,
-    )
-
-    assert decode_media(build_jpeg(42)) == (16, 16)
-    with pytest.raises(NotImplementedError, match="MP3/H.264"):
-        decode_media(b"\x00\x01\x02\x03garbage")
 
 
 def test_property_roundtrip_random_coeff_matrices():
@@ -357,10 +345,10 @@ def test_422_and_scan_order_and_odd_dims():
 
 
 def test_420_dc_only_closed_form_exact():
-    """The gate's closed form: even luma v with DC quant 16 and constant
-    chroma 138 (DC coeff 5) must decode to exactly (v+14, v-11, v+18)
-    per pixel — the integer offsets the media_decode_jpeg420 oracle
-    hardcodes (see multimodal.build_jpeg420)."""
+    """Closed form: even luma v with DC quant 16 and constant chroma
+    138 (DC coeff 5) must decode to exactly (v+14, v-11, v+18) per
+    pixel — each T.871 offset is at least 0.08 from a rounding
+    boundary, so the result is unambiguous."""
     q = np.ones((8, 8), dtype=np.int64)
     q[0, 0] = 16
     v = 120
@@ -390,188 +378,3 @@ def test_encoder_rejects_bad_sampling_grids():
         J.encode_baseline_jpeg(
             [y, c, c], _quant(), 16, 16, sampling=[(5, 1), (1, 1), (1, 1)]
         )
-
-
-# ---------------------------------------------------------------------------
-# Progressive JPEG (SOF2, T.81 Annex G) — round 6
-# ---------------------------------------------------------------------------
-
-
-def test_progressive_coefficient_round_trip_bit_exact():
-    """The default libjpeg-style scan script (DC first at Al=1, AC
-    bands at Al=2, two AC refinement sweeps, DC refinement) must
-    recover arbitrary planted coefficients exactly: pins DC successive
-    approximation (arithmetic point transform), AC first scans with
-    EOB runs, and AC refinement (newly-significant bits + correction
-    bits + zero-history runs)."""
-    rng = np.random.RandomState(62)
-    for _ in range(6):
-        shape = (rng.randint(1, 5), rng.randint(1, 5))
-        coeffs = _random_coeffs(rng, shape)
-        blob = J.encode_progressive_jpeg(coeffs, _quant(), shape[1] * 8, shape[0] * 8)
-        got, qtabs = J.decode_baseline_jpeg(blob, return_coeffs=True)
-        assert np.array_equal(got[0], coeffs)
-        assert np.array_equal(qtabs[0], _quant())
-
-
-def test_progressive_pixels_identical_to_baseline():
-    """Same quantized coefficients through SOF0 and SOF2 encoders must
-    decode to the IDENTICAL image — progressive is an entropy-layer
-    reordering, not a different reconstruction."""
-    rng = np.random.RandomState(63)
-    gray = _random_coeffs(rng, (3, 4))
-    color = np.stack([_random_coeffs(rng, (2, 3)) for _ in range(3)])
-    for coeffs, w, h in [(gray, 32, 24), (color, 24, 16)]:
-        base = J.encode_baseline_jpeg(coeffs, _quant(), w, h)
-        prog = J.encode_progressive_jpeg(coeffs, _quant(), w, h)
-        assert prog != base
-        assert b"\xff\xc2" in prog and b"\xff\xc2" not in base
-        assert np.array_equal(
-            J.decode_baseline_jpeg(base), J.decode_baseline_jpeg(prog)
-        )
-
-
-def test_progressive_420_subsampled_round_trip():
-    """Progressive + 4:2:0 (the layout most web images ship): the DC
-    scan interleaves four Y units per MCU while AC scans walk each
-    component's OWN non-interleaved grid (T.81 A.2.2) — different
-    traversals that must land in the same coefficient arrays."""
-    rng = np.random.RandomState(64)
-    y = _random_coeffs(rng, (4, 6))
-    cb = _random_coeffs(rng, (2, 3))
-    cr = _random_coeffs(rng, (2, 3))
-    # 40x24 at 4:2:0: the padded MCU grid is 4x6 Y blocks but Y's own
-    # non-interleaved grid is ceil(24/8) x ceil(40/8) = 3x5 — AC in the
-    # padding row/column is uncodable (T.81 A.2.2) and must be REJECTED,
-    # not silently dropped (the baseline interleaved scan does code it).
-    with pytest.raises(ValueError, match="MCU padding"):
-        J.encode_progressive_jpeg(
-            [y, cb, cr], _quant(), 40, 24, sampling=[(2, 2), (1, 1), (1, 1)]
-        )
-    y[3, :, :, :] = 0
-    y[:, 5, :, :] = 0
-    y[3, :, 0, 0] = rng.randint(-40, 40, size=6)  # padding DC: codable
-    y[:, 5, 0, 0] = rng.randint(-40, 40, size=4)  # (interleaved DC scan)
-    blob = J.encode_progressive_jpeg(
-        [y, cb, cr], _quant(), 40, 24, sampling=[(2, 2), (1, 1), (1, 1)]
-    )
-    got, _ = J.decode_baseline_jpeg(blob, return_coeffs=True)
-    assert np.array_equal(got[0], y)
-    assert np.array_equal(got[1], cb)
-    assert np.array_equal(got[2], cr)
-    # pixel-differential against the baseline 4:2:0 encoder
-    base = J.encode_baseline_jpeg(
-        [y, cb, cr], _quant(), 40, 24, sampling=[(2, 2), (1, 1), (1, 1)]
-    )
-    assert np.array_equal(J.decode_baseline_jpeg(base), J.decode_baseline_jpeg(blob))
-
-
-def test_progressive_custom_scan_scripts():
-    """Scan scripts a conformant decoder must accept beyond the default:
-    spectral-only (no successive approximation), three-way band splits,
-    and deep Al=3 approximation with three refinement sweeps."""
-    rng = np.random.RandomState(65)
-    coeffs = _random_coeffs(rng, (2, 2))
-    scripts = [
-        # spectral selection only, Ah=Al=0
-        [((0,), 0, 0, 0, 0), ((0,), 1, 63, 0, 0)],
-        [((0,), 0, 0, 0, 0), ((0,), 1, 5, 0, 0), ((0,), 6, 20, 0, 0),
-         ((0,), 21, 63, 0, 0)],
-        # deep successive approximation
-        [((0,), 0, 0, 0, 1), ((0,), 0, 0, 1, 0),
-         ((0,), 1, 63, 0, 3), ((0,), 1, 63, 3, 2), ((0,), 1, 63, 2, 1),
-         ((0,), 1, 63, 1, 0)],
-    ]
-    for scans in scripts:
-        blob = J.encode_progressive_jpeg(coeffs, _quant(), 16, 16, scans=scans)
-        got, _ = J.decode_baseline_jpeg(blob, return_coeffs=True)
-        assert np.array_equal(got[0], coeffs), scans
-
-
-def test_progressive_restart_markers():
-    """RST markers inside progressive scans: DC predictors reset, EOB
-    runs may not span an interval, bit reader re-aligns."""
-    rng = np.random.RandomState(66)
-    coeffs = _random_coeffs(rng, (3, 3))
-    blob = J.encode_progressive_jpeg(coeffs, _quant(), 24, 24, restart_interval=2)
-    assert any(bytes([0xFF, 0xD0 + m]) in blob for m in range(8))
-    got, _ = J.decode_baseline_jpeg(blob, return_coeffs=True)
-    assert np.array_equal(got[0], coeffs)
-
-
-def test_progressive_dc_arithmetic_shift_on_negatives():
-    """G.1.2.1: the DC point transform is an ARITHMETIC shift (floor),
-    unlike AC's sign-magnitude. Odd negative DC values are where a
-    logical-shift implementation diverges — pin them exactly."""
-    coeffs = np.zeros((1, 4, 8, 8), dtype=np.int64)
-    coeffs[0, :, 0, 0] = [-53, -1, 1, 53]
-    blob = J.encode_progressive_jpeg(coeffs, _quant(), 32, 8)
-    got, _ = J.decode_baseline_jpeg(blob, return_coeffs=True)
-    assert np.array_equal(got[0], coeffs)
-
-
-def test_progressive_eob_and_zrl_edge_cases():
-    """All-zero AC bands (maximal EOB runs across every block), a lone
-    coefficient at zigzag 63 (ZRL chains), and a sparse mid-band value
-    that splits an EOB run."""
-    coeffs = np.zeros((2, 8, 8, 8), dtype=np.int64)
-    coeffs[0, 0, 7, 7] = 5
-    coeffs[1, 3, 3, 3] = -9
-    coeffs[:, :, 0, 0] = 7
-    blob = J.encode_progressive_jpeg(coeffs, _quant(), 64, 16)
-    got, _ = J.decode_baseline_jpeg(blob, return_coeffs=True)
-    assert np.array_equal(got[0], coeffs)
-
-
-def test_progressive_encoder_rejects_bad_scripts():
-    coeffs = np.zeros((3, 1, 1, 8, 8), dtype=np.int64)
-    with pytest.raises(ValueError, match="mix the DC band"):
-        J.encode_progressive_jpeg(
-            coeffs, _quant(), 8, 8, scans=[((0, 1, 2), 0, 63, 0, 0)]
-        )
-    with pytest.raises(ValueError, match="single-component"):
-        J.encode_progressive_jpeg(
-            coeffs, _quant(), 8, 8,
-            scans=[((0, 1, 2), 0, 0, 0, 0), ((0, 1), 1, 63, 0, 0)],
-        )
-    with pytest.raises(ValueError, match="Ah in"):
-        J.encode_progressive_jpeg(
-            coeffs, _quant(), 8, 8,
-            scans=[((0, 1, 2), 0, 0, 0, 2), ((0, 1, 2), 0, 0, 2, 0)],
-        )
-
-
-def test_progressive_gate_closed_form():
-    """The media_decode_progressive gate's exact arithmetic: even luma
-    v, constant chroma 138 through the FULL default progression at
-    4:2:0 decodes to exactly (v+14, v-11, v+18) per pixel."""
-    from osm_admin_boundary_conflation_spark.operators.multimodal import (
-        build_jpeg_progressive,
-    )
-
-    for doc_id in (0, 1, 17):
-        img = J.decode_baseline_jpeg(build_jpeg_progressive(doc_id))
-        assert img.shape == (32, 32, 3)
-        for by in range(4):
-            for bx in range(4):
-                v = 2 * ((doc_id * 5 + bx * 3 + by * 7) % 100) + 20
-                tile = img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                assert (tile[:, :, 0] == v + 14).all()
-                assert (tile[:, :, 1] == v - 11).all()
-                assert (tile[:, :, 2] == v + 18).all()
-
-
-def test_progressive_fuzz_corruption_never_hangs():
-    """Byte-corruption fuzz over a progressive stream: flipped bytes
-    must decode or raise cleanly — the multi-scan state machine must
-    not loop forever on a truncated/garbled scan."""
-    rng = np.random.RandomState(67)
-    coeffs = _random_coeffs(rng, (2, 2))
-    blob = bytearray(J.encode_progressive_jpeg(coeffs, _quant(), 16, 16))
-    for i in range(2, len(blob), max(1, len(blob) // 60)):
-        bad = bytearray(blob)
-        bad[i] ^= 0x5A
-        try:
-            J.decode_baseline_jpeg(bytes(bad))
-        except (ValueError, NotImplementedError, IndexError, struct.error):
-            pass

@@ -23,7 +23,7 @@ def test_classify_blob_never_raises_on_random_bytes():
 
 
 def test_classify_blob_clean_formats():
-    from osm_admin_boundary_conflation_spark.operators import multimodal as M
+    from osm_admin_boundary_conflation_spark.operators import quarantine as M
     from osm_admin_boundary_conflation_spark.sources import warc as W
 
     date = "2024-03-01T00:00:00Z"
@@ -32,6 +32,17 @@ def test_classify_blob_clean_formats():
     assert classify_blob(M.build_bmp(5)) == ("bmp", "")
     assert classify_blob(M.build_jpeg(5)) == ("jpeg", "")
     assert classify_blob(M.build_wav(5)) == ("wav", "")
+
+
+def test_classify_blob_progressive_jpeg_is_parse_error():
+    """A progressive (SOF2) frame marker makes the decoder raise
+    NotImplementedError; quarantine turns that into one typed row."""
+    from osm_admin_boundary_conflation_spark.operators import quarantine as M
+
+    blob = M.build_jpeg(5)
+    idx = blob.index(b"\xff\xc0")
+    prog = blob[:idx] + b"\xff\xc2" + blob[idx + 2 :]
+    assert classify_blob(prog) == ("jpeg", "parse_error")
 
 
 def test_quarantine_scan_corpus_outcomes(spark):

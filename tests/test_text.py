@@ -303,7 +303,7 @@ def test_raw_media_codecs_strict_and_padded():
 
     import pytest as _pytest
 
-    from osm_admin_boundary_conflation_spark.operators import multimodal as M
+    from osm_admin_boundary_conflation_spark.operators import quarantine as M
 
     b = M.build_bmp(77)
     assert M.decode_bmp(b)[:2] == (6, 5)
@@ -341,7 +341,7 @@ def test_raw_media_decoders_are_vectorized_at_frame_scale():
 
     import numpy as np
 
-    from osm_admin_boundary_conflation_spark.operators import multimodal as M
+    from osm_admin_boundary_conflation_spark.operators import quarantine as M
 
     w, h = 1602, 1250  # ~2 MP, width chosen so rows genuinely pad (4806->4808)
     blob = M.build_bmp(123, w=w, h=h)
