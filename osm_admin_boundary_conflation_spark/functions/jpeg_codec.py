@@ -412,9 +412,16 @@ def decode_baseline_jpeg(blob: bytes, return_coeffs: bool = False):
             for i in range(ns):
                 cs, tt = struct.unpack_from(">BB", seg, 1 + 2 * i)
                 scan.append((cs, tt >> 4, tt & 0xF))
-            # Ss, Se and Ah/Al close the SOS header; baseline decode
-            # uses none of them, but a segment that lacks them is cut
-            struct.unpack_from(">BBB", seg, 1 + 2 * ns)
+            # Ss, Se and Ah/Al close the SOS header; a segment that lacks
+            # them is cut, and a baseline scan must carry 0, 63 and 0/0
+            # (T.81 B.2.3) — anything else is a spectral-selection or
+            # successive-approximation scan this decoder would misread
+            ss, se, ahal = struct.unpack_from(">BBB", seg, 1 + 2 * ns)
+            if (ss, se, ahal) != (0, 63, 0):
+                raise ValueError(
+                    f"baseline SOS needs Ss=0 Se=63 Ah=Al=0, got "
+                    f"Ss={ss} Se={se} Ah={ahal >> 4} Al={ahal & 0xF}"
+                )
             return _decode_scan(
                 blob, pos + seglen, frame, scan, quant, huff_dc, huff_ac,
                 restart, return_coeffs,

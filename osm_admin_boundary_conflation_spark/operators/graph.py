@@ -1,4 +1,6 @@
-"""Distributed connected components for dedup-cluster resolution.
+"""Distributed connected components for dedup-cluster resolution, plus
+two other fixpoint graph operators on the same checkpoint-per-round
+shape: ``temporal_reachability`` and ``k_truss``.
 
 Near-dup detection (MinHash/SimHash/LSH) emits PAIRS; turning pairs into
 dedup GROUPS ("keep one doc per cluster") is a connected-components
@@ -205,274 +207,6 @@ def _cc_star(nodes: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
     )
 
 
-def bfs_hops(edges: DataFrame, source: int, max_hops: int = 10) -> DataFrame:
-    """Minimum hop count from `source` to every reachable node.
-
-    edges: (src, dst) undirected. Frontier expansion: each round joins
-    the CURRENT frontier to the edge list (one shuffle), anti-joins
-    already-visited nodes, and checkpoints — the distributed BFS shape
-    (at 1000 executors the frontier join partitions by vertex; a
-    high-diameter graph wants bidirectional search or CC-style pointer
-    doubling instead). The frontier size rides the checkpoint job via
-    ``observe`` — one Spark job per hop, no extra isEmpty scan.
-    """
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    visited = spark.createDataFrame([(source, 0)], "id long, hop int").localCheckpoint(
-        eager=True
-    )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        obs = Observation()
-        nxt = (
-            frontier.join(sym, frontier.id == sym.u)
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .select("id", F.lit(hop).cast("int").alias("hop"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if (obs.get["n"] or 0) == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
-
-
-def orient_by_degree(e: DataFrame) -> DataFrame:
-    """Orient each canonical edge (a < b) from lower (degree, id) rank
-    to higher. Returns (src, dst, ddst) where ddst is dst's degree.
-
-    This is the Schank-Wagner / node-iterator++ preprocessing: after
-    orientation every vertex has out-degree <= O(sqrt(m)), so wedge
-    generation is Sum d_out(v)^2 = O(m^1.5) TOTAL — bounded even on a
-    power-law graph where the raw Sum d(v)^2 of an id-ordered pivot
-    explodes on the hub vertices (a celebrity node with d=10^7 would
-    otherwise emit 10^14 wedges from one key).
-    """
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .union(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    edr = (
-        e.join(deg.select(F.col("v").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("v").alias("b"), F.col("deg").alias("db")), "b")
-    )
-    # rank = (deg, id); a < b always, so ties break toward a
-    a_low = F.col("da") <= F.col("db")
-    return edr.select(
-        F.when(a_low, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_low, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_low, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-    )
-
-
-def degree_ordered_wedges(o: DataFrame) -> DataFrame:
-    """Wedges (x; y, z) pivoting on the LOW-rank vertex x of each
-    oriented edge pair, with rank(y) < rank(z). One self-join on src."""
-    w1 = o.select("src", F.col("dst").alias("y"), F.col("ddst").alias("dy"))
-    w2 = o.select("src", F.col("dst").alias("z"), F.col("ddst").alias("dz"))
-    return w1.join(w2, "src").filter(
-        (F.col("dy") < F.col("dz"))
-        | ((F.col("dy") == F.col("dz")) & (F.col("y") < F.col("z")))
-    )
-
-
-def count_triangles(e: DataFrame) -> DataFrame:
-    """Exact triangle count over canonical edges (a < b): degree-orient,
-    generate O(m^1.5) wedges, close each wedge against the oriented edge
-    set (the closing edge y-z is oriented y->z precisely because
-    rank(y) < rank(z)). Two equi-joins, both on vertex keys; every
-    triangle is counted exactly once at its lowest-rank vertex."""
-    o = orient_by_degree(e)
-    wedges = degree_ordered_wedges(o)
-    closed = wedges.join(
-        o.select(F.col("src").alias("y"), F.col("dst").alias("z")), ["y", "z"]
-    )
-    return closed.agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
-def sssp(edges: DataFrame, source: int, max_rounds: int = 20) -> DataFrame:
-    """Single-source shortest paths over non-negative integer weights by
-    synchronous Bellman-Ford rounds — the distributed SSSP shape
-    (Malewicz et al., Pregel, SIGMOD'10 §5.2, re-expressed as DataFrame
-    rounds).
-
-    edges: (src, dst, w) DIRECTED, w bigint >= 0. Returns (id, dist) for
-    every node reachable from ``source``.
-
-    Each round is ONE Spark job: relax every edge out of the current
-    tentative set (join on src), fold the old tentative distances back
-    in with a marker column, and take the per-node min — the changed-row
-    count rides the same job via ``observe``, and ``localCheckpoint``
-    cuts lineage so the plan stays O(1) per round. Rounds needed = max
-    edge count over any optimal path; convergence earlier than
-    ``max_rounds`` stops the loop, and exhaustion RAISES (a tentative
-    distance that is still improving is silently wrong, never a result).
-    At cluster scale both sides of the round join partition by vertex
-    id, so each round is a single co-partitioned shuffle over the
-    frontier — never the full graph for low-eccentricity sources.
-    """
-    e = edges.select(
-        F.col("src"), F.col("dst"), F.col("w").cast("long")
-    ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0)], "id long, dist long").localCheckpoint(
-        eager=True
-    )
-    changed = None
-    for _ in range(max_rounds):
-        cand = dist.join(e, dist.id == e.src).select(
-            F.col("dst").alias("id"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-            F.lit(0).alias("is_old"),
-        )
-        obs = Observation()
-        new = (
-            dist.select("id", "dist", F.lit(1).alias("is_old"))
-            .unionByName(cand)
-            .groupBy("id")
-            .agg(
-                F.min("dist").alias("dist"),
-                F.min(F.when(F.col("is_old") == 1, F.col("dist"))).alias("old_dist"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (
-                        F.col("old_dist").isNull()
-                        | (F.col("dist") < F.col("old_dist"))
-                    ).cast("long")
-                ).alias("changed"),
-            )
-            .select("id", "dist")
-            .localCheckpoint(eager=True)
-        )
-        changed = obs.get["changed"] or 0
-        dist = new
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"sssp did not converge in {max_rounds} rounds ({changed} distances "
-            "still improving) — an optimal path exceeds max_rounds edges; "
-            "raise max_rounds"
-        )
-    return dist
-
-
-def label_propagation(
-    nodes: DataFrame, seeds: DataFrame, edges: DataFrame, rounds: int
-) -> DataFrame:
-    """Semi-supervised label propagation (Zhu & Ghahramani 2002, the
-    synchronous clamped variant), determinized: seeds keep their label
-    forever; every other node takes the majority label among its
-    LABELED neighbours each round (ties -> smallest label), or keeps
-    its previous label when no neighbour is labeled yet. A FIXED round
-    count (no convergence test) keeps the operator deterministic even
-    on graphs where asynchronous LPA oscillates.
-
-    nodes: (id). seeds: (id, label). edges: (src, dst) undirected.
-    Returns (id, label) after ``rounds`` synchronous updates; never-
-    reached nodes keep label -1. Each round is one edge join + one
-    two-level groupBy (vote count then argmax) — vertex-partitioned
-    shuffles, lineage cut per round.
-    """
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sd = seeds.select("id", F.col("label").cast("long").alias("seed_label")).localCheckpoint(
-        eager=True
-    )
-    state = (
-        nodes.select("id")
-        .join(sd, "id", "left")
-        .select("id", F.col("seed_label").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        votes = (
-            sym.join(
-                state.filter(F.col("label").isNotNull()).select(
-                    F.col("id").alias("u"), "label"
-                ),
-                "u",
-            )
-            .groupBy("v", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        arg = (
-            votes.groupBy("v")
-            .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("m"))
-            .select(F.col("v").alias("id"), F.col("m.label").alias("vote_label"))
-        )
-        state = (
-            state.join(arg, "id", "left")
-            .join(sd, "id", "left")
-            .select(
-                "id",
-                F.coalesce("seed_label", "vote_label", "label").alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return state.select("id", F.coalesce("label", F.lit(-1)).cast("long").alias("label"))
-
-
-def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
-    """The k-core: the maximal induced subgraph with minimum degree >= k
-    (Seidman 1983), by synchronous peeling — each round recomputes
-    degrees over the surviving induced subgraph and drops every node
-    below k, until nothing drops. Rounds needed = the peel depth of the
-    graph, typically tiny; convergence is checked on the survivor count
-    (one number per round, no extra scan: the groupBy's row count rides
-    the checkpoint job via ``observe``), and exhaustion RAISES because
-    a partially-peeled graph is not a k-core.
-
-    edges: (src, dst) undirected. Returns (id, deg) for core members,
-    deg = degree WITHIN the core. Scale shape per round: two semi-joins
-    on the alive set + one vertex-keyed groupBy.
-    """
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    alive = sym.select(F.col("u").alias("id")).distinct().localCheckpoint(eager=True)
-    n_prev = None
-    for _ in range(max_rounds):
-        obs = Observation()
-        deg = (
-            sym.join(alive.select(F.col("id").alias("u")), "u", "semi")
-            .join(alive.select(F.col("id").alias("v")), "v", "semi")
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select(F.col("u").alias("id"), "deg")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_new = obs.get["n"] or 0
-        alive = deg.select("id")
-        if n_new == n_prev:
-            return deg
-        n_prev = n_new
-        if n_new == 0:
-            return deg
-    raise RuntimeError(f"k_core did not stabilize in {max_rounds} peeling rounds")
-
-
 def temporal_reachability(
     edges: DataFrame, source: int, max_rounds: int = 20
 ) -> DataFrame:
@@ -528,118 +262,14 @@ def temporal_reachability(
     return arr
 
 
-def multi_source_bfs(
-    edges: DataFrame, sources: DataFrame, max_hops: int
-) -> DataFrame:
-    """Minimum hop counts from EVERY source at once: bfs_hops with the
-    pivot folded into the frontier key, so k pivots cost one traversal
-    of rounds = max_hops instead of k traversals — the shape sampled
-    centrality estimators use (Eppstein-Wang style pivot sampling).
-    edges: (src, dst) undirected; sources: (pivot). Returns
-    (pivot, id, hop), hop 0 at each pivot itself.
-    """
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    visited = sources.select(
-        F.col("pivot"), F.col("pivot").alias("id"), F.lit(0).cast("int").alias("hop")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        obs = Observation()
-        nxt = (
-            frontier.join(sym, frontier.id == sym.u)
-            .select("pivot", F.col("v").alias("id"))
-            .distinct()
-            .join(visited.select("pivot", "id"), ["pivot", "id"], "left_anti")
-            .select("pivot", "id", F.lit(hop).cast("int").alias("hop"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if (obs.get["n"] or 0) == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
-
-
-def bidirectional_bfs_distance(
-    edges: DataFrame, source: int, target: int, max_hops: int = 20
-) -> int | None:
-    """Point-to-point unweighted distance by MEET-IN-THE-MIDDLE BFS:
-    expand the smaller frontier (ties: source side) one hop at a time
-    from both endpoints; when the visited sets intersect, the distance
-    is min over meet nodes of d_s + d_t. Each side explores O(b^(d/2))
-    instead of O(b^d) — the reason every routing engine searches from
-    both ends. Frontier sizes ride the checkpoint job via ``observe``;
-    the meet check is a broadcast-able semi-join per round. Returns the
-    hop distance, or None if the sides exhaust without meeting."""
-    sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    sides = {}
-    for name, root in (("s", source), ("t", target)):
-        vis = spark.createDataFrame([(root, 0)], "id long, hop int").localCheckpoint(
-            eager=True
-        )
-        sides[name] = {"visited": vis, "frontier": vis, "fsize": 1, "alive": True, "hop": 0}
-
-    def meet_distance() -> int | None:
-        j = sides["s"]["visited"].join(
-            sides["t"]["visited"].select(F.col("id"), F.col("hop").alias("hop_t")), "id"
-        )
-        row = j.agg(F.min(F.col("hop") + F.col("hop_t")).alias("d")).collect()[0]
-        return None if row["d"] is None else int(row["d"])
-
-    d = meet_distance()
-    if d is not None:
-        return d
-    for _ in range(2 * max_hops):
-        live = [n for n in ("s", "t") if sides[n]["alive"]]
-        if not live:
-            return None
-        side = min(live, key=lambda n: (sides[n]["fsize"], n != "s"))
-        st = sides[side]
-        hop = st["hop"] + 1
-        obs = Observation()
-        nxt = (
-            st["frontier"].join(sym, st["frontier"].id == sym.u)
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(st["visited"].select("id"), "id", "left_anti")
-            .select("id", F.lit(hop).cast("int").alias("hop"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n = obs.get["n"] or 0
-        if n == 0:
-            st["alive"] = False
-            continue
-        st["visited"] = st["visited"].unionByName(nxt).localCheckpoint(eager=True)
-        st["frontier"] = nxt
-        st["fsize"] = n
-        st["hop"] = hop
-        d = meet_distance()
-        if d is not None:
-            return d
-    return None
-
-
 def k_truss(edges: DataFrame, k: int, max_rounds: int = 20) -> DataFrame:
     """The k-truss: the maximal subgraph where EVERY edge sits in at
     least k-2 triangles (Cohen 2008) — a cohesion filter strictly
     stronger than the k-core, the community-detection workhorse for
     link graphs. Synchronous peeling: each round computes per-edge
     triangle SUPPORT as |N(a) ∩ N(b)| via two adjacency joins (the
-    wedge-closure shape; swap in orient_by_degree's oriented wedges
-    when hub degrees explode the plain join), drops edges below k-2,
+    wedge-closure shape; orient each edge from lower to higher degree
+    first when hub degrees explode the plain join), drops edges below k-2,
     and repeats until stable — convergence checked on the surviving
     edge count (monotone set, so equal counts mean equal sets), ridden
     on the checkpoint job via ``observe``. Raises on exhaustion.
@@ -680,276 +310,3 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 20) -> DataFrame:
         if n_new == 0:
             return sup
     raise RuntimeError(f"k_truss did not stabilize in {max_rounds} rounds")
-
-
-def nearest_facility(
-    edges: DataFrame, facilities: list[int], max_rounds: int = 20
-) -> DataFrame:
-    """Network Voronoi: label every node with its nearest facility by
-    shortest-path distance over the road graph — multi-source
-    Bellman-Ford carrying a (dist, facility) struct whose per-node MIN
-    settles both the distance and the deterministic tiebreak (equal
-    distances -> smallest facility id) in one aggregation.
-
-    edges: (src, dst, w) DIRECTED, w bigint >= 0. Returns
-    (id, dist, facility) for every node reachable from any facility.
-
-    The loop is sssp()'s round shape (one Observation-folded job per
-    round, lineage cut per round, convergence raises on exhaustion);
-    the only algebraic change is min over structs instead of min over
-    longs — which is why network Voronoi costs the same as one SSSP
-    regardless of facility count, the property that makes it the
-    100 TB shape (k independent SSSPs would be k full traversals).
-    """
-    from pyspark.sql import Observation
-
-    e = edges.select(
-        F.col("src"), F.col("dst"), F.col("w").cast("long")
-    ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    best = spark.createDataFrame(
-        [(int(f), 0, int(f)) for f in facilities], "id long, dist long, fac long"
-    ).localCheckpoint(eager=True)
-    changed = None
-    for _ in range(max_rounds):
-        cand = best.join(e, best.id == e.src).select(
-            F.col("dst").alias("id"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-            F.col("fac"),
-            F.lit(0).alias("is_old"),
-        )
-        obs = Observation()
-        new = (
-            best.select("id", "dist", "fac", F.lit(1).alias("is_old"))
-            .unionByName(cand)
-            .groupBy("id")
-            .agg(
-                F.min(F.struct("dist", "fac")).alias("b"),
-                F.min(
-                    F.when(F.col("is_old") == 1, F.struct("dist", "fac"))
-                ).alias("old_b"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("old_b").isNull() | (F.col("b") < F.col("old_b"))).cast(
-                        "long"
-                    )
-                ).alias("changed"),
-            )
-            .select("id", F.col("b.dist").alias("dist"), F.col("b.fac").alias("fac"))
-            .localCheckpoint(eager=True)
-        )
-        changed = obs.get["changed"] or 0
-        best = new
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"nearest_facility did not converge in {max_rounds} rounds "
-            f"({changed} labels still improving) — raise max_rounds"
-        )
-    return best.select("id", "dist", F.col("fac").alias("facility"))
-
-
-def all_pairs_bfs_sigma(edges: DataFrame, max_rounds: int) -> DataFrame:
-    """All-pairs BFS with shortest-path COUNTS (the forward half of
-    Brandes' betweenness, Brandes 2001 §3, as synchronous DataFrame
-    rounds keyed by source): returns (s, v, d, sigma) where sigma is
-    the number of distinct shortest s->v paths.
-
-    Each round expands the whole frontier ACROSS ALL SOURCES at once —
-    one edge join + one (s, v) groupBy summing predecessor sigmas +
-    one anti-join against settled vertices — so n sources cost one
-    BFS's rounds, not n traversals. For unweighted graphs the level-L
-    frontier's summed counts ARE the shortest-path counts (a walk of
-    minimal length is necessarily a shortest path). ``max_rounds``
-    must be >= the graph diameter — the caller pins it from known
-    topology (the gate's grid has diameter 12); rows stop expanding
-    once settled, so extra rounds are cheap no-ops.
-
-    Scale: state is O(n^2) rows for n sources — exact betweenness'
-    inherent cost. At 100 TB the same operator runs with a SAMPLED
-    source set (the harmonic_centrality_sampled pattern) for unbiased
-    estimates; the per-round joins are vertex-partitioned either way.
-    """
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    nodes = e.select(F.col("src").alias("v")).union(
-        e.select(F.col("dst").alias("v"))
-    ).distinct()
-    settled = nodes.select(
-        F.col("v").alias("s"), "v", F.lit(0).alias("d"), F.lit(1).cast("long").alias("sigma")
-    ).localCheckpoint(eager=True)
-    frontier = settled
-    for depth in range(1, max_rounds + 1):
-        grown = (
-            frontier.join(e, frontier.v == e.src)
-            .groupBy("s", F.col("dst").alias("nv"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("s", F.col("nv").alias("v"), F.lit(depth).alias("d"), "sigma")
-        )
-        frontier = grown.join(
-            settled.select("s", "v"), ["s", "v"], "left_anti"
-        ).localCheckpoint(eager=True)
-        settled = settled.unionByName(frontier).localCheckpoint(eager=True)
-    return settled
-
-
-def betweenness_path_counts(edges: DataFrame, max_rounds: int) -> DataFrame:
-    """Unnormalized betweenness as exact integer THROUGH-PATH counts:
-    for every vertex v, sum over ordered pairs (s, t), s != v != t, of
-    sigma(s,v) * sigma(v,t) where d(s,v) + d(v,t) = d(s,t) — the
-    number of shortest s->t paths passing through v, summed. Pure
-    sigma-table algebra: two self-joins of all_pairs_bfs_sigma's
-    output (on the middle vertex, then on the endpoint pair to check
-    the distance identity) and one groupBy — no per-path enumeration,
-    which is what makes Brandes' observation an engine-sized job."""
-    ap = all_pairs_bfs_sigma(edges, max_rounds).localCheckpoint(eager=True)
-    sv = ap.select(
-        F.col("s").alias("ps"), F.col("v").alias("pv"),
-        F.col("d").alias("d1"), F.col("sigma").alias("sig1"),
-    )
-    vt = ap.select(
-        F.col("s").alias("qv"), F.col("v").alias("qt"),
-        F.col("d").alias("d2"), F.col("sigma").alias("sig2"),
-    )
-    st = ap.select(
-        F.col("s").alias("rs"), F.col("v").alias("rt"), F.col("d").alias("dst_d")
-    )
-    return (
-        sv.join(vt, sv.pv == vt.qv)
-        .filter((F.col("pv") != F.col("ps")) & (F.col("pv") != F.col("qt")))
-        .join(
-            st,
-            (F.col("rs") == F.col("ps"))
-            & (F.col("rt") == F.col("qt"))
-            & (F.col("dst_d") == F.col("d1") + F.col("d2")),
-        )
-        .groupBy(F.col("pv").alias("v"))
-        .agg(F.sum(F.col("sig1") * F.col("sig2")).alias("through_paths"))
-    )
-
-
-def jones_plassmann_color(edges: DataFrame, max_rounds: int) -> DataFrame:
-    """Distributed greedy graph coloring by Jones-Plassmann symmetry
-    breaking (Jones & Plassmann 1993) with STATIC id priorities: each
-    round, every uncolored vertex whose higher-id neighbours are all
-    colored takes the smallest color none of them uses. With unique
-    static priorities this produces EXACTLY the sequential greedy
-    coloring in descending id order (a lower-id neighbour always waits
-    on its higher-id side, so at coloring time the colored neighbour
-    set IS the higher-id set), which is what makes it gateable against
-    a sequential-replay oracle. Round count = longest monotone-id
-    dependency path + 1; the caller pins max_rounds from topology and
-    the operator RAISES if any vertex is left uncolored.
-
-    edges: (src, dst) with BOTH directions present. Returns (v, color).
-    Each round is one edge join + one per-vertex aggregate (all-ready
-    test + used-color set) — vertex-partitioned shuffles, no driver
-    data movement, the Luby/JP shape MPI codes use, as DataFrames."""
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    nodes = e.select(F.col("src").alias("v")).distinct()
-    state = nodes.select("v", F.lit(None).cast("long").alias("color")).localCheckpoint(
-        eager=True
-    )
-    # true mex (ADVICE r07): smallest color in 0..|used| absent from the
-    # used set — by pigeonhole one always exists, for ANY degree. The
-    # previous fixed CASE chain fell through to 6, silently issuing a
-    # duplicate color on degree>=8 inputs.
-    mex = (
-        "array_min(filter(sequence(0L, cast(size(used) as long)),"
-        " i -> NOT array_contains(used, i)))"
-    )
-    for _ in range(max_rounds):
-        colored = state.filter(F.col("color").isNotNull())
-        uncol = state.filter(F.col("color").isNull()).select("v")
-        nb = (
-            uncol.join(e, uncol.v == e.src)
-            .select("v", F.col("dst").alias("w"))
-            .join(
-                state.select(F.col("v").alias("w"), F.col("color").alias("wc")),
-                "w",
-            )
-        )
-        ready = nb.groupBy("v").agg(
-            F.min(
-                F.when(F.col("w") > F.col("v"), F.col("wc").isNotNull().cast("int"))
-            ).alias("all_higher_done"),
-            F.collect_set(F.when(F.col("w") > F.col("v"), F.col("wc"))).alias("used"),
-        )
-        newly = ready.filter(
-            F.col("all_higher_done").isNull() | (F.col("all_higher_done") == 1)
-        ).select("v", F.expr(mex).alias("color"))
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        state = (
-            colored.unionByName(newly)
-            .unionByName(
-                state.filter(F.col("color").isNull())
-                .join(newly.select("v"), "v", "left_anti")
-                .select("v", F.col("color"))
-            )
-            .observe(obs, F.sum(F.col("color").isNull().cast("long")).alias("left"))
-            .localCheckpoint(eager=True)
-        )
-        if (obs.get["left"] or 0) == 0:
-            break
-    n_uncolored = state.filter(F.col("color").isNull()).count()
-    if n_uncolored:
-        raise RuntimeError(
-            f"jones_plassmann_color left {n_uncolored} vertices uncolored after "
-            f"{max_rounds} rounds — dependency path exceeds max_rounds"
-        )
-    return state
-
-
-def greedy_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
-    """Maximal independent set by deterministic Luby-style rounds with
-    STATIC id priorities (Luby 1986 with fixed instead of random
-    priorities): every round, all alive vertices that are local minima
-    among their alive neighbours join the MIS simultaneously, and
-    their neighbourhoods leave the pool. With unique static priorities
-    this is EXACTLY the sequential greedy MIS in ascending id order
-    (a vertex's fate depends only on smaller-id neighbours), which
-    makes the parallel schedule gateable against a sequential replay —
-    the same equivalence jones_plassmann_color leans on.
-
-    edges: (src, dst) with BOTH directions present. Returns (v) rows —
-    the MIS members. Each round is one edge join + a per-vertex min +
-    one semi/anti join; rounds = longest ascending-id dependency
-    chain. RAISES if the pool is not drained within max_rounds."""
-    from pyspark.sql import Observation
-
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    alive = e.select(F.col("src").alias("v")).distinct().localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    mis = spark.createDataFrame([], "v long")
-    for _ in range(max_rounds):
-        nb = alive.join(e, alive.v == e.src).select("v", F.col("dst").alias("w"))
-        nb_alive = nb.join(
-            alive.select(F.col("v").alias("w")), "w", "left_semi"
-        )
-        minnb = nb_alive.groupBy("v").agg(F.min("w").alias("mw"))
-        joiners = (
-            alive.join(minnb, "v", "left")
-            .filter(F.col("mw").isNull() | (F.col("mw") > F.col("v")))
-            .select("v")
-        )
-        mis = mis.unionByName(joiners).localCheckpoint(eager=True)
-        killed = (
-            nb.join(joiners.select(F.col("v").alias("w")), "w", "left_semi")
-            .select("v")
-            .distinct()
-        )
-        obs = Observation()
-        alive = (
-            alive.join(joiners, "v", "left_anti")
-            .join(killed, "v", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("left"))
-            .localCheckpoint(eager=True)
-        )
-        if (obs.get["left"] or 0) == 0:
-            return mis
-    raise RuntimeError(f"greedy_mis: pool not drained in {max_rounds} rounds")

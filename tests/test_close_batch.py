@@ -1,15 +1,9 @@
-"""Close-batch operators: SNM blocking, bidirectional BFS, result cache."""
-
-import random
+"""Close-batch operators: SNM blocking, result cache."""
 
 import pytest
 
 from osm_admin_boundary_conflation_spark.operators.entity_resolution import (
     sorted_neighborhood_pairs,
-)
-from osm_admin_boundary_conflation_spark.operators.graph import (
-    bidirectional_bfs_distance,
-    bfs_hops,
 )
 from osm_admin_boundary_conflation_spark.plans import result_cache as RC
 from osm_admin_boundary_conflation_spark.sources import snapshot_table as ST
@@ -29,25 +23,6 @@ def test_snm_pairs_match_single_window(spark):
         for j in range(i + 1, min(i + 3, len(ranked)))
     }
     assert got == want
-
-
-def test_bidir_bfs_matches_one_sided(spark):
-    rng = random.Random(13)
-    edges = [(rng.randrange(0, 50), rng.randrange(0, 50)) for _ in range(120)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    hops = {r.id: r.hop for r in bfs_hops(df, source=3, max_hops=20).collect()}
-    for target in (7, 21, 42):
-        want = hops.get(target)
-        got = bidirectional_bfs_distance(df, source=3, target=target, max_hops=20)
-        assert got == want
-
-
-def test_bidir_bfs_disconnected_none(spark):
-    df = spark.createDataFrame([(0, 1), (5, 6)], "src long, dst long")
-    assert bidirectional_bfs_distance(df, 0, 6, max_hops=5) is None
-    assert bidirectional_bfs_distance(df, 0, 1, max_hops=5) == 1
-    assert bidirectional_bfs_distance(df, 0, 0, max_hops=5) == 0
 
 
 def test_result_cache_lifecycle(spark, tmp_path):

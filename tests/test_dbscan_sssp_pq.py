@@ -1,4 +1,4 @@
-"""DBSCAN / weighted SSSP / product-quantization unit coverage.
+"""DBSCAN / product-quantization unit coverage.
 
 Differential style: the blocked/distributed implementation vs a brute
 python recomputation on the same small deterministic inputs.
@@ -12,7 +12,6 @@ from osm_admin_boundary_conflation_spark.operators.dbscan import (
     dbscan,
     eps_neighbor_pairs,
 )
-from osm_admin_boundary_conflation_spark.operators.graph import sssp
 from osm_admin_boundary_conflation_spark.operators import pq as PQ
 
 
@@ -121,64 +120,6 @@ def test_dbscan_differential_random(spark):
     df = spark.createDataFrame(pts, "id long, x long, y long")
     got = {r.id: (r.role, r.cluster_id) for r in dbscan(df, eps=9, min_pts=4).collect()}
     assert got == _dbscan_brute(pts, 9, 4)
-
-
-# --------------------------------------------------------------------------
-# sssp
-# --------------------------------------------------------------------------
-
-
-def _dijkstra(edges, src):
-    import heapq
-
-    adj = {}
-    for u, v, w in edges:
-        adj.setdefault(u, []).append((v, w))
-    dist = {src: 0}
-    pq = [(0, src)]
-    while pq:
-        d, u = heapq.heappop(pq)
-        if d > dist.get(u, 1 << 60):
-            continue
-        for v, w in adj.get(u, []):
-            if d + w < dist.get(v, 1 << 60):
-                dist[v] = d + w
-                heapq.heappush(pq, (d + w, v))
-    return dist
-
-
-def test_sssp_matches_dijkstra(spark):
-    rng = random.Random(3)
-    edges = [
-        (u, rng.randrange(0, 40), rng.randrange(1, 9))
-        for u in range(40)
-        for _ in range(2)
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long, w long")
-    got = {r.id: r.dist for r in sssp(df, source=0, max_rounds=40).collect()}
-    assert got == _dijkstra(edges, 0)
-
-
-def test_sssp_prefers_cheap_multi_hop(spark):
-    # direct edge w=10 vs 3-hop path w=1+1+1
-    edges = [(0, 9, 10), (0, 1, 1), (1, 2, 1), (2, 9, 1)]
-    df = spark.createDataFrame(edges, "src long, dst long, w long")
-    got = {r.id: r.dist for r in sssp(df, source=0, max_rounds=6).collect()}
-    assert got[9] == 3
-
-
-def test_sssp_unreachable_absent_and_nonconvergence_raises(spark):
-    edges = [(0, 1, 1), (5, 6, 1)]
-    df = spark.createDataFrame(edges, "src long, dst long, w long")
-    got = {r.id: r.dist for r in sssp(df, source=0, max_rounds=4).collect()}
-    assert got == {0: 0, 1: 1}
-    # a 5-hop chain cannot converge in 3 rounds
-    chain = [(i, i + 1, 1) for i in range(5)]
-    cdf = spark.createDataFrame(chain, "src long, dst long, w long")
-    import pytest
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        sssp(cdf, source=0, max_rounds=3)
 
 
 # --------------------------------------------------------------------------

@@ -185,21 +185,6 @@ def test_ivf_postings_probe_is_partition_pruned(spark, tmp_path):
     assert probe.count() == 10
 
 
-def test_bfs_hops_line_and_unreachable(spark):
-    from osm_admin_boundary_conflation_spark.operators.graph import bfs_hops
-
-    # line 0-1-2-3 plus an island 10-11
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (10, 11)], "src long, dst long"
-    )
-    got = {r.id: r.hop for r in bfs_hops(edges, source=0, max_hops=10).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3}  # island unreachable, absent
-
-    # hop cap truncates
-    got2 = {r.id: r.hop for r in bfs_hops(edges, source=0, max_hops=2).collect()}
-    assert got2 == {0: 0, 1: 1, 2: 2}
-
-
 def test_chunks_col_matches_python_reference():
     """Hypothesis differential: _chunks_col ≡ the plain-python chunker
     on arbitrary word soups (spacing, case, length)."""
@@ -298,7 +283,7 @@ def test_cc_star_deep_path_converges_fast(spark):
 
 def test_cc_fixpoint_needs_no_extra_driver_action(spark, monkeypatch):
     """The convergence check rides the checkpoint job via observe — CC
-    and BFS must issue NO separate count()/isEmpty() driver action per
+    must issue NO separate count()/isEmpty() driver action per
     round (absolute job counts are AQE/broadcast-noisy; this asserts
     the action shape directly)."""
     from pyspark.sql import DataFrame
@@ -313,52 +298,3 @@ def test_cc_fixpoint_needs_no_extra_driver_action(spark, monkeypatch):
     out = connected_components(nodes, edges, max_iter=10)
     got = {r.id: r.cluster_id for r in out.collect()}
     assert set(got.values()) == {0}
-
-    from osm_admin_boundary_conflation_spark.operators.graph import bfs_hops
-
-    hops = {r.id: r.hop for r in bfs_hops(edges, source=0, max_hops=10).collect()}
-    assert hops == {0: 0, 1: 1, 2: 2, 3: 3}
-
-
-def test_triangle_wedges_degree_bounded_on_star(spark):
-    """Star graph K_{1,n}: degree-ordered orientation points every leaf
-    at the hub, so the hub generates ZERO wedges — wedge volume stays
-    O(E), where an id-ordered pivot on a hub with id 0 would emit
-    (n choose 2). Also: no triangles."""
-    from osm_admin_boundary_conflation_spark.operators.graph import (
-        count_triangles,
-        degree_ordered_wedges,
-        orient_by_degree,
-    )
-
-    n = 60
-    # hub id 0 (the adversarial case for id-ordering: lowest id, highest degree)
-    e = spark.createDataFrame([(0, i) for i in range(1, n + 1)], "a long, b long")
-    o = orient_by_degree(e)
-    # every edge must point leaf -> hub
-    assert o.filter(F.col("src") == 0).count() == 0
-    assert degree_ordered_wedges(o).count() == 0
-    assert count_triangles(e).first().n_triangles == 0
-
-
-def test_triangle_count_matches_bruteforce(spark):
-    """Differential on a random graph: degree-ordered count equals the
-    O(n^3) python reference."""
-    import itertools
-    import random
-
-    rng = random.Random(13)
-    pairs = set()
-    while len(pairs) < 80:
-        a, b = rng.randrange(40), rng.randrange(40)
-        if a != b:
-            pairs.add((min(a, b), max(a, b)))
-    expect = sum(
-        1
-        for x, y, z in itertools.combinations(range(40), 3)
-        if (x, y) in pairs and (y, z) in pairs and (x, z) in pairs
-    )
-    from osm_admin_boundary_conflation_spark.operators.graph import count_triangles
-
-    e = spark.createDataFrame(sorted(pairs), "a long, b long")
-    assert count_triangles(e).first().n_triangles == expect

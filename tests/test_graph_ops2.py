@@ -2,42 +2,8 @@
 
 import pytest
 
-from osm_admin_boundary_conflation_spark.operators.graph import (
-    k_core,
-    label_propagation,
-    temporal_reachability,
-)
+from osm_admin_boundary_conflation_spark.operators.graph import temporal_reachability
 from osm_admin_boundary_conflation_spark.sources import snapshot_table as ST
-
-
-def test_k_core_peels_tail(spark):
-    # triangle 0-1-2 with k=2 core, plus a pendant chain 2-3-4
-    edges = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r.id, r.deg) for r in k_core(df, k=2).collect()}
-    assert got == {(0, 2), (1, 2), (2, 2)}
-
-
-def test_k_core_empty_result(spark):
-    df = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
-    assert k_core(df, k=2).count() == 0
-
-
-def test_label_propagation_clamps_seeds_and_ties(spark):
-    # path 0-1-2; seeds 0 -> 7, 2 -> 3. node 1 hears both -> min label 3
-    edges = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
-    nodes = spark.createDataFrame([(0,), (1,), (2,)], "id long")
-    seeds = spark.createDataFrame([(0, 7), (2, 3)], "id long, label long")
-    got = {(r.id, r.label) for r in label_propagation(nodes, seeds, edges, rounds=2).collect()}
-    assert got == {(0, 7), (1, 3), (2, 3)}
-
-
-def test_label_propagation_unreached_minus_one(spark):
-    edges = spark.createDataFrame([(0, 1), (5, 6)], "src long, dst long")
-    nodes = spark.createDataFrame([(i,) for i in (0, 1, 5, 6)], "id long")
-    seeds = spark.createDataFrame([(0, 2)], "id long, label long")
-    got = {(r.id, r.label) for r in label_propagation(nodes, seeds, edges, rounds=3).collect()}
-    assert got == {(0, 2), (1, 2), (5, -1), (6, -1)}
 
 
 def test_temporal_reachability_respects_time(spark):

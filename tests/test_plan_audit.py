@@ -1,5 +1,10 @@
-"""tools/plan_audit.summarize on literal executed-plan strings (no Spark)."""
+"""tools/plan_audit.summarize on literal executed-plan strings, and the
+query-name lists the tools keep (no Spark)."""
 
+import bench
+import bench_extra
+from osm_admin_boundary_conflation_spark.queries import QUERIES
+from tools import plan_audit
 from tools.plan_audit import summarize
 
 # extract_text chained into extract_geo AND returned on its own: the
@@ -43,3 +48,19 @@ def test_inmem_counts_cached_relation_prints():
     assert summarize(_NESTED_CACHE)["inmem"] == 3
     assert summarize(_FUSED)["inmem"] == 0
     assert summarize("+- *(1) Scan ExistingRDD[way_id#1]")["inmem"] == 0
+
+
+def test_tool_name_lists_name_registered_queries():
+    """A query deleted from the registry must leave every tool list too:
+    a stale name in a plan-audit set is silently never matched, and a
+    stale headline name fails only when the bench runs."""
+    lists = {
+        "plan_audit.HARNESS": plan_audit.HARNESS,
+        "plan_audit.NESTED_LOOP_SCALAR_OK": plan_audit.NESTED_LOOP_SCALAR_OK,
+        "plan_audit.INLINE_WORLD": plan_audit.INLINE_WORLD,
+        "plan_audit.CONFLATE_CHECKPOINTS": plan_audit.CONFLATE_CHECKPOINTS,
+        "bench.HEADLINE": bench.HEADLINE,
+        "bench_extra.HEADLINE": bench_extra.HEADLINE,
+    }
+    stale = [f"{k}: {n}" for k, names in lists.items() for n in sorted(names) if n not in QUERIES]
+    assert stale == [], "names not in the registry:\n  " + "\n  ".join(stale)

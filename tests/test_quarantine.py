@@ -45,6 +45,20 @@ def test_classify_blob_progressive_jpeg_is_parse_error():
     assert classify_blob(prog) == ("jpeg", "parse_error")
 
 
+def test_classify_blob_non_baseline_scan_header_is_bad_structure():
+    """A SOF0 frame whose SOS header names spectral band 5-9 at Ah/Al
+    2/1 is malformed for a baseline decoder (T.81 B.2.3 requires Ss=0,
+    Se=63, Ah=Al=0), not a clean image."""
+    from osm_admin_boundary_conflation_spark.operators import quarantine as M
+
+    blob = M.build_jpeg(5)
+    sos = blob.index(b"\xff\xda")
+    at = sos + 5 + 2 * blob[sos + 4]  # past length, Ns and the Ns entries
+    assert blob[at : at + 3] == b"\x00\x3f\x00"
+    bad = blob[:at] + b"\x05\x09\x21" + blob[at + 3 :]
+    assert classify_blob(bad) == ("jpeg", "bad_structure")
+
+
 def test_quarantine_scan_corpus_outcomes(spark):
     docs = spark.range(0, 60).selectExpr("id AS doc_id")
     got = {

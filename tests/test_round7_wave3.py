@@ -1,13 +1,9 @@
 """Unit/property tests for the round-7 wave-3 operators: suffix array
-prefix doubling, integer Haar lifting, Jones-Plassmann coloring,
-nearest-facility labeling, betweenness path counts, D8 flow
-accumulation. Each checks the operator against an independent pure-
+prefix doubling and D8 flow accumulation. Each checks the operator against an independent pure-
 Python derivation on randomized-but-seeded inputs — the oracle gates
 cover the corpus; these cover shapes the corpus does not reach."""
 
 import random
-
-import pyspark.sql.functions as F
 
 
 def _py_suffix_ranks(text: str) -> dict:
@@ -38,118 +34,6 @@ def test_suffix_array_matches_python_sort(spark):
             assert got[(doc_id, pos)] == rank, (doc_id, pos, text)
 
 
-def test_haar_roundtrip_random_arrays(spark):
-    from osm_admin_boundary_conflation_spark.operators.wavelet import (
-        haar_forward,
-        haar_inverse,
-    )
-
-    rng = random.Random(11)
-    rows = [(i, [rng.randint(0, 10_000) for _ in range(32)]) for i in range(50)]
-    df = spark.createDataFrame(rows, "id long, a array<long>")
-    s1, d1 = haar_forward("a", 16)
-    lvl = df.select("id", "a", s1.alias("s1"), d1.alias("d1"))
-    s2, d2 = haar_forward("s1", 8)
-    lvl = lvl.select("*", s2.alias("s2"), d2.alias("d2"))
-    rec = lvl.select("*", haar_inverse("s2", "d2", 8).alias("rs1"))
-    rec = rec.select("*", haar_inverse("rs1", "d1", 16).alias("ra"))
-    bad = rec.filter(F.col("ra") != F.col("a")).count()
-    assert bad == 0
-
-
-def test_jones_plassmann_is_proper_and_greedy(spark):
-    from osm_admin_boundary_conflation_spark.operators.graph import (
-        jones_plassmann_color,
-    )
-
-    rng = random.Random(3)
-    n = 60
-    und = set()
-    for _ in range(140):
-        a, b = rng.sample(range(n), 2)
-        und.add((min(a, b), max(a, b)))
-    edges = [(a, b) for a, b in und] + [(b, a) for a, b in und]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["v"]: r["color"] for r in jones_plassmann_color(df, max_rounds=60).collect()}
-    # proper coloring
-    for a, b in und:
-        assert got[a] != got[b]
-    # equals sequential greedy in descending-id order
-    import collections
-
-    adj = collections.defaultdict(set)
-    for a, b in und:
-        adj[a].add(b)
-        adj[b].add(a)
-    want = {}
-    nodes_in_graph = {v for e in und for v in e}
-    for v in sorted(nodes_in_graph, reverse=True):
-        used = {want[w] for w in adj[v] if w in want}
-        k = 0
-        while k in used:
-            k += 1
-        want[v] = k
-    assert {v: got[v] for v in nodes_in_graph} == want
-
-
-def test_nearest_facility_matches_dijkstra(spark):
-    import heapq
-
-    from osm_admin_boundary_conflation_spark.operators.graph import nearest_facility
-
-    rng = random.Random(5)
-    n = 80
-    edges = []
-    for u in range(n):
-        for v in rng.sample(range(n), 3):
-            if u != v:
-                edges.append((u, v, rng.randint(1, 9)))
-    df = spark.createDataFrame(edges, "src long, dst long, w long")
-    facs = [0, 7, 33]
-    got = {
-        r["id"]: (r["dist"], r["facility"])
-        for r in nearest_facility(df, facs, max_rounds=n).collect()
-    }
-    adj = {}
-    for s, d, w in edges:
-        adj.setdefault(s, []).append((d, w))
-    best = {f: (0, f) for f in facs}
-    pq = [(0, f, f) for f in facs]
-    heapq.heapify(pq)
-    while pq:
-        d, fac, u = heapq.heappop(pq)
-        if (d, fac) > best[u]:
-            continue
-        for v, w in adj.get(u, []):
-            cand = (d + w, fac)
-            if v not in best or cand < best[v]:
-                best[v] = cand
-                heapq.heappush(pq, (d + w, fac, v))
-    assert got == best
-
-
-def test_betweenness_star_and_path(spark):
-    from osm_admin_boundary_conflation_spark.operators.graph import (
-        betweenness_path_counts,
-    )
-
-    # path 0-1-2-3: through-counts are the textbook 2*(k)*(n-1-k)
-    path = [(i, i + 1) for i in range(3)]
-    edges = path + [(b, a) for a, b in path]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["v"]: r["through_paths"]
-        for r in betweenness_path_counts(df, max_rounds=4).collect()
-    }
-    # endpoints have zero through-paths and are simply absent from the agg
-    assert {v: got.get(v, 0) for v in range(4)} == {
-        0: 0,
-        1: 2 * 1 * 2,
-        2: 2 * 2 * 1,
-        3: 0,
-    }
-
-
 def test_d8_flow_accumulation_line(spark):
     from osm_admin_boundary_conflation_spark.operators.raster import (
         d8_flow_accumulation,
@@ -164,177 +48,6 @@ def test_d8_flow_accumulation_line(spark):
         for r in d8_flow_accumulation(cells, rounds=8).collect()
     }
     assert got == {i: 8 - i for i in range(8)}
-
-
-def test_ntt_convolution_random(spark):
-    from osm_admin_boundary_conflation_spark.operators.ntt import P, ntt_convolve
-
-    rng = random.Random(2)
-    rows, truth = [], {}
-    for k in range(15):
-        a = [rng.randint(0, 10**6) for _ in range(32)] + [0] * 32
-        b = [rng.randint(0, 10**6) for _ in range(32)] + [0] * 32
-        sb = [0] * 64
-        for i in range(32):
-            for j in range(32):
-                sb[i + j] = (sb[i + j] + a[i] * b[j]) % P
-        rows.append((k, a, b))
-        truth[k] = sb
-    df = spark.createDataFrame(rows, "id long, a array<long>, b array<long>")
-    got = {r["id"]: r["c"] for r in ntt_convolve(df, "a", "b", "c").select("id", "c").collect()}
-    assert got == truth
-
-
-def test_isotonic_random_vs_python(spark):
-    from osm_admin_boundary_conflation_spark.operators.isotonic import (
-        LCM_1_31,
-        isotonic_fit,
-    )
-
-    rng = random.Random(9)
-    rows = []
-    truth = {}
-    for k in range(30):
-        ys = [rng.randint(0, 50) for _ in range(rng.randint(1, 31))]
-        rows += [(k, i, y) for i, y in enumerate(ys)]
-        pools = []
-        for y in ys:
-            pools.append((y, 1))
-            while len(pools) > 1 and pools[-2][0] * pools[-1][1] > pools[-1][0] * pools[-2][1]:
-                s2, l2 = pools.pop()
-                s1, l1 = pools.pop()
-                pools.append((s1 + s2, l1 + l2))
-        fits = []
-        for s, ln in pools:
-            fits.extend([s * (LCM_1_31 // ln)] * ln)
-        truth[k] = fits
-    df = spark.createDataFrame(rows, "k long, ord long, y long")
-    out = isotonic_fit(df, key="k", order="ord", value="y").collect()
-    got = {}
-    for r in out:
-        got.setdefault(r["k"], {})[r["rn"]] = r["fit_scaled"]
-    for k, fits in truth.items():
-        assert [got[k][i + 1] for i in range(len(fits))] == fits
-
-
-def test_stable_matching_random_vs_python(spark):
-    from osm_admin_boundary_conflation_spark.operators.matching import stable_matching
-
-    rng = random.Random(13)
-    n = 10
-    pm = {m: rng.sample(range(n), n) for m in range(n)}  # pm[m][rank] = woman
-    pw = {w: rng.sample(range(n), n) for w in range(n)}
-    rank_w = {w: {m: r for r, m in enumerate(pw[w])} for w in range(n)}
-    # python sequential GS (man-optimal)
-    nxt = [0] * n
-    fian = {}
-    while True:
-        free = [m for m in range(n) if m not in fian.values() and nxt[m] < n]
-        if not free:
-            break
-        f = free[0]
-        w = pm[f][nxt[f]]
-        nxt[f] += 1
-        cur = fian.get(w)
-        if cur is None or rank_w[w][f] < rank_w[w][cur]:
-            fian[w] = f
-    prefs_m = spark.createDataFrame(
-        [(m, w, r) for m in range(n) for r, w in enumerate(pm[m])],
-        "m long, w long, rm long",
-    ).coalesce(1)
-    prefs_w = spark.createDataFrame(
-        [(w, m, r) for w in range(n) for r, m in enumerate(pw[w])],
-        "w long, m long, rw long",
-    ).coalesce(1)
-    got = {
-        r["w"]: r["m"] for r in stable_matching(prefs_m, prefs_w, n=n).collect()
-    }
-    assert got == fian
-
-
-def test_greedy_mis_random_vs_python(spark):
-    import collections
-
-    from osm_admin_boundary_conflation_spark.operators.graph import greedy_mis
-
-    rng = random.Random(17)
-    n = 50
-    und = set()
-    for _ in range(120):
-        a, b = rng.sample(range(n), 2)
-        und.add((min(a, b), max(a, b)))
-    adj = collections.defaultdict(set)
-    for a, b in und:
-        adj[a].add(b)
-        adj[b].add(a)
-    nodes_in_graph = sorted({v for e in und for v in e})
-    want = set()
-    for v in nodes_in_graph:
-        if not (adj[v] & want):
-            want.add(v)
-    edges = [(a, b) for a, b in und] + [(b, a) for a, b in und]
-    df = spark.createDataFrame(edges, "src long, dst long").coalesce(1)
-    got = {r["v"] for r in greedy_mis(df, max_rounds=n).collect()}
-    assert got == want
-
-
-def test_betweenness_random_graph_vs_python(spark):
-    import collections
-
-    from osm_admin_boundary_conflation_spark.operators.graph import (
-        betweenness_path_counts,
-    )
-
-    rng = random.Random(23)
-    n = 24
-    und = set()
-    for _ in range(40):
-        a, b = rng.sample(range(n), 2)
-        und.add((min(a, b), max(a, b)))
-    adj = collections.defaultdict(list)
-    for a, b in und:
-        adj[a].append(b)
-        adj[b].append(a)
-    nodes = sorted({v for e in und for v in e})
-
-    def bfs(s):
-        d = {s: 0}
-        sig = {s: 1}
-        q = [s]
-        for u in q:
-            for v in adj[u]:
-                if v not in d:
-                    d[v] = d[u] + 1
-                    sig[v] = 0
-                    q.append(v)
-                if d[v] == d[u] + 1:
-                    sig[v] += sig[u]
-        return d, sig
-
-    D, S = {}, {}
-    for s in nodes:
-        d, sig = bfs(s)
-        for v in nodes:
-            if v in d:
-                D[(s, v)] = d[v]
-                S[(s, v)] = sig[v]
-    want = collections.defaultdict(int)
-    for s in nodes:
-        for t in nodes:
-            if (s, t) not in D:
-                continue
-            for v in nodes:
-                if v == s or v == t:
-                    continue
-                if (s, v) in D and (v, t) in D and D[(s, v)] + D[(v, t)] == D[(s, t)]:
-                    want[v] += S[(s, v)] * S[(v, t)]
-    edges = [(a, b) for a, b in und] + [(b, a) for a, b in und]
-    df = spark.createDataFrame(edges, "src long, dst long").coalesce(1)
-    got = {
-        r["v"]: r["through_paths"]
-        for r in betweenness_path_counts(df, max_rounds=n).collect()
-    }
-    assert {v: got.get(v, 0) for v in nodes} == {v: want.get(v, 0) for v in nodes}
 
 
 def test_d8_flow_accumulation_random_dem_vs_python(spark):

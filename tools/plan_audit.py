@@ -42,10 +42,8 @@ HARNESS = {
     "ann_ivf_persisted",
     "dedup_clusters",
     "dedup_keep_representatives",
-    "bfs_hops",
     "dense_index_assign",
     "segment_tiles",
-    "pagerank_integer",
     "zip_csv_scan",
     "warc_roundtrip",
     "stream_warc_ingest",
@@ -94,9 +92,7 @@ NESTED_LOOP_SCALAR_OK = {
     "merge_three_clause",  # 1-row action counts x 1-row result invariants scalar join
     "consistent_hash_rebalance",  # keys x constant 40-row broadcast ring (bounded multiplier)
     "k_anonymity_suppress",  # 1-row census x 1-row min-group scalar joins
-    "hub_removal_resilience",  # 1-row hub ids x 1-row before x 1-row after scalar joins
     "retrieval_metrics",  # candidates x constant 5-query broadcast (bounded multiplier)
-    "modularity_score",  # communities x 1-row edge-count scalar join
     "seasonal_decompose_daily",  # 1-row grand-mean scalar join; day spine is a bounded artifact
     "skew_diagnosis",  # 1-row totals x 1-row gini scalar joins (ranks are two-phase bucket ranks)
     "pmi_pairs_scaled",  # 1-row corpus-N scalar broadcast
@@ -126,7 +122,6 @@ NESTED_LOOP_SCALAR_OK = {
     "geotag_knn",
     "raster_tile_assign",
     "tfidf_topterms",
-    "triangle_count",
     "twophase_lookup",
     "segment_tiles",
     "conflate_verdicts",
