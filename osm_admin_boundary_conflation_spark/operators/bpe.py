@@ -27,7 +27,7 @@ Scale shape (100 TB): each iteration is a map-side explode of adjacent
 pairs (O(chars) rows but combine-heavy: the groupBy key space is at
 most (26+K)² pairs, so partial aggregation collapses each partition to
 a few hundred rows before the shuffle), ONE driver-side argmax collect
-of a single row (same bounded shape as Lloyd's k-means in kmeans.py),
+of a single row (the bounded shape of a Lloyd's k-means iteration),
 and a map-only replace. K is a fixed parameter — a static, resumable
 DAG. Real tokenizer training (GPT-2 BPE, SentencePiece) is this exact
 loop with word-boundary pre-splitting; the pair statistic and merge

@@ -14,10 +14,9 @@ Everything here is exact integer arithmetic over milli-quantized
 components (float32 -> double widening is exact, round(v*1000) is the
 engine's established quantization; embedding_quantized_norms gates it),
 so distances are cross-engine reproducible BIGINTs — no float-summation
-ordering anywhere. Codebook TRAINING is per-subspace k-means and is
-delegated to operators/kmeans.py (gated by kmeans_clusters); here the
-codebook is an explicit input, as it is in a real index build where
-training runs once on a sample and encode/scan run at corpus scale.
+ordering anywhere. Codebook TRAINING (per-subspace k-means) is out of
+scope: the codebook is an explicit input, as it is in a real index build
+where training runs once on a sample and encode/scan run at corpus scale.
 
 Scale shape: encode is {explode m subspaces} x {broadcast k*m centroid
 rows} -> groupBy argmin — linear in corpus, map-side joins only. The

@@ -19,7 +19,8 @@ keys). The Spark-native equivalents:
 
 No Spark job for the metrics: the rows are read from the committed
 part-file footers. `part-NNNNN-*` is written by write task NNNNN, so
-partition_id is the stage's real output layout.
+partition_id is the stage's real output layout. Nor for reading a
+recomputed stage back: it is read with the schema it was written with.
 """
 
 from __future__ import annotations
@@ -79,10 +80,12 @@ class StageRunner:
             self.resumed.append(name)
             return self.spark.read.parquet(path)
         t0 = time.time()
-        build().write.mode("overwrite").parquet(path)
+        df = build()
+        df.write.mode("overwrite").parquet(path)
         self.recomputed.append(name)
         self._log_metrics(name, path, wall_s=time.time() - t0)
-        return self.spark.read.parquet(path)
+        # the written schema is known, so the read starts no inference job
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def _log_metrics(self, stage: str, path: str, wall_s: float) -> None:
         rows: dict[int, int] = {}

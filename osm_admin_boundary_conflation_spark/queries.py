@@ -2029,50 +2029,6 @@ def q_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "kmeans_clusters",
-    oracle="""
-WITH ev AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS i, CAST(unnest(embedding) AS DOUBLE) AS v
-  FROM embeddings
-),
-cent0 AS (SELECT vec_id AS cid, i, v AS cv FROM ev WHERE vec_id < 8),
-d2_1 AS (
-  SELECT e.vec_id, c.cid, sum((e.v - c.cv) * (e.v - c.cv)) AS d2
-  FROM ev e JOIN cent0 c ON e.i = c.i GROUP BY e.vec_id, c.cid
-),
-a1 AS (
-  SELECT vec_id, cid FROM d2_1
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1
-),
-cent1 AS (
-  SELECT a.cid, e.i, avg(e.v) AS cv
-  FROM ev e JOIN a1 a ON e.vec_id = a.vec_id GROUP BY a.cid, e.i
-),
-d2_2 AS (
-  SELECT e.vec_id, c.cid, sum((e.v - c.cv) * (e.v - c.cv)) AS d2
-  FROM ev e JOIN cent1 c ON e.i = c.i GROUP BY e.vec_id, c.cid
-),
-a2 AS (
-  SELECT vec_id, cid FROM d2_2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1
-)
-SELECT cid, count(*) AS n_members, min(vec_id) AS min_vec, max(vec_id) AS max_vec
-FROM a2 GROUP BY cid
-""",
-)
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd's k-means (k=8, 2 fixed iterations) — the IVF
-    index-training path as pure DataFrame ops (operators/kmeans.py);
-    the oracle unrolls the same two assignment/update rounds in SQL.
-    Output is integers only (counts + id extremes), so cross-engine
-    float-summation ordering cannot perturb the compare."""
-    from .operators import kmeans as KM
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return KM.cluster_stats(emb, k=8, iterations=2)
-
-
-@q(
     "ann_ivf_multiprobe",
     oracle="""
 WITH ev AS (
@@ -7222,60 +7178,6 @@ def q_pages_text_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "per_group_ols",
-    oracle=r"""
-WITH d AS (
-  SELECT source, n_chars AS y,
-         len(string_split_regex(trim(lower(text)), '\s+')) AS x
-  FROM documents
-),
-s AS (
-  SELECT source, count(*) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM d GROUP BY source
-)
-SELECT source, n,
-       n * sxy - sx * sy AS slope_num,
-       n * sxx - sx * sx AS slope_den,
-       sy * sxx - sx * sxy AS intercept_num
-FROM s
-""",
-)
-def q_per_group_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group least-squares regression (chars-per-token line per
-    source) carried as EXACT INTEGER numerators/denominators:
-    slope = (nΣxy - ΣxΣy) / (nΣxx - Σx²), intercept likewise over the
-    same denominator — the closed-form OLS solution is a pure
-    aggregate, so per-group model fitting needs no pandas, no solver,
-    and no float accumulation (divide once at the consumer). One
-    combiner-friendly groupBy; the distributed-ML shape for the
-    embarrassingly-grouped case (one small model per key)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = docs.select(
-        "source",
-        F.col("n_chars").alias("y"),
-        F.size(F.split(F.trim(F.lower("text")), r"\s+")).alias("x"),
-    )
-    s = d.groupBy("source").agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    return s.select(
-        "source",
-        "n",
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).alias("slope_num"),
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).alias("slope_den"),
-        (F.col("sy") * F.col("sxx") - F.col("sx") * F.col("sxy")).alias(
-            "intercept_num"
-        ),
-    )
-
-
-@q(
     "bitmap_index_ops",
     oracle=r"""
 WITH lb AS (
@@ -9131,74 +9033,6 @@ def q_table_checksum_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "winsorized_stats",
-    oracle=r"""
-WITH d AS (SELECT DISTINCT doc_id, source, n_chars FROM documents),
-rk AS (
-  SELECT source, n_chars,
-         row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rn,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM d
-),
-cuts AS (
-  SELECT source,
-         max(CASE WHEN rn = (n - 1) // 10 + 1 THEN n_chars END) AS p10,
-         max(CASE WHEN rn = ((n - 1) * 9) // 10 + 1 THEN n_chars END) AS p90
-  FROM rk GROUP BY source
-),
-clipped AS (
-  SELECT d.source, least(greatest(d.n_chars, c.p10), c.p90) AS v
-  FROM d JOIN cuts c USING (source)
-)
-SELECT source, count(*) AS n_docs, CAST(sum(v) AS BIGINT) AS winsorized_sum,
-       CAST(min(v) AS BIGINT) AS lo, CAST(max(v) AS BIGINT) AS hi
-FROM clipped GROUP BY source
-""",
-)
-def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WINSORIZED ROBUST STATISTICS: per-source P10/P90 cut points as
-    EXACT ORDER STATISTICS (row_number rank with a doc_id tiebreak —
-    discrete data values, never an interpolated float, so clipping and
-    sums stay integer-exact on both engines), then the outlier-clipped
-    census a robust quality-score aggregation needs. One window + one
-    broadcast-back join; the scale path for the cut points is
-    approxQuantile (tested for group_quantiles) when an exact
-    per-group sort is too expensive."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "source", "n_chars")
-        .distinct()
-    )
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    rk = docs.select(
-        "source",
-        "n_chars",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("source")).alias("n"),
-    )
-    cuts = rk.groupBy("source").agg(
-        F.max(
-            F.when(F.col("rn") == ((F.col("n") - 1) / 10).cast("long") + 1, F.col("n_chars"))
-        ).alias("p10"),
-        F.max(
-            F.when(
-                F.col("rn") == ((F.col("n") - 1) * 9 / 10).cast("long") + 1,
-                F.col("n_chars"),
-            )
-        ).alias("p90"),
-    )
-    clipped = docs.join(F.broadcast(cuts), "source").select(
-        "source", F.least(F.greatest("n_chars", "p10"), "p90").alias("v")
-    )
-    return clipped.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("v").alias("winsorized_sum"),
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-    )
-
-
-@q(
     "scd2_asof_enrich",
     oracle=r"""
 WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id FROM events),
@@ -10451,7 +10285,7 @@ def q_global_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries — reproducible across runs, unlike repartitionByRange's
     reservoir sample); (2) a window partitioned BY BUCKET ranks
     locally in parallel; (3) per-bucket counts (≤ ~40 rows) come back
-    to the driver — the same bounded collect shape as Lloyd's k-means —
+    to the driver — the bounded collect shape of a bpe_train_merges step —
     become cumulative offsets, and broadcast-join back so
     global_rank = bucket_offset + local_rank. The oracle is the
     single-window definition; the engine plan must produce identical
@@ -11208,7 +11042,7 @@ WHERE rn <= 10
 def q_pq_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators/pq.py): m=2 subspaces over the
     64-dim embeddings, k=4 codebook (the milli-quantized subvectors of
-    vecs 0..3 — training itself is the gated kmeans_clusters path),
+    vecs 0..3 — codebook training is out of scope, see operators/pq.py),
     asymmetric-distance top-10 for query vec 0 with the candidate's
     EXACT integer distance alongside, so the gate also exposes the
     quantization error ADC trades for 32x memory compression. All
@@ -12149,79 +11983,6 @@ def q_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "theil_sen_trend",
-    oracle=r"""
-WITH daily AS (
-  SELECT event_type, date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-         count(*) AS cnt
-  FROM events GROUP BY event_type, day
-),
-pairs AS (
-  SELECT a.event_type,
-         CAST(b.cnt - a.cnt AS DOUBLE) / (b.day - a.day) AS slope
-  FROM daily a JOIN daily b
-    ON a.event_type = b.event_type AND a.day < b.day
-),
-ranked AS (
-  SELECT event_type, slope,
-         row_number() OVER (PARTITION BY event_type ORDER BY slope) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM pairs
-),
-med AS (
-  SELECT event_type, max(n) AS n_pairs,
-         avg(CASE WHEN rn IN ((n + 1) // 2, (n + 2) // 2) THEN slope END) AS m
-  FROM ranked GROUP BY event_type
-)
-SELECT event_type, CAST(n_pairs AS BIGINT) AS n_pairs, round(m, 6) AS slope_median
-FROM med
-""",
-)
-def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen robust trend per event type: the median of all pairwise
-    slopes of the daily count series — the outlier-immune trend
-    estimator (breakdown point 29%) a monitoring pipeline prefers over
-    OLS on spiky traffic. Slopes are one exact double division each;
-    the median is an ORDER-STATISTIC pick (avg of the two middles for
-    even counts, same two elements both engines), so no float summation
-    order enters. The pair join is per-group (days^2 within each
-    event_type, ~30 days), partitioned by type."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")).alias("day"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    a = daily.select("event_type", F.col("day").alias("da"), F.col("cnt").alias("ca"))
-    b = daily.select("event_type", F.col("day").alias("db"), F.col("cnt").alias("cb"))
-    pairs = a.join(b, "event_type").filter(F.col("da") < F.col("db")).select(
-        "event_type",
-        ((F.col("cb") - F.col("ca")).cast("double") / (F.col("db") - F.col("da"))).alias(
-            "slope"
-        ),
-    )
-    w = Window.partitionBy("event_type").orderBy("slope")
-    ranked = pairs.select(
-        "event_type",
-        "slope",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("event_type")).alias("n"),
-    )
-    lo = (F.col("n") + 1) / 2
-    hi = (F.col("n") + 2) / 2
-    med = ranked.groupBy("event_type").agg(
-        F.max("n").alias("n_pairs"),
-        F.avg(
-            F.when(
-                (F.col("rn") == F.floor(lo)) | (F.col("rn") == F.floor(hi)), F.col("slope")
-            )
-        ).alias("m"),
-    )
-    return med.select(
-        "event_type", F.col("n_pairs").cast("long"), F.round("m", 6).alias("slope_median")
-    )
-
-
-@q(
     "ppjoin_prefix_filter",
     oracle=r"""
 WITH corpus AS (
@@ -12661,90 +12422,6 @@ def q_sequence_pattern_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# md5-derived 60-bit ring/key hash (the engine's portable hash idiom)
-_CH_H = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-@q(
-    "consistent_hash_rebalance",
-    oracle=f"""
-WITH shards AS (SELECT 's' || CAST(unnest(range(5)) AS VARCHAR) AS shard),
-vn AS (SELECT unnest(range(8)) AS i),
-ring AS (
-  SELECT shard, {_CH_H.format(expr="'ring:' || shard || ':' || CAST(i AS VARCHAR)")} AS rh
-  FROM shards, vn
-),
-keys AS (
-  SELECT o_orderkey AS k, {_CH_H.format(expr="'k:' || CAST(o_orderkey AS VARCHAR)")} AS kh
-  FROM orders
-),
-assign1 AS (
-  SELECT k, kh,
-         coalesce(
-           (SELECT min_by(r.shard, r.rh) FROM ring r WHERE r.rh >= keys.kh),
-           (SELECT min_by(r.shard, r.rh) FROM ring r)) AS shard
-  FROM keys
-),
-assign2 AS (
-  SELECT k, kh,
-         coalesce(
-           (SELECT min_by(r.shard, r.rh) FROM ring r WHERE r.shard != 's2' AND r.rh >= keys.kh),
-           (SELECT min_by(r.shard, r.rh) FROM ring r WHERE r.shard != 's2')) AS shard
-  FROM keys
-)
-SELECT a1.shard AS old_shard, a2.shard AS new_shard, count(*) AS n_keys
-FROM assign1 a1 JOIN assign2 a2 USING (k)
-GROUP BY 1, 2
-""",
-)
-def q_consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consistent-hash ring assignment + single-shard decommission
-    (Karger et al. 1997): 5 shards x 8 virtual nodes, each key routed
-    to its ring successor (wrap to the global min). Removing s2 moves
-    ONLY s2's keys — every (old != s2) row lands on the old=new
-    diagonal, the minimal-movement property that makes the scheme the
-    shard-rebalancing standard. The ring is a 40-row broadcast; the
-    successor probe is a broadcast join + per-key min_by(struct), no
-    correlated subqueries engine-side. All hashes are the portable
-    md5->BIGINT idiom."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    mdh = lambda c: F.conv(F.substring(F.md5(F.encode(c, "UTF-8")), 1, 15), 16, 10).cast(  # noqa: E731
-        "long"
-    )
-    shards = spark.range(5).select(F.concat(F.lit("s"), F.col("id").cast("string")).alias("shard"))
-    ring = shards.crossJoin(spark.range(8).select(F.col("id").alias("i"))).select(
-        "shard",
-        mdh(
-            F.concat(F.lit("ring:"), F.col("shard"), F.lit(":"), F.col("i").cast("string"))
-        ).alias("rh"),
-    )
-    keys = orders.select(
-        F.col("o_orderkey").alias("k"),
-        mdh(F.concat(F.lit("k:"), F.col("o_orderkey").cast("string"))).alias("kh"),
-    )
-
-    def assign(ring_df, out):
-        probe = keys.crossJoin(F.broadcast(ring_df))
-        # successor = min rh >= kh; fall back to the ring's global min
-        succ = probe.groupBy("k").agg(
-            F.min(
-                F.when(F.col("rh") >= F.col("kh"), F.struct("rh", "shard"))
-            ).alias("s1"),
-            F.min(F.struct("rh", "shard")).alias("s0"),
-        )
-        return succ.select(
-            "k", F.coalesce(F.col("s1.shard"), F.col("s0.shard")).alias(out)
-        )
-
-    a1 = assign(ring, "old_shard")
-    a2 = assign(ring.filter(F.col("shard") != "s2"), "new_shard")
-    return (
-        a1.join(a2, "k")
-        .groupBy("old_shard", "new_shard")
-        .agg(F.count(F.lit(1)).alias("n_keys"))
-    )
-
-
 @q(
     "asof_forward_tolerance",
     oracle=r"""
@@ -12795,105 +12472,6 @@ def q_asof_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("val").alias("next_value"),
         F.col("val_ts").alias("next_us"),
     )
-
-
-@q(
-    "k_anonymity_suppress",
-    oracle=r"""
-WITH qi AS (
-  SELECT c_custkey AS id, c_nationkey AS nat, c_mktsegment AS seg,
-         CAST(round(CAST(c_acctbal AS DOUBLE) * 100) AS BIGINT) // 100000 AS bucket
-  FROM customer
-),
-g0 AS (
-  SELECT nat, seg, bucket, count(*) AS n FROM qi GROUP BY nat, seg, bucket
-),
-lvl0 AS (
-  SELECT q.id, q.nat, q.seg, q.bucket FROM qi q JOIN g0
-    ON q.nat = g0.nat AND q.seg = g0.seg AND q.bucket = g0.bucket
-  WHERE g0.n >= 4
-),
-rest AS (SELECT * FROM qi WHERE id NOT IN (SELECT id FROM lvl0)),
-g1 AS (
-  SELECT nat, bucket // 4 AS band, count(*) AS n FROM rest GROUP BY nat, band
-),
-lvl1 AS (
-  SELECT r.id, r.nat, r.bucket // 4 AS band FROM rest r JOIN g1
-    ON r.nat = g1.nat AND r.bucket // 4 = g1.band
-  WHERE g1.n >= 4
-),
-lvl2 AS (
-  SELECT id FROM rest WHERE id NOT IN (SELECT id FROM lvl1)
-),
-census AS (
-  SELECT 0 AS level, count(*) AS n_rows,
-         count(DISTINCT (nat, seg, bucket)) AS n_groups,
-         (SELECT min(n) FROM g0 WHERE n >= 4) AS min_group
-  FROM lvl0
-  UNION ALL
-  SELECT 1, count(*), count(DISTINCT (nat, band)),
-         (SELECT min(n) FROM g1 WHERE n >= 4)
-  FROM lvl1
-  UNION ALL
-  SELECT 2, count(*), 0, NULL FROM lvl2
-)
-SELECT CAST(level AS BIGINT) AS level, CAST(n_rows AS BIGINT) AS n_rows,
-       CAST(n_groups AS BIGINT) AS n_groups, CAST(min_group AS BIGINT) AS min_group
-FROM census
-""",
-)
-def q_k_anonymity_suppress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity enforcement (Sweeney 2002) with a generalization
-    ladder — the privacy gate a training-data release runs after PII
-    redaction: quasi-identifier groups (nation, segment, balance
-    bucket) of size >= k=4 release at level 0; the rest coarsen
-    (drop segment, 4x-wider band) and re-test at level 1; stragglers
-    suppress (level 2). Output census pins row/group counts per level
-    and the min released group size (>= k by construction). Two
-    groupBys + two anti-joins; at 100 TB each level is one shuffle on
-    the QI key."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    qi = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_nationkey").alias("nat"),
-        F.col("c_mktsegment").alias("seg"),
-        F.expr(
-            "CAST(round(CAST(c_acctbal AS DOUBLE) * 100) AS BIGINT) div 100000"
-        ).alias("bucket"),
-    )
-    g0 = qi.groupBy("nat", "seg", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    lvl0 = qi.join(g0.filter(F.col("n") >= 4), ["nat", "seg", "bucket"], "left_semi")
-    rest = qi.join(lvl0.select("id"), "id", "left_anti").withColumn(
-        "band", F.expr("bucket div 4")
-    )
-    g1 = rest.groupBy("nat", "band").agg(F.count(F.lit(1)).alias("n"))
-    lvl1 = rest.join(g1.filter(F.col("n") >= 4), ["nat", "band"], "left_semi")
-    lvl2 = rest.join(lvl1.select("id"), "id", "left_anti")
-    c0 = lvl0.agg(
-        F.lit(0).cast("long").alias("level"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("nat", "seg", "bucket").alias("n_groups"),
-    ).crossJoin(
-        F.broadcast(
-            g0.filter(F.col("n") >= 4).agg(F.min("n").cast("long").alias("min_group"))
-        )
-    )
-    c1 = lvl1.agg(
-        F.lit(1).cast("long").alias("level"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("nat", "band").alias("n_groups"),
-    ).crossJoin(
-        F.broadcast(
-            g1.filter(F.col("n") >= 4).agg(F.min("n").cast("long").alias("min_group"))
-        )
-    )
-    c2 = lvl2.agg(
-        F.lit(2).cast("long").alias("level"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.lit(0).cast("long").alias("n_groups"),
-        F.lit(None).cast("long").alias("min_group"),
-    )
-    return c0.unionByName(c1).unionByName(c2)
 
 
 @q(
@@ -13169,160 +12747,6 @@ def q_stream_staypoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "classification_eval",
-    oracle=f"""
-WITH {_LANG_SCORE_SQL},
-pred AS (
-  SELECT c.doc_id, d.lang AS truth,
-         CASE WHEN s_en = 0 AND s_sr = 0 AND s_de = 0 THEN 'und'
-              WHEN s_en >= s_sr AND s_en >= s_de THEN 'en'
-              WHEN s_sr >= s_de THEN 'sr'
-              ELSE 'de' END AS pred
-  FROM counted c JOIN documents d ON c.doc_id = d.doc_id
-),
-conf AS (SELECT truth, pred, count(*) AS n FROM pred GROUP BY truth, pred),
-tm AS (SELECT truth, sum(n) AS truth_total FROM conf GROUP BY truth),
-pm AS (SELECT pred, sum(n) AS pred_total FROM conf GROUP BY pred)
-SELECT c.truth, c.pred, CAST(c.n AS BIGINT) AS n,
-       CAST(tm.truth_total AS BIGINT) AS truth_total,
-       CAST(pm.pred_total AS BIGINT) AS pred_total,
-       round(CAST(c.n AS DOUBLE) / pm.pred_total, 6) AS cell_precision,
-       round(CAST(c.n AS DOUBLE) / tm.truth_total, 6) AS cell_recall
-FROM conf c JOIN tm USING (truth) JOIN pm USING (pred)
-""",
-)
-def q_classification_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classifier evaluation as a distributed op: run the REAL lang-id
-    heuristic (Arrow UDF) against the corpus's labeled truth and emit
-    the full confusion matrix with row/column marginals — diagonal
-    cells carry per-class precision (n / pred_total) and recall
-    (n / truth_total), each a single exact division. The shape every
-    model-quality gate in a data pipeline reduces to: one groupBy on
-    (truth, pred) plus two marginal re-aggs, all counts exact."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pred = docs.select(
-        F.col("lang").alias("truth"), U.lang_id_udf("text").alias("pred")
-    )
-    conf = pred.groupBy("truth", "pred").agg(F.count(F.lit(1)).alias("n"))
-    tm = conf.groupBy("truth").agg(F.sum("n").alias("truth_total"))
-    pm = conf.groupBy("pred").agg(F.sum("n").alias("pred_total"))
-    return (
-        conf.join(tm, "truth")
-        .join(pm, "pred")
-        .select(
-            "truth",
-            "pred",
-            "n",
-            "truth_total",
-            "pred_total",
-            F.round(F.col("n").cast("double") / F.col("pred_total"), 6).alias(
-                "cell_precision"
-            ),
-            F.round(F.col("n").cast("double") / F.col("truth_total"), 6).alias("cell_recall"),
-        )
-    )
-
-
-@q(
-    "retrieval_metrics",
-    oracle=r"""
-WITH ev AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-         CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000) AS BIGINT) AS v
-  FROM embeddings
-),
-q AS (SELECT vec_id AS qid, label AS qlabel, i, v FROM ev WHERE vec_id < 5),
-c AS (SELECT vec_id AS cid, label AS clabel, i, v FROM ev WHERE vec_id >= 5),
-dots AS (
-  SELECT q.qid, q.qlabel, c.cid, c.clabel, sum(q.v * c.v) AS dot
-  FROM q JOIN c USING (i) GROUP BY q.qid, q.qlabel, c.cid, c.clabel
-),
-ranked AS (
-  SELECT qid, qlabel, cid, clabel, dot,
-         row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid) AS rnk
-  FROM dots
-),
-rel_total AS (
-  SELECT q2.qid, count(*) AS n_rel_total
-  FROM (SELECT DISTINCT qid, qlabel FROM dots) q2
-  JOIN (SELECT DISTINCT cid, clabel FROM dots) c2 ON c2.clabel = q2.qlabel
-  GROUP BY q2.qid
-),
-top AS (SELECT * FROM ranked WHERE rnk <= 10),
-m AS (
-  SELECT qid,
-         coalesce(min(CASE WHEN clabel = qlabel THEN rnk END), 0) AS first_rel_rank,
-         sum(CASE WHEN clabel = qlabel AND rnk <= 5 THEN 1 ELSE 0 END) AS p_at_5_hits,
-         sum(CASE WHEN clabel = qlabel THEN 1 ELSE 0 END) AS rel_found_10
-  FROM top GROUP BY qid
-)
-SELECT m.qid AS query_id, CAST(m.first_rel_rank AS BIGINT) AS first_rel_rank,
-       CAST(CASE WHEN m.first_rel_rank = 0 THEN 0
-                 ELSE 2520 // m.first_rel_rank END AS BIGINT) AS mrr_scaled_2520,
-       CAST(m.p_at_5_hits AS BIGINT) AS p_at_5_hits,
-       CAST(m.rel_found_10 AS BIGINT) AS rel_found_10,
-       CAST(r.n_rel_total AS BIGINT) AS n_rel_total
-FROM m JOIN rel_total r USING (qid)
-""",
-)
-def q_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval EVALUATION over a real ranking: 5 query vectors score
-    all candidates by exact integer milli-quantized dot product, rank
-    top-10 per query, and compute MRR (scaled by lcm(1..10)/2 = 2520 so
-    reciprocal ranks stay integral), precision@5 hits, and recall@10
-    numerator/denominator against same-label relevance — the eval
-    harness an embedding/ANN stack runs per release. Per-query windows
-    partition by query id; nothing global."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = F.transform(F.col("embedding"), lambda c: F.round(c.cast("double") * 1000).cast("long"))
-    base = emb.select("vec_id", "label", qv.alias("qv"))
-    qs = base.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("label").alias("qlabel"), F.col("qv").alias("q")
-    )
-    cs = base.filter(F.col("vec_id") >= 5).select(
-        F.col("vec_id").alias("cid"), F.col("label").alias("clabel"), F.col("qv").alias("c")
-    )
-    dots = qs.crossJoin(cs).select(
-        "qid",
-        "qlabel",
-        "cid",
-        "clabel",
-        F.aggregate(
-            F.zip_with("q", "c", lambda a, b: a * b), F.lit(0).cast("long"), lambda acc, x: acc + x
-        ).alias("dot"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), "cid")
-    ranked = dots.select("*", F.row_number().over(w).alias("rnk"))
-    rel_total = (
-        qs.select("qid", "qlabel")
-        .join(cs.select("cid", "clabel"), qs.qlabel == cs.clabel)
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("n_rel_total"))
-    )
-    top = ranked.filter(F.col("rnk") <= 10)
-    rel = F.col("clabel") == F.col("qlabel")
-    m = top.groupBy("qid").agg(
-        F.coalesce(F.min(F.when(rel, F.col("rnk"))), F.lit(0)).alias("first_rel_rank"),
-        F.sum((rel & (F.col("rnk") <= 5)).cast("long")).alias("p_at_5_hits"),
-        F.sum(rel.cast("long")).alias("rel_found_10"),
-    )
-    return (
-        m.join(rel_total, "qid")
-        .select(
-            F.col("qid").alias("query_id"),
-            "first_rel_rank",
-            F.when(F.col("first_rel_rank") == 0, 0)
-            .otherwise(F.expr("2520 div first_rel_rank"))
-            .cast("long")
-            .alias("mrr_scaled_2520"),
-            "p_at_5_hits",
-            "rel_found_10",
-            "n_rel_total",
-        )
-    )
-
-
-@q(
     "sorted_neighborhood_pairs",
     oracle=r"""
 WITH l AS (
@@ -13375,82 +12799,6 @@ def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = sorted_neighborhood_pairs(rec, window=4)
     return pairs.filter(F.levenshtein("name_a", "name_b") <= 1).select(
         "ia", "ib", "ra", "rb"
-    )
-
-
-@q(
-    "seasonal_decompose_daily",
-    oracle=r"""
-WITH daily0 AS (
-  SELECT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day, count(*) AS y
-  FROM events GROUP BY day
-),
-bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM daily0),
-spine AS (SELECT unnest(range((SELECT lo FROM bounds), (SELECT hi FROM bounds) + 1)) AS day),
-daily AS (
-  SELECT s.day, COALESCE(d.y, 0) AS y FROM spine s LEFT JOIN daily0 d USING (day)
-),
-tr AS (
-  SELECT day, y,
-         CASE WHEN count(*) OVER w = 7
-              THEN CAST(sum(y) OVER w AS DOUBLE) / 7 END AS trend
-  FROM daily WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-),
-dow AS (
-  SELECT day % 7 AS dw, CAST(sum(y) AS DOUBLE) / count(*) AS dow_mean
-  FROM daily GROUP BY dw
-),
-grand AS (SELECT CAST(sum(y) AS DOUBLE) / count(*) AS g FROM daily)
-SELECT t.day, CAST(t.y AS BIGINT) AS y, round(t.trend, 6) AS trend,
-       round(d.dow_mean, 6) AS dow_mean,
-       round(t.y - t.trend - (d.dow_mean - grand.g), 6) AS resid
-FROM tr t JOIN dow d ON t.day % 7 = d.dw CROSS JOIN grand
-""",
-)
-def q_seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Additive seasonal decomposition of the daily event series:
-    centered 7-day moving-average trend (full windows only), synthetic
-    day-of-week means, residual y - trend - (dow_mean - grand_mean).
-    Every float is an exact-integer-sum divided ONCE, and the residual
-    expression is the same pinned op sequence on both engines, so the
-    decomposition is gateable where a loess/STL fit would not be. The
-    day spine closes gaps with zeros (a missing day IS zero traffic).
-    One window over the day spine, one dow groupBy."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    daily0 = ev.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")).alias("day")
-    ).agg(F.count(F.lit(1)).alias("y"))
-    bounds = daily0.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    spine = bounds.select(
-        F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("day")
-    )
-    daily = spine.join(daily0, "day", "left").select(
-        "day", F.coalesce("y", F.lit(0)).alias("y")
-    )
-    w = Window.orderBy("day").rowsBetween(-3, 3)
-    tr = daily.select(
-        "day",
-        "y",
-        F.when(
-            F.count(F.lit(1)).over(w) == 7, F.sum("y").over(w).cast("double") / 7
-        ).alias("trend"),
-    )
-    dow = daily.groupBy((F.col("day") % 7).alias("dw")).agg(
-        (F.sum("y").cast("double") / F.count(F.lit(1))).alias("dow_mean")
-    )
-    grand = daily.agg((F.sum("y").cast("double") / F.count(F.lit(1))).alias("g"))
-    return (
-        tr.join(dow, tr.day % 7 == dow.dw)
-        .crossJoin(F.broadcast(grand))
-        .select(
-            "day",
-            "y",
-            F.round("trend", 6).alias("trend"),
-            F.round("dow_mean", 6).alias("dow_mean"),
-            F.round(
-                F.col("y") - F.col("trend") - (F.col("dow_mean") - F.col("g")), 6
-            ).alias("resid"),
-        )
     )
 
 
@@ -14374,99 +13722,6 @@ def q_raster_region_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "mad_outliers",
-    oracle=r"""
-WITH v AS (
-  SELECT o_orderkey AS id, o_orderstatus AS grp,
-         CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT) AS cents
-  FROM orders
-),
-med AS (
-  SELECT grp, cents,
-         row_number() OVER (PARTITION BY grp ORDER BY cents, id) AS rn,
-         count(*) OVER (PARTITION BY grp) AS n
-  FROM v
-),
-m1 AS (
-  SELECT grp, CAST(avg(cents) AS DOUBLE) AS med
-  FROM med WHERE rn IN ((n + 1) // 2, (n + 2) // 2) GROUP BY grp
-),
-dev AS (
-  SELECT v.id, v.grp, v.cents, abs(v.cents - m1.med) AS ad
-  FROM v JOIN m1 USING (grp)
-),
-med2 AS (
-  SELECT grp, ad, row_number() OVER (PARTITION BY grp ORDER BY ad, id) AS rn,
-         count(*) OVER (PARTITION BY grp) AS n
-  FROM dev
-),
-m2 AS (
-  SELECT grp, CAST(avg(ad) AS DOUBLE) AS mad
-  FROM med2 WHERE rn IN ((n + 1) // 2, (n + 2) // 2) GROUP BY grp
-)
-SELECT d.grp, count(*) AS n_rows,
-       round(max(m1.med), 2) AS med, round(max(m2.mad), 2) AS mad,
-       CAST(sum(CASE WHEN d.ad > 3 * m2.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-FROM dev d JOIN m1 ON d.grp = m1.grp JOIN m2 ON d.grp = m2.grp
-GROUP BY d.grp
-""",
-)
-def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier detection by MEDIAN ABSOLUTE DEVIATION — the
-    50%-breakdown alternative to z-scores whose mean/stddev an outlier
-    itself corrupts: per group, median (exact order-statistic pick,
-    avg of the two middles), absolute deviations, their median (MAD),
-    and the |x - med| > 3*MAD census. Inputs are integer cents so every
-    deviation is exact; the two medians are rank picks, never float
-    accumulations. Two ranking windows per group + one join back."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    v = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("grp"),
-        F.round(F.col("o_totalprice").cast("double") * 100).cast("long").alias("cents"),
-    )
-
-    def median_of(df, col, out):
-        w = Window.partitionBy("grp").orderBy(col, "id")
-        r = df.select(
-            "grp",
-            F.col(col),
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(Window.partitionBy("grp")).alias("n"),
-        )
-        return (
-            r.filter(
-                (F.col("rn") == F.expr("(n + 1) div 2")) | (F.col("rn") == F.expr("(n + 2) div 2"))
-            )
-            .groupBy("grp")
-            .agg(F.avg(col).cast("double").alias(out))
-        )
-
-    m1 = median_of(v, "cents", "med")
-    dev = v.join(m1, "grp").select(
-        "id", "grp", "cents", F.abs(F.col("cents") - F.col("med")).alias("ad")
-    )
-    m2 = median_of(dev, "ad", "mad")
-    j = dev.join(m2, "grp")
-    out = j.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((F.col("ad") > 3 * F.col("mad")).cast("long")).alias("n_outliers"),
-    )
-    return (
-        out.join(m1, "grp")
-        .join(m2, "grp")
-        .select(
-            "grp",
-            "n_rows",
-            F.round("med", 2).alias("med"),
-            F.round("mad", 2).alias("mad"),
-            "n_outliers",
-        )
-        .select("grp", "n_rows", "med", "mad", "n_outliers")
-    )
-
-
-@q(
     "url_path_trie_census",
     oracle=r"""
 WITH urls AS (
@@ -15242,164 +14497,8 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "distribution_drift_tv",
-    oracle=r"""
-WITH daily AS (
-  SELECT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-         event_type, count(*) AS c
-  FROM events GROUP BY day, event_type
-),
-days AS (SELECT DISTINCT day FROM daily),
-types AS (SELECT DISTINCT event_type FROM daily),
-spine AS (SELECT d.day, t.event_type FROM days d CROSS JOIN types t),
-full_d AS (
-  SELECT s.day, s.event_type, COALESCE(daily.c, 0) AS c
-  FROM spine s LEFT JOIN daily ON s.day = daily.day AND s.event_type = daily.event_type
-),
-tot AS (SELECT day, sum(c) AS n FROM full_d GROUP BY day),
-paired AS (
-  SELECT a.day AS d1, b.day AS d2, a.event_type,
-         a.c AS c1, b.c AS c2, ta.n AS n1, tb.n AS n2
-  FROM full_d a
-  JOIN full_d b ON b.day = a.day + 1 AND b.event_type = a.event_type
-  JOIN tot ta ON ta.day = a.day
-  JOIN tot tb ON tb.day = b.day
-),
-tv AS (
-  SELECT d1, d2, CAST(sum(abs(c1 * n2 - c2 * n1)) AS BIGINT) AS tv_num,
-         CAST(2 * max(n1) * max(n2) AS BIGINT) AS tv_den
-  FROM paired GROUP BY d1, d2
-)
-SELECT d1, d2, tv_num, tv_den, round(CAST(tv_num AS DOUBLE) / tv_den, 6) AS tv_dist
-FROM tv
-""",
-)
-def q_distribution_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-over-day DISTRIBUTION DRIFT as exact total-variation
-    distance: TV(p, q) = 1/2 sum |p_i - q_i| becomes the integer pair
-    (sum |c1*N2 - c2*N1|, 2*N1*N2) by cross-multiplying the per-day
-    normalizers — no division until the display column, so the drift
-    alarm threshold can be an integer predicate. The model/data
-    monitoring primitive that catches event-mix shifts before they
-    poison training; one self-join on (day+1, type) over the completed
-    day x type spine."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    daily = ev.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")).alias("day"),
-        "event_type",
-    ).agg(F.count(F.lit(1)).alias("c"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    spine = days.crossJoin(F.broadcast(types))
-    full_d = spine.join(daily, ["day", "event_type"], "left").select(
-        "day", "event_type", F.coalesce("c", F.lit(0)).alias("c")
-    )
-    tot = full_d.groupBy("day").agg(F.sum("c").alias("n"))
-    a = full_d.select(F.col("day").alias("d1"), "event_type", F.col("c").alias("c1"))
-    b = full_d.select((F.col("day") - 1).alias("d1"), F.col("day").alias("d2"), "event_type", F.col("c").alias("c2"))
-    paired = (
-        a.join(b, ["d1", "event_type"])
-        .join(tot.select(F.col("day").alias("d1"), F.col("n").alias("n1")), "d1")
-        .join(tot.select(F.col("day").alias("d2"), F.col("n").alias("n2")), "d2")
-    )
-    tv = paired.groupBy("d1", "d2").agg(
-        F.sum(F.abs(F.col("c1") * F.col("n2") - F.col("c2") * F.col("n1"))).alias("tv_num"),
-        (2 * F.max("n1") * F.max("n2")).alias("tv_den"),
-    )
-    return tv.select(
-        "d1", "d2", "tv_num", "tv_den",
-        F.round(F.col("tv_num").cast("double") / F.col("tv_den"), 6).alias("tv_dist"),
-    )
-
-
-@q(
-    "ab_test_analysis",
-    oracle=r"""
-WITH assigned AS (
-  SELECT user_id,
-         CASE WHEN CAST(('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
-         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 14
-              THEN 1 ELSE 0 END AS converted
-  FROM events GROUP BY user_id
-),
-arms AS (
-  SELECT arm, count(*) AS n, CAST(sum(converted) AS BIGINT) AS x
-  FROM assigned GROUP BY arm
-),
-w AS (
-  SELECT max(CASE WHEN arm = 'A' THEN n END) AS n1,
-         max(CASE WHEN arm = 'A' THEN x END) AS x1,
-         max(CASE WHEN arm = 'B' THEN n END) AS n2,
-         max(CASE WHEN arm = 'B' THEN x END) AS x2
-  FROM arms
-)
-SELECT CAST(n1 AS BIGINT) AS n_a, x1 AS conv_a, CAST(n2 AS BIGINT) AS n_b, x2 AS conv_b,
-       round(CAST(x1 AS DOUBLE) / n1 - CAST(x2 AS DOUBLE) / n2, 6) AS lift,
-       round((CAST(x1 AS DOUBLE) / n1 - CAST(x2 AS DOUBLE) / n2)
-             / sqrt((CAST(x1 + x2 AS DOUBLE) / (n1 + n2))
-                    * (1 - CAST(x1 + x2 AS DOUBLE) / (n1 + n2))
-                    * (CAST(1 AS DOUBLE) / n1 + CAST(1 AS DOUBLE) / n2)), 6) AS z_score
-FROM w
-""",
-)
-def q_ab_test_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B experiment readout with the two-proportion z-test: users hash
-    deterministically into arms (the md5 bucketing a real assignment
-    service uses — stable, uniform, engine-portable), converts =
-    heavy purchaser (>= 14 purchases) per user, and the z-score under the pooled-proportion
-    null is computed with a PINNED operation sequence (exact integer
-    counts, three single divisions, one correctly-rounded sqrt) so both
-    engines agree to the 6th decimal. The experimentation primitive
-    every growth pipeline ships."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.encode(F.concat(F.lit("ab:"), F.col("user_id").cast("string")), "UTF-8")),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        "A",
-    ).otherwise("B")
-    assigned = ev.groupBy("user_id").agg(
-        (
-            F.sum((F.col("event_type") == "purchase").cast("long")) >= 14
-        ).cast("long").alias("converted")
-    ).select("user_id", arm.alias("arm"), "converted")
-    arms = assigned.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("converted").alias("x")
-    )
-    w = arms.groupBy().pivot("arm", ["A", "B"]).agg(
-        F.first("n").alias("n"), F.first("x").alias("x")
-    ).select(
-        F.col("A_n").alias("n1"), F.col("A_x").alias("x1"),
-        F.col("B_n").alias("n2"), F.col("B_x").alias("x2"),
-    )
-    p1 = F.col("x1").cast("double") / F.col("n1")
-    p2 = F.col("x2").cast("double") / F.col("n2")
-    pp = (F.col("x1") + F.col("x2")).cast("double") / (F.col("n1") + F.col("n2"))
-    z = (p1 - p2) / F.sqrt(
-        pp * (1 - pp) * (F.lit(1.0) / F.col("n1") + F.lit(1.0) / F.col("n2"))
-    )
-    return w.select(
-        F.col("n1").alias("n_a"),
-        F.col("x1").alias("conv_a"),
-        F.col("n2").alias("n_b"),
-        F.col("x2").alias("conv_b"),
-        F.round(p1 - p2, 6).alias("lift"),
-        F.round(z, 6).alias("z_score"),
-    )
-
-
 # ===========================================================================
-# Round-7 wave: point-in-polygon, KMV sketch, IDW, raster perimeter
+# Round-7 wave: point-in-polygon, KMV sketch, raster perimeter
 # ===========================================================================
 
 # Shared synthetic world for the planar operators below: a 8x5 grid of
@@ -15550,93 +14649,6 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "idw_interpolate",
-    oracle="""
-WITH st AS (
-  SELECT CAST(s AS BIGINT) AS sid, (s % 8) * 160 + 37 AS sx, (s // 8) * 160 + 73 AS sy,
-         (s * 17) % 100 + 1 AS val
-  FROM (SELECT unnest(range(40)) AS s)
-),
-pts AS (
-  SELECT o_orderkey AS pid, (o_orderkey * 11) % 1280 AS qx, (o_orderkey * 19) % 800 AS qy
-  FROM orders
-),
-d AS (
-  SELECT p.pid, s.sid, s.val,
-         (p.qx - s.sx) * (p.qx - s.sx) + (p.qy - s.sy) * (p.qy - s.sy) AS d2,
-         row_number() OVER (
-           PARTITION BY p.pid
-           ORDER BY (p.qx - s.sx) * (p.qx - s.sx) + (p.qy - s.sy) * (p.qy - s.sy), s.sid
-         ) AS rn
-  FROM pts p, st s
-),
-top3 AS (
-  SELECT pid,
-    max(CASE WHEN rn = 1 THEN d2 END) AS d2a, max(CASE WHEN rn = 1 THEN val END) AS va,
-    max(CASE WHEN rn = 2 THEN d2 END) AS d2b, max(CASE WHEN rn = 2 THEN val END) AS vb,
-    max(CASE WHEN rn = 3 THEN d2 END) AS d2c, max(CASE WHEN rn = 3 THEN val END) AS vc
-  FROM d WHERE rn <= 3 GROUP BY pid
-)
-SELECT pid,
-  round(CAST(va * d2b * d2c + vb * d2a * d2c + vc * d2a * d2b AS DOUBLE)
-        / CAST(d2b * d2c + d2a * d2c + d2a * d2b AS DOUBLE), 6) AS idw_val
-FROM top3
-""",
-)
-def q_idw_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverse-distance-weighted spatial interpolation (3 nearest
-    stations, power 2) — the geostatistics primitive for gridding
-    sparse sensor values. The dim side is 40 stations, so the right
-    plan is a broadcast nested-loop (operators/knn.py docstring: cross
-    vs broadcast dim when the site table is dim-sized; the cell-probe
-    path is the scale alternative when stations grow with the corpus).
-    The 1/d^2 weights are cleared to the common denominator, so num and
-    den are exact int64 (d2 <= 2.3e6, products <= 5.2e14) and the only
-    float op is one final IEEE division, identical cross-engine. A
-    zero-distance hit degrades gracefully: num/den collapse to exactly
-    that station's value."""
-    st = spark.range(40).select(
-        F.col("id").alias("sid"),
-        ((F.col("id") % 8) * 160 + 37).alias("sx"),
-        ((F.col("id") / 8).cast("long") * 160 + 73).alias("sy"),
-        ((F.col("id") * 17) % 100 + 1).alias("val"),
-    )
-    k = F.col("o_orderkey")
-    pts = datagen._read(spark, sf_dir, "orders").select(
-        k.alias("pid"), ((k * 11) % 1280).alias("qx"), ((k * 19) % 800).alias("qy")
-    )
-    d2 = (F.col("qx") - F.col("sx")) * (F.col("qx") - F.col("sx")) + (
-        F.col("qy") - F.col("sy")
-    ) * (F.col("qy") - F.col("sy"))
-    cand = pts.crossJoin(F.broadcast(st)).select("pid", "sid", "val", d2.alias("d2"))
-    w = Window.partitionBy("pid").orderBy("d2", "sid")
-    top = cand.select("pid", "val", "d2", F.row_number().over(w).alias("rn")).filter(
-        F.col("rn") <= 3
-    )
-    p = top.groupBy("pid").agg(
-        F.max(F.when(F.col("rn") == 1, F.col("d2"))).alias("d2a"),
-        F.max(F.when(F.col("rn") == 1, F.col("val"))).alias("va"),
-        F.max(F.when(F.col("rn") == 2, F.col("d2"))).alias("d2b"),
-        F.max(F.when(F.col("rn") == 2, F.col("val"))).alias("vb"),
-        F.max(F.when(F.col("rn") == 3, F.col("d2"))).alias("d2c"),
-        F.max(F.when(F.col("rn") == 3, F.col("val"))).alias("vc"),
-    )
-    num = (
-        F.col("va") * F.col("d2b") * F.col("d2c")
-        + F.col("vb") * F.col("d2a") * F.col("d2c")
-        + F.col("vc") * F.col("d2a") * F.col("d2b")
-    )
-    den = (
-        F.col("d2b") * F.col("d2c")
-        + F.col("d2a") * F.col("d2c")
-        + F.col("d2a") * F.col("d2b")
-    )
-    return p.select(
-        "pid", F.round(num.cast("double") / den.cast("double"), 6).alias("idw_val")
-    )
-
-
-@q(
     "raster_region_perimeter",
     oracle=r"""
 WITH RECURSIVE g AS (
@@ -15767,66 +14779,6 @@ def q_frechet_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "grid_kde",
-    oracle="""
-WITH cells AS (
-  SELECT CAST(a AS BIGINT) AS cx, CAST(b AS BIGINT) AS cy
-  FROM (SELECT unnest(range(32)) AS a), (SELECT unnest(range(20)) AS b)
-),
-pts AS (
-  SELECT (o_orderkey * 23) % 1280 AS px, (o_orderkey * 29) % 800 AS py FROM orders
-),
-w AS (
-  SELECT cx, cy,
-         60 - greatest(abs(px - (cx * 40 + 20)), abs(py - (cy * 40 + 20))) AS wt
-  FROM cells, pts
-)
-SELECT cx, cy, CAST(sum(wt) AS BIGINT) AS density, CAST(count(*) AS BIGINT) AS n_pts
-FROM w WHERE wt > 0 GROUP BY cx, cy
-""",
-)
-def q_grid_kde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid kernel-density heatmap (integer triangular kernel on
-    Chebyshev distance, radius 60 over a 40-unit cell pitch): each
-    point scatters weight onto only the <= 4x4 cells its kernel
-    support touches — an exploded bounded-sequence equi-group, the
-    write-side dual of the 3x3 read-side probes used by knn/radius
-    joins. All-integer weights; the oracle is the independent quadratic
-    (every cell x every point)."""
-    k = F.col("o_orderkey")
-    pts = datagen._read(spark, sf_dir, "orders").select(
-        ((k * 23) % 1280).alias("px"), ((k * 29) % 800).alias("py")
-    )
-    px, py = F.col("px"), F.col("py")
-    cand = pts.select(
-        "px",
-        "py",
-        F.explode(
-            F.sequence(F.floor((px - 79) / 40), F.floor((px + 59) / 40))
-        ).alias("cx"),
-    ).select(
-        "px",
-        "py",
-        "cx",
-        F.explode(
-            F.sequence(F.floor((py - 79) / 40), F.floor((py + 59) / 40))
-        ).alias("cy"),
-    )
-    wt = F.lit(60) - F.greatest(
-        F.abs(px - (F.col("cx") * 40 + 20)), F.abs(py - (F.col("cy") * 40 + 20))
-    )
-    return (
-        cand.filter(
-            (F.col("cx") >= 0) & (F.col("cx") <= 31) & (F.col("cy") >= 0) & (F.col("cy") <= 19)
-        )
-        .select("cx", "cy", wt.alias("wt"))
-        .filter(F.col("wt") > 0)
-        .groupBy("cx", "cy")
-        .agg(F.sum("wt").alias("density"), F.count(F.lit(1)).alias("n_pts"))
-    )
-
-
-@q(
     "group_split_no_leakage",
     oracle="""
 WITH d AS (
@@ -15873,154 +14825,6 @@ def q_group_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("host").alias("n_hosts"),
             F.countDistinct(F.when(F.col("ns") > 1, F.col("host"))).alias("n_leaky_hosts"),
         )
-    )
-
-
-@q(
-    "stump_split",
-    oracle="""
-WITH v AS (
-  SELECT CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT) // 524288 AS b,
-         CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-  FROM orders
-),
-bins AS (SELECT b, sum(y) AS n1, count(*) - sum(y) AS n0 FROM v GROUP BY b),
-e AS (
-  SELECT CAST(t AS BIGINT) + 1 AS t,
-         CASE WHEN bins.b < CAST(t AS BIGINT) + 1 THEN bins.n0 ELSE bins.n1 END AS errc,
-         bins.n0 + bins.n1 AS tot
-  FROM bins, (SELECT unnest(range(115)) AS t)
-),
-g AS (SELECT t, sum(errc) AS err1, sum(tot) AS n FROM e GROUP BY t)
-SELECT CAST(t * 524288 AS BIGINT) AS threshold_cents,
-       CAST(least(err1, n - err1) AS BIGINT) AS err,
-       CAST(n AS BIGINT) AS n_total
-FROM g ORDER BY least(err1, n - err1), t LIMIT 1
-""",
-)
-def q_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decision-stump training (best 1-feature threshold split by
-    misclassification count) — the distributed shape is: bin the
-    feature (bounded 115 bins of 2^19 cents), per-bin label counts,
-    then EXPLODE each bin to every candidate threshold with its
-    below/above error contribution — a bounded-multiplier scatter +
-    one re-agg, no data-dependent scalar join, no cumulative window.
-    Both predicted polarities are scored via least(err, n - err); the
-    argmin is a TakeOrdered over 115 candidate rows. Integer error
-    counts are exact cross-engine."""
-    o = datagen._read(spark, sf_dir, "orders")
-    v = o.select(
-        F.expr("cast(round(cast(o_totalprice as double) * 100) as bigint) div 524288").alias("b"),
-        (F.col("o_orderstatus") == "F").cast("long").alias("y"),
-    )
-    bins = v.groupBy("b").agg(
-        F.sum("y").alias("n1"), (F.count(F.lit(1)) - F.sum("y")).alias("n0")
-    )
-    e = bins.select(
-        "b", "n1", "n0", F.explode(F.sequence(F.lit(1), F.lit(115))).alias("t")
-    ).select(
-        "t",
-        F.when(F.col("b") < F.col("t"), F.col("n0")).otherwise(F.col("n1")).alias("errc"),
-        (F.col("n0") + F.col("n1")).alias("tot"),
-    )
-    g = e.groupBy("t").agg(F.sum("errc").alias("err1"), F.sum("tot").alias("n"))
-    pick = (
-        g.select(
-            "t",
-            F.least(F.col("err1"), F.col("n") - F.col("err1")).alias("err"),
-            F.col("n").alias("n_total"),
-        )
-        .orderBy("err", "t")
-        .limit(1)
-    )
-    return pick.select(
-        (F.col("t") * 524288).alias("threshold_cents"), "err", "n_total"
-    )
-
-
-@q(
-    "silhouette_eval",
-    oracle="""
-WITH x AS (
-  SELECT vec_id, label, CAST(d AS BIGINT) AS d,
-         CAST(round(CAST(embedding[CAST(d AS INT) + 1] AS DOUBLE) * 1000) AS BIGINT) AS q
-  FROM embeddings, (SELECT unnest(range(64)) AS d)
-),
-s AS (SELECT label AS cl, d, CAST(sum(q) AS BIGINT) AS sd FROM x GROUP BY label, d),
-pn AS (SELECT vec_id, label, CAST(sum(q * q) AS BIGINT) AS n2 FROM x GROUP BY vec_id, label),
-cst AS (SELECT label, CAST(count(*) AS BIGINT) AS n, CAST(sum(n2) AS BIGINT) AS qq FROM pn GROUP BY label),
-dt AS (
-  SELECT x.vec_id, s.cl, CAST(sum(x.q * s.sd) AS BIGINT) AS dot
-  FROM x JOIN s ON x.d = s.d GROUP BY x.vec_id, s.cl
-),
-sums AS (
-  SELECT p.vec_id, p.label AS own, d.cl, c.n,
-         c.qq + c.n * p.n2 - 2 * d.dot AS sd2
-  FROM pn p JOIN dt d ON p.vec_id = d.vec_id JOIN cst c ON d.cl = c.label
-),
-ab AS (
-  SELECT vec_id, own,
-         max(CASE WHEN cl = own THEN CAST(sd2 AS DOUBLE) / (n - 1) END) AS a,
-         min(CASE WHEN cl <> own THEN CAST(sd2 AS DOUBLE) / n END) AS b
-  FROM sums GROUP BY vec_id, own
-)
-SELECT vec_id, own AS label, round((b - a) / greatest(a, b), 6) AS sil FROM ab
-""",
-)
-def q_silhouette_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PER-POINT SILHOUETTE SCORE over the embedding table's labels —
-    WITHOUT the quadratic pairwise-distance pass: sum_{j in C} d2(i,j)
-    = |C|*|qi|^2 - 2*qi.S_C + Q_C, so three moment aggregates (per-
-    cluster per-dim sums, per-cluster counts and squared-norm totals)
-    replace n^2 distance rows. At 100 TB cluster moments are a tiny
-    table and the per-point cost is one exploded-dim equi-join —
-    the same trick as join_size_estimate's histogram product. Vectors
-    are milli-quantized to int64 (embedding_quantized_norms precedent)
-    so every moment is exact; a(i), b(i), and s(i) are a handful of
-    IEEE divisions on exact integers, identical cross-engine. Verified
-    against brute-force pairwise silhouette in tests/test_silhouette.py."""
-    emb = datagen._read(spark, sf_dir, "embeddings")
-    x = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("d", "c")
-    ).select(
-        "vec_id",
-        "label",
-        F.col("d").cast("long").alias("d"),
-        F.round(F.col("c").cast("double") * 1000).cast("long").alias("q"),
-    )
-    s = x.groupBy(F.col("label").alias("cl"), "d").agg(F.sum("q").alias("sd"))
-    pn = x.groupBy("vec_id", "label").agg(F.sum(F.col("q") * F.col("q")).alias("n2"))
-    cst = pn.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n2").alias("qq")
-    )
-    dt = (
-        x.join(s, "d")
-        .groupBy("vec_id", "cl")
-        .agg(F.sum(F.col("q") * F.col("sd")).alias("dot"))
-    )
-    sums = (
-        pn.join(dt, "vec_id")
-        .join(cst.select(F.col("label").alias("cl"), "n", "qq"), "cl")
-        .select(
-            "vec_id",
-            F.col("label").alias("own"),
-            "cl",
-            "n",
-            (F.col("qq") + F.col("n") * F.col("n2") - 2 * F.col("dot")).alias("sd2"),
-        )
-    )
-    ab = sums.groupBy("vec_id", "own").agg(
-        F.max(
-            F.when(F.col("cl") == F.col("own"), F.col("sd2").cast("double") / (F.col("n") - 1))
-        ).alias("a"),
-        F.min(
-            F.when(F.col("cl") != F.col("own"), F.col("sd2").cast("double") / F.col("n"))
-        ).alias("b"),
-    )
-    return ab.select(
-        "vec_id",
-        F.col("own").alias("label"),
-        F.round((F.col("b") - F.col("a")) / F.greatest("a", "b"), 6).alias("sil"),
     )
 
 
@@ -16408,59 +15212,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "ewma_halflife",
-    oracle="""
-WITH v AS (
-  SELECT user_id, event_id, CAST(round(CAST(value AS DOUBLE) * 100) AS BIGINT) AS cents,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-),
-recent AS (SELECT * FROM v WHERE rn <= 16),
-agg AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(cents * (CAST(1 AS BIGINT) << CAST(16 - rn AS INT))) AS BIGINT) AS ewma_num,
-         CAST(sum(CAST(1 AS BIGINT) << CAST(16 - rn AS INT)) AS BIGINT) AS ewma_den
-  FROM recent GROUP BY user_id
-)
-SELECT user_id, n, ewma_num, ewma_den,
-       round(CAST(ewma_num AS DOUBLE) / CAST(ewma_den AS DOUBLE), 4) AS ewma
-FROM agg
-""",
-)
-def q_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXPONENTIALLY WEIGHTED MOVING AVERAGE with half-life decay
-    (alpha = 1/2) over each user's 16 most recent events: weights are
-    exact powers of two (2^(16-rn)), so numerator and denominator are
-    EXACT int64 sums — the one float op is the final IEEE division
-    (float EWMA recursions are summation-order-dependent and
-    ungateable). One ranking window + one group-by; the truncation at
-    16 terms bounds the weight range (2^15 tail weight < 0.01% — the
-    same cutoff a production decay would apply)."""
-    ev = datagen._read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    v = ev.select(
-        "user_id",
-        F.round(F.col("value").cast("double") * 100).cast("long").alias("cents"),
-        F.row_number().over(w).alias("rn"),
-    ).filter(F.col("rn") <= 16)
-    pw = F.expr("shiftleft(cast(1 as bigint), cast(16 - rn as int))")
-    agg = v.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("cents") * pw).alias("ewma_num"),
-        F.sum(pw).alias("ewma_den"),
-    )
-    return agg.select(
-        "user_id",
-        "n",
-        "ewma_num",
-        "ewma_den",
-        F.round(
-            F.col("ewma_num").cast("double") / F.col("ewma_den").cast("double"), 4
-        ).alias("ewma"),
-    )
-
-
-@q(
     "closest_pair_grid",
     oracle="""
 WITH pts AS (
@@ -16554,68 +15305,6 @@ def q_hull_diameter_calipers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy(
         F.col("d2").desc(), "xa", "ya", "xb", "yb"
     ).limit(1)
-
-
-@q(
-    "auc_rank_sum",
-    oracle="""
-WITH s AS (
-  SELECT event_id AS score,
-         CASE WHEN CAST('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15) AS BIGINT) % 10 < 3
-              THEN 1 ELSE 0 END AS label
-  FROM events
-),
-r AS (SELECT label, row_number() OVER (ORDER BY score) AS rnk FROM s),
-agg AS (
-  SELECT CAST(sum(CASE WHEN label = 1 THEN rnk ELSE 0 END) AS BIGINT) AS pos_rank_sum,
-         CAST(sum(label) AS BIGINT) AS p,
-         CAST(count(*) - sum(label) AS BIGINT) AS n
-  FROM r
-)
-SELECT pos_rank_sum, p, n,
-       CAST(pos_rank_sum - (p * (p + 1)) // 2 AS BIGINT) AS u_stat,
-       round(CAST(pos_rank_sum - (p * (p + 1)) // 2 AS DOUBLE) / (p * n), 6) AS auc
-FROM agg
-""",
-)
-def q_auc_rank_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact ROC-AUC as the Mann-Whitney rank-sum statistic: with
-    distinct scores, AUC = (R+ - P(P+1)/2) / (P*N) where R+ is the
-    rank sum of positives — ALL integer until the one final division.
-    The global ranking uses the two-phase bucket rank
-    (plans/dense_index.global_rank: arithmetic range buckets ->
-    per-bucket window -> broadcast offsets), NOT a single-partition
-    window, so the ranking scales with executors. Labels come from the
-    md5-affine idiom so both engines derive them identically."""
-    from .plans.dense_index import global_rank
-
-    ev = datagen._read(spark, sf_dir, "events").select(
-        F.col("event_id").alias("score")
-    )
-    lab = (
-        F.conv(F.substring(F.md5(F.col("score").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 10 < 3
-    ).cast("long")
-    s = ev.withColumn("label", lab)
-    r = global_rank(s, "score", "rnk")
-    agg = r.agg(
-        F.sum(F.when(F.col("label") == 1, F.col("rnk")).otherwise(0))
-        .cast("long")
-        .alias("pos_rank_sum"),
-        F.sum("label").cast("long").alias("p"),
-        (F.count(F.lit(1)) - F.sum("label")).cast("long").alias("n"),
-    )
-    return agg.select(
-        "pos_rank_sum",
-        "p",
-        "n",
-        F.expr("pos_rank_sum - (p * (p + 1)) div 2").cast("long").alias("u_stat"),
-        F.round(
-            F.expr("pos_rank_sum - (p * (p + 1)) div 2").cast("double")
-            / (F.col("p") * F.col("n")).cast("double"),
-            6,
-        ).alias("auc"),
-    )
 
 
 @q(
@@ -17007,80 +15696,6 @@ def q_rank_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "mann_kendall_trend",
-    oracle="""
-WITH s AS (
-  SELECT user_id, event_id, epoch_us(ts) AS t, CAST(round(value * 100) AS BIGINT) AS v
-  FROM events
-),
-p AS (
-  SELECT a.user_id,
-         CAST(sum(CASE WHEN (CASE WHEN a.t < b.t OR (a.t = b.t AND a.event_id < b.event_id) THEN 1 ELSE -1 END)
-                            * (CASE WHEN a.v < b.v THEN 1 WHEN a.v > b.v THEN -1 ELSE 0 END) = 1
-                  THEN 1 ELSE 0 END) AS BIGINT) AS conc,
-         CAST(sum(CASE WHEN (CASE WHEN a.t < b.t OR (a.t = b.t AND a.event_id < b.event_id) THEN 1 ELSE -1 END)
-                            * (CASE WHEN a.v < b.v THEN 1 WHEN a.v > b.v THEN -1 ELSE 0 END) = -1
-                  THEN 1 ELSE 0 END) AS BIGINT) AS disc,
-         CAST(count(*) AS BIGINT) AS n_pairs
-  FROM s a JOIN s b ON a.user_id = b.user_id AND a.event_id < b.event_id
-  GROUP BY a.user_id
-)
-SELECT CAST(user_id AS BIGINT) AS user_id, conc, disc,
-       CAST(conc - disc AS BIGINT) AS s_stat, n_pairs
-FROM p ORDER BY user_id
-""",
-)
-def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MANN-KENDALL TREND TEST per user: the S statistic (concordant
-    minus discordant time/value pairs, value ties contributing
-    nothing) over each user's event series — the standard
-    nonparametric monotone-trend detector for telemetry. Pairs are
-    generated by a user-key equi self join (bounded per-user series;
-    the GLOBAL tau over unbounded series is the grid-decomposed
-    operators/rankcorr.py — this gate is the grouped sibling).
-    Timestamps compare with an event-id tiebreak so equal-microsecond
-    events are totally ordered in both engines."""
-    ev = datagen._read(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    a = ev.alias("a")
-    b = ev.alias("b")
-    j = a.join(
-        b,
-        (F.col("a.user_id") == F.col("b.user_id"))
-        & (F.col("a.event_id") < F.col("b.event_id")),
-    )
-    t_sign = F.when(
-        (F.col("a.t") < F.col("b.t"))
-        | ((F.col("a.t") == F.col("b.t")) & (F.col("a.event_id") < F.col("b.event_id"))),
-        1,
-    ).otherwise(-1)
-    v_sign = (
-        F.when(F.col("a.v") < F.col("b.v"), 1)
-        .when(F.col("a.v") > F.col("b.v"), -1)
-        .otherwise(0)
-    )
-    prod = (t_sign * v_sign).alias("sgn")
-    agg = (
-        j.select(F.col("a.user_id").alias("user_id"), prod)
-        .groupBy("user_id")
-        .agg(
-            F.sum((F.col("sgn") == 1).cast("long")).alias("conc"),
-            F.sum((F.col("sgn") == -1).cast("long")).alias("disc"),
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        )
-    )
-    return agg.select(
-        "user_id", "conc", "disc",
-        (F.col("conc") - F.col("disc")).cast("long").alias("s_stat"),
-        "n_pairs",
-    ).orderBy("user_id")
-
-
-@q(
     "str_rtree_pack",
     oracle="""
 WITH r AS (
@@ -17155,191 +15770,6 @@ def q_str_rtree_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("leaf_id")
     )
-
-
-@q(
-    "spearman_rho_exact",
-    oracle="""
-WITH s AS (
-  SELECT doc_id AS id, doc_id AS x, (doc_id * 131) % 500 AS y
-  FROM (SELECT DISTINCT doc_id FROM documents)
-),
-r AS (
-  SELECT id, row_number() OVER (ORDER BY x) AS rx,
-         row_number() OVER (ORDER BY y) AS ry
-  FROM s
-),
-agg AS (SELECT count(*) AS n, CAST(sum((rx - ry) * (rx - ry)) AS BIGINT) AS sum_d2 FROM r)
-SELECT CAST(n AS BIGINT) AS n, sum_d2,
-       CAST(n * (n * n - 1) AS BIGINT) AS den,
-       round(1.0 - 6.0 * sum_d2 / (n * (n * n - 1)), 6) AS rho
-FROM agg
-""",
-)
-def q_spearman_rho_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPEARMAN RANK CORRELATION, exact: with distinct values on both
-    axes (y = x * 131 mod 500 is a bijection on this id range) rho =
-    1 - 6*sum(d^2)/(n(n^2-1)) is a pure integer identity until the one
-    final division. BOTH rankings are the two-phase bucket rank
-    (plans/dense_index.global_rank) — a naive implementation needs two
-    full sorts through single-partition windows; this one needs none.
-    Complements kendall_tau_inversions (the other rank-correlation
-    family) on the same synthetic joint distribution."""
-    from .plans.dense_index import global_rank
-
-    docs = datagen._read(spark, sf_dir, "documents").select("doc_id").distinct()
-    s = docs.select(
-        F.col("doc_id").alias("id"),
-        F.col("doc_id").alias("x"),
-        ((F.col("doc_id") * 131) % 500).alias("y"),
-    )
-    rx = global_rank(s, "x", "rx")
-    rxy = global_rank(rx, "y", "ry")
-    agg = rxy.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum((F.col("rx") - F.col("ry")) * (F.col("rx") - F.col("ry")))
-        .cast("long")
-        .alias("sum_d2"),
-    )
-    return agg.select(
-        "n",
-        "sum_d2",
-        F.expr("n * (n * n - 1)").cast("long").alias("den"),
-        F.round(
-            F.lit(1.0) - F.lit(6.0) * F.col("sum_d2") / F.expr("n * (n * n - 1)"),
-            6,
-        ).alias("rho"),
-    )
-
-
-@q(
-    "ks_test_exact",
-    oracle="""
-WITH s AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-         CAST('0x'||substr(md5(CAST(event_id AS VARCHAR)),1,15) AS BIGINT) % 2 AS arm
-  FROM events
-),
-g AS (SELECT v, CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-      FROM s GROUP BY v),
-c AS (SELECT v, sum(ca) OVER (ORDER BY v) AS i, sum(cb) OVER (ORDER BY v) AS j FROM g),
-t AS (SELECT (SELECT sum(ca) FROM g) AS n, (SELECT sum(cb) FROM g) AS m)
-SELECT CAST(t.n AS BIGINT) AS n, CAST(t.m AS BIGINT) AS m,
-       CAST(max(abs(c.i * t.m - c.j * t.n)) AS BIGINT) AS d_num,
-       round(CAST(max(abs(c.i * t.m - c.j * t.n)) AS DOUBLE) / (t.n * t.m), 6) AS d_stat
-FROM c, t GROUP BY t.n, t.m
-""",
-)
-def q_ks_test_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWO-SAMPLE KOLMOGOROV-SMIRNOV TEST, exact: D = max |F_a - F_b|
-    over the pooled sample is max |i*m - j*n| / (n*m) with integer
-    cumulative counts i, j — cross-multiplication removes every float
-    from the supremum (a float-CDF max is a tie-ordering hazard). The
-    global cumulative over distinct values uses the two-phase shape:
-    per-value counts -> range buckets (v div 4096) -> in-bucket window
-    cumsum + BROADCAST bucket prefix offsets (a bounded driver collect
-    of per-bucket totals, the q_global_row_number pattern) — no
-    single-partition window over the value domain."""
-    ev = datagen._read(spark, sf_dir, "events")
-    arm = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 2
-    )
-    s = ev.select(
-        F.round(F.col("value") * 100).cast("long").alias("v"), arm.alias("arm")
-    )
-    g = s.groupBy("v").agg(
-        F.sum((F.col("arm") == 0).cast("long")).alias("ca"),
-        F.sum((F.col("arm") == 1).cast("long")).alias("cb"),
-    ).withColumn("bucket", F.expr("v div 4096"))
-    # bounded driver collect: one row per populated 4096-wide value
-    # bucket; prefix sums broadcast back as offsets
-    totals = (
-        g.groupBy("bucket")
-        .agg(F.sum("ca").alias("ta"), F.sum("cb").alias("tb"))
-        .collect()
-    )
-    totals.sort(key=lambda r: r["bucket"])
-    offs, pa, pb = [], 0, 0
-    for row in totals:
-        offs.append((row["bucket"], pa, pb))
-        pa += row["ta"]
-        pb += row["tb"]
-    n, m = pa, pb
-    spark_offs = spark.createDataFrame(offs, "bucket long, oa long, ob long")
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    c = (
-        g.join(F.broadcast(spark_offs), "bucket")
-        .withColumn("i", F.sum("ca").over(w) + F.col("oa"))
-        .withColumn("j", F.sum("cb").over(w) + F.col("ob"))
-    )
-    d = c.agg(
-        F.max(F.abs(F.col("i") * F.lit(m) - F.col("j") * F.lit(n))).alias("d_num")
-    )
-    return d.select(
-        F.lit(n).cast("long").alias("n"),
-        F.lit(m).cast("long").alias("m"),
-        F.col("d_num").cast("long"),
-        F.round(F.col("d_num").cast("double") / F.lit(float(n * m)), 6).alias(
-            "d_stat"
-        ),
-    )
-
-
-@q(
-    "pearson_corr_exact",
-    oracle="""
-WITH s AS (SELECT event_type, CAST(round(value*100) AS BIGINT) AS x, (event_id * 7) % 1000 AS y FROM events),
-a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x*y) AS BIGINT) AS sxy, CAST(sum(x*x) AS BIGINT) AS sxx, CAST(sum(y*y) AS BIGINT) AS syy
-      FROM s GROUP BY event_type)
-SELECT event_type, n, CAST(n*sxy - sx*sy AS BIGINT) AS cov_num,
-       CAST(n*sxx - sx*sx AS BIGINT) AS varx_num, CAST(n*syy - sy*sy AS BIGINT) AS vary_num,
-       round((n*sxy - sx*sy) / (sqrt(CAST(n*sxx - sx*sx AS DOUBLE)) * sqrt(CAST(n*syy - sy*sy AS DOUBLE))), 6) AS r
-FROM a ORDER BY event_type
-""",
-)
-def q_pearson_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PEARSON CORRELATION with integer-exact moments: n*sxy - sx*sy
-    and the two variance numerators are int64-exact sums (float
-    accumulation is summation-order-dependent and ungateable — the
-    r5 lesson), so r differs from the closed form only by the final
-    IEEE sqrt/divide, which are correctly-rounded and thus
-    deterministic across engines. One group-by pass computes all five
-    moments (no second scan, no collect)."""
-    ev = datagen._read(spark, sf_dir, "events").select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-        ((F.col("event_id") * 7) % 1000).alias("y"),
-    )
-    a = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    return a.select(
-        "event_type",
-        "n",
-        F.expr("n*sxy - sx*sy").cast("long").alias("cov_num"),
-        F.expr("n*sxx - sx*sx").cast("long").alias("varx_num"),
-        F.expr("n*syy - sy*sy").cast("long").alias("vary_num"),
-        F.round(
-            F.expr("n*sxy - sx*sy")
-            / (
-                F.sqrt(F.expr("CAST(n*sxx - sx*sx AS DOUBLE)"))
-                * F.sqrt(F.expr("CAST(n*syy - sy*sy AS DOUBLE)"))
-            ),
-            6,
-        ).alias("r"),
-    ).orderBy("event_type")
 
 
 @q(
@@ -17538,262 +15968,6 @@ def q_raster_slope_stencil(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("bucket")
     )
-
-
-@q(
-    "autocorr_lag",
-    oracle="""
-WITH s AS (
-  SELECT user_id, CAST(round(value*100) AS BIGINT) AS x,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-),
-l AS (
-  SELECT k.k, s.user_id, s.x,
-         lead(s.x, CAST(k.k AS INT)) OVER (PARTITION BY k.k, s.user_id ORDER BY s.rn) AS xk
-  FROM s CROSS JOIN (SELECT unnest(range(1, 4)) AS k) k
-)
-SELECT CAST(k AS BIGINT) AS lag_k, CAST(count(xk) AS BIGINT) AS n_pairs,
-       CAST(sum(CASE WHEN xk IS NULL THEN 0 ELSE x * xk END) AS BIGINT) AS sum_xy,
-       CAST(sum(CASE WHEN xk IS NULL THEN 0 ELSE x END) AS BIGINT) AS sum_x,
-       CAST(sum(CASE WHEN xk IS NULL THEN 0 ELSE xk END) AS BIGINT) AS sum_y
-FROM l GROUP BY k ORDER BY lag_k
-""",
-)
-def q_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LAGGED AUTOCORRELATION MOMENTS per series position (lags 1-3
-    over each user's time-ordered value series): the integer moment
-    sums (sum x_t*x_{t+k} and the aligned marginals) from which r_k
-    assembles exactly — emitted as int64 so the gate is
-    float-order-free. One window pass computes all three lags (lead()
-    over the bounded per-user partition); at corpus scale the user key
-    shards the state exactly like the sessionize family."""
-    ev = datagen._read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("x"),
-        F.row_number().over(w).alias("rn"),
-    )
-    parts = []
-    wl = Window.partitionBy("user_id").orderBy("rn")
-    for k in (1, 2, 3):
-        lk = s.withColumn("xk", F.lead("x", k).over(wl)).filter(
-            F.col("xk").isNotNull()
-        )
-        parts.append(
-            lk.agg(
-                F.lit(k).cast("long").alias("lag_k"),
-                F.count(F.lit(1)).cast("long").alias("n_pairs"),
-                F.sum(F.col("x") * F.col("xk")).cast("long").alias("sum_xy"),
-                F.sum("x").cast("long").alias("sum_x"),
-                F.sum("xk").cast("long").alias("sum_y"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("lag_k")
-
-
-@q(
-    "rendezvous_hash_assign",
-    oracle="""
-WITH keys AS (SELECT DISTINCT doc_id FROM documents),
-nodes AS (SELECT 'node' || lpad(CAST(u AS VARCHAR), 2, '0') AS node
-          FROM (SELECT unnest(range(12)) AS u)),
-wt AS (
-  SELECT k.doc_id, n.node,
-         CAST('0x'||substr(md5(CAST(k.doc_id AS VARCHAR) || '|' || n.node),1,15) AS BIGINT) AS w
-  FROM keys k CROSS JOIN nodes n
-),
-full_assign AS (
-  SELECT doc_id, node FROM (
-    SELECT doc_id, node, row_number() OVER (PARTITION BY doc_id ORDER BY w DESC, node) AS rn FROM wt
-  ) WHERE rn = 1
-),
-after_assign AS (
-  SELECT doc_id, node FROM (
-    SELECT doc_id, node, row_number() OVER (PARTITION BY doc_id ORDER BY w DESC, node) AS rn
-    FROM wt WHERE node <> 'node03'
-  ) WHERE rn = 1
-),
-moved AS (
-  SELECT f.doc_id FROM full_assign f JOIN after_assign a USING (doc_id)
-  WHERE f.node <> a.node
-)
-SELECT a.node,
-       CAST(sum(CASE WHEN f.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_full,
-       CAST(count(*) AS BIGINT) AS n_after,
-       CAST((SELECT count(*) FROM moved) AS BIGINT) AS total_moved
-FROM after_assign a
-LEFT JOIN full_assign f ON f.doc_id = a.doc_id AND f.node = a.node
-GROUP BY a.node ORDER BY a.node
-""",
-)
-def q_rendezvous_hash_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RENDEZVOUS (HIGHEST-RANDOM-WEIGHT) HASHING: every key goes to
-    the node with the max md5(key|node) weight — the shard-assignment
-    scheme whose minimal-disruption property the gate verifies
-    STRUCTURALLY: recomputing with node03 removed, total_moved keys ==
-    keys that were on node03 (nothing else moves, because removing a
-    non-winning candidate never changes an argmax). Keys x 12 nodes is
-    a bounded-multiplier broadcast (consistent_hash_rebalance's ring
-    sibling); the argmax is max_by over the weight struct, no
-    per-key window."""
-    docs = datagen._read(spark, sf_dir, "documents").select("doc_id").distinct()
-    nodes = spark.range(12).select(
-        F.concat(F.lit("node"), F.lpad(F.col("id").cast("string"), 2, "0")).alias(
-            "node"
-        )
-    )
-    wt = docs.crossJoin(F.broadcast(nodes)).select(
-        "doc_id",
-        "node",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"), F.col("node"))),
-                1, 15,
-            ),
-            16, 10,
-        ).cast("long").alias("w"),
-    )
-
-    def argmax(df):
-        # max_by with a (w, node-desc) struct would invert the node
-        # tiebreak; use the max-struct idiom with an inverted node key
-        # free tiebreak: md5 collisions are absent in this world, and
-        # determinism is still guaranteed by (w DESC, node ASC) rank
-        r = df.groupBy("doc_id").agg(
-            F.max(F.struct(F.col("w"), F.col("node"))).alias("top")
-        )
-        return r.select("doc_id", F.col("top.node").alias("node"))
-
-    full = argmax(wt)
-    after = argmax(wt.filter(F.col("node") != "node03"))
-    moved = (
-        full.withColumnRenamed("node", "fnode")
-        .join(after.withColumnRenamed("node", "anode"), "doc_id")
-        .filter(F.col("fnode") != F.col("anode"))
-        .count()
-    )
-    f2 = full.withColumnRenamed("node", "node").groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("n_full")
-    )
-    a2 = after.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("n_after"))
-    out = a2.join(f2, "node", "left").select(
-        "node",
-        F.coalesce(F.col("n_full"), F.lit(0)).cast("long").alias("n_full"),
-        "n_after",
-        F.lit(moved).cast("long").alias("total_moved"),
-    )
-    return out.orderBy("node")
-
-
-@q(
-    "merkle_tree_diff",
-    oracle="""
-WITH v1 AS (
-  SELECT c_custkey AS k, c_name || '|' || CAST(round(c_acctbal*100) AS VARCHAR) AS payload
-  FROM customer
-),
-v2 AS (
-  SELECT k, CASE WHEN k % 499 = 3 THEN payload || '*' ELSE payload END AS payload
-  FROM v1 WHERE k % 997 <> 7
-),
-l1 AS (SELECT k // 64 AS chunk,
-              bit_xor(CAST('0x'||substr(md5(CAST(k AS VARCHAR)||':'||payload),1,15) AS BIGINT)) AS fp,
-              CAST(count(*) AS BIGINT) AS n FROM v1 GROUP BY 1),
-l2 AS (SELECT k // 64 AS chunk,
-              bit_xor(CAST('0x'||substr(md5(CAST(k AS VARCHAR)||':'||payload),1,15) AS BIGINT)) AS fp,
-              CAST(count(*) AS BIGINT) AS n FROM v2 GROUP BY 1)
-SELECT CAST(coalesce(a.chunk, b.chunk) AS BIGINT) AS chunk,
-       CAST(coalesce(a.n, 0) AS BIGINT) AS n_v1,
-       CAST(coalesce(b.n, 0) AS BIGINT) AS n_v2
-FROM l1 a FULL JOIN l2 b USING (chunk)
-WHERE a.fp IS DISTINCT FROM b.fp OR a.n IS DISTINCT FROM b.n
-ORDER BY chunk
-""",
-)
-def q_merkle_tree_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REPLICA ANTI-ENTROPY via MERKLE TREE DIFF: two table versions
-    (sparse in-place edits + deletes) are fingerprinted into a 3-level
-    hash tree — 64-key leaf chunks with commutative bit_xor(md5-long)
-    fingerprints (the table_checksum_reconcile idiom: order-free, so
-    each level is one shuffle-free re-agg of the level below), parents
-    of 4. The diff DESCENDS: compare the coarse level first, then
-    semi-join only the divergent parents' children downward — at
-    replica scale this is the O(divergent * log n) network exchange
-    Dynamo/Cassandra repair relies on, instead of shipping every leaf.
-    The oracle compares ALL leaves flat (no tree, no pruning) — the
-    engine's pruned walk must reproduce exactly the same divergent
-    set."""
-    cust = datagen._read(spark, sf_dir, "customer")
-    v1 = cust.select(
-        F.col("c_custkey").alias("k"),
-        F.concat(
-            F.col("c_name"), F.lit("|"),
-            F.round(F.col("c_acctbal") * 100).cast("long").cast("string"),
-        ).alias("payload"),
-    )
-    v2 = v1.filter(F.col("k") % 997 != 7).select(
-        "k",
-        F.when(F.col("k") % 499 == 3, F.concat(F.col("payload"), F.lit("*")))
-        .otherwise(F.col("payload"))
-        .alias("payload"),
-    )
-
-    def leaves(v):
-        fp = F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("k").cast("string"), F.lit(":"), F.col("payload"))),
-                1, 15,
-            ),
-            16, 10,
-        ).cast("long")
-        return (
-            v.select(F.expr("k div 64").alias("chunk"), fp.alias("h"))
-            .groupBy("chunk")
-            .agg(
-                F.expr("bit_xor(h)").alias("fp"),
-                F.count(F.lit(1)).cast("long").alias("n"),
-            )
-        )
-
-    def level_up(lv, fan):
-        return lv.groupBy(F.expr(f"chunk div {fan}").alias("chunk")).agg(
-            F.expr("bit_xor(fp)").alias("fp"), F.sum("n").cast("long").alias("n")
-        )
-
-    la, lb = leaves(v1).localCheckpoint(), leaves(v2).localCheckpoint()
-    m1a, m1b = level_up(la, 4), level_up(lb, 4)
-    m2a, m2b = level_up(m1a, 4), level_up(m1b, 4)
-
-    def divergent(a, b):
-        aa = a.select(F.col("chunk"), F.col("fp").alias("fa"), F.col("n").alias("na"))
-        bb = b.select(F.col("chunk"), F.col("fp").alias("fb"), F.col("n").alias("nb"))
-        j = aa.join(bb, "chunk", "full_outer")
-        return j.filter(
-            ~(F.col("fa").eqNullSafe(F.col("fb")))
-            | ~(F.col("na").eqNullSafe(F.col("nb")))
-        )
-
-    d2 = divergent(m2a, m2b).select(F.col("chunk").alias("p2"))
-    k1a = m1a.join(
-        F.broadcast(d2), F.expr("chunk div 4") == F.col("p2"), "left_semi"
-    )
-    k1b = m1b.join(
-        F.broadcast(d2), F.expr("chunk div 4") == F.col("p2"), "left_semi"
-    )
-    d1 = divergent(k1a, k1b).select(F.col("chunk").alias("p1"))
-    k0a = la.join(F.broadcast(d1), F.expr("chunk div 4") == F.col("p1"), "left_semi")
-    k0b = lb.join(F.broadcast(d1), F.expr("chunk div 4") == F.col("p1"), "left_semi")
-    d0 = divergent(k0a, k0b)
-    return d0.select(
-        "chunk",
-        F.coalesce(F.col("na"), F.lit(0)).cast("long").alias("n_v1"),
-        F.coalesce(F.col("nb"), F.lit(0)).cast("long").alias("n_v2"),
-    ).orderBy("chunk")
 
 
 @q(
@@ -18491,89 +16665,6 @@ def q_snapshot_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "ransac_line_fit",
-    oracle="""
-WITH pts AS (
-  SELECT doc_id AS id, doc_id AS x,
-         CASE WHEN CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15) AS BIGINT) % 5 = 0
-              THEN (doc_id * 7919) % 3000
-              ELSE 3 * doc_id + 7 + CAST('0x'||substr(md5('n'||CAST(doc_id AS VARCHAR)),1,15) AS BIGINT) % 5 - 2
-         END AS y
-  FROM (SELECT DISTINCT doc_id FROM documents)
-),
-cand AS (
-  SELECT j, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2
-  FROM (SELECT unnest(range(16)) AS j)
-  JOIN pts a ON a.id = 3 * j
-  JOIN pts b ON b.id = 3 * j + 1
-),
-scored AS (
-  SELECT c.j, c.x1, c.y1, c.x2, c.y2,
-         CAST(sum(CASE WHEN
-           ((c.y2-c.y1)*(p.x-c.x1) - (c.x2-c.x1)*(p.y-c.y1))
-           * ((c.y2-c.y1)*(p.x-c.x1) - (c.x2-c.x1)*(p.y-c.y1))
-           <= 9 * ((c.x2-c.x1)*(c.x2-c.x1) + (c.y2-c.y1)*(c.y2-c.y1))
-         THEN 1 ELSE 0 END) AS BIGINT) AS inliers
-  FROM cand c CROSS JOIN pts p GROUP BY c.j, c.x1, c.y1, c.x2, c.y2
-)
-SELECT CAST(j AS BIGINT) AS best_j, CAST(x1 AS BIGINT) AS x1, CAST(y1 AS BIGINT) AS y1,
-       CAST(x2 AS BIGINT) AS x2, CAST(y2 AS BIGINT) AS y2, inliers
-FROM scored ORDER BY inliers DESC, j LIMIT 1
-""",
-)
-def q_ransac_line_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROBUST LINE FITTING BY DETERMINISTIC RANSAC (GPS-track /
-    boundary-edge estimation under 20% planted outliers): 16
-    deterministic candidate pairs (ids 3j, 3j+1 — both engines pick
-    identical hypotheses, no RNG) are scored against every point with
-    the EXACT integer inlier test dist^2 <= eps^2 cross-multiplied to
-    cross(p)^2 <= eps^2 * |d|^2 — no sqrt, no float, no epsilon
-    ambiguity. The score pass is candidates-broadcast x points (16
-    constant hypotheses — the classic RANSAC shape where data is big
-    and hypotheses are few); argmax by (inliers DESC, j) is a
-    TakeOrdered."""
-    docs = datagen._read(spark, sf_dir, "documents").select("doc_id").distinct()
-    noise = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("n"), F.col("doc_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long") % 5 - 2
-    )
-    is_out = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % 5 == 0
-    )
-    pts = docs.select(
-        F.col("doc_id").alias("id"),
-        F.col("doc_id").alias("x"),
-        F.when(is_out, (F.col("doc_id") * 7919) % 3000)
-        .otherwise(3 * F.col("doc_id") + 7 + noise)
-        .alias("y"),
-    )
-    js = spark.range(16).select(F.col("id").alias("j"))
-    a = pts.select((F.col("id") / 3).cast("long").alias("j"), F.col("x").alias("x1"), F.col("y").alias("y1"), F.col("id").alias("ida"))
-    b = pts.select(((F.col("id") - 1) / 3).cast("long").alias("j"), F.col("x").alias("x2"), F.col("y").alias("y2"), F.col("id").alias("idb"))
-    cand = (
-        js.join(a.filter(F.col("ida") % 3 == 0), "j")
-        .join(b.filter(F.col("idb") % 3 == 1), "j")
-        .select("j", "x1", "y1", "x2", "y2")
-    )
-    cr = (F.col("y2") - F.col("y1")) * (F.col("x") - F.col("x1")) - (
-        F.col("x2") - F.col("x1")
-    ) * (F.col("y") - F.col("y1"))
-    len2 = (F.col("x2") - F.col("x1")) * (F.col("x2") - F.col("x1")) + (
-        F.col("y2") - F.col("y1")
-    ) * (F.col("y2") - F.col("y1"))
-    scored = (
-        pts.crossJoin(F.broadcast(cand))
-        .withColumn("inl", (cr * cr <= 9 * len2).cast("long"))
-        .groupBy("j", "x1", "y1", "x2", "y2")
-        .agg(F.sum("inl").cast("long").alias("inliers"))
-    )
-    return scored.select(
-        F.col("j").alias("best_j"), "x1", "y1", "x2", "y2", "inliers"
-    ).orderBy(F.col("inliers").desc(), "best_j").limit(1)
-
-
-@q(
     "yannakakis_reduction",
     oracle="""
 WITH c AS (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
@@ -18633,113 +16724,6 @@ def q_yannakakis_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_result_orders"),
         F.sum("rev").cast("long").alias("total_rev_cents"),
     )
-
-
-@q(
-    "column_encoding_roundtrip",
-    oracle="""
-WITH s AS (
-  SELECT user_id, CAST(round(value*100) AS BIGINT) AS cents, event_type,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-),
-d AS (
-  SELECT user_id, rn, cents - coalesce(lag(cents) OVER (PARTITION BY user_id ORDER BY rn), 0) AS delta,
-         CASE WHEN event_type = coalesce(lag(event_type) OVER (PARTITION BY user_id ORDER BY rn), '')
-              THEN 0 ELSE 1 END AS is_run_start
-  FROM s
-),
-z AS (
-  SELECT user_id, rn,
-         CASE WHEN delta >= 0 THEN 2*delta ELSE -2*delta - 1 END AS zz,
-         is_run_start
-  FROM d
-)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(count(*) AS BIGINT) AS n_vals,
-       CAST(sum(CASE WHEN zz < 128 THEN 1 WHEN zz < 16384 THEN 2 WHEN zz < 2097152 THEN 3
-                     WHEN zz < 268435456 THEN 4 ELSE 5 END) AS BIGINT) AS varint_bytes,
-       CAST(sum(is_run_start) AS BIGINT) AS n_runs
-FROM z GROUP BY user_id ORDER BY user_id
-""",
-)
-def q_column_encoding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLUMNAR ENCODING KERNELS FROM SCRATCH (the parquet/ORC
-    building blocks): each user's time-ordered cents column is
-    DELTA-encoded, ZIGZAG-mapped, and VARINT-packed to REAL bytes; the
-    event_type column is RLE'd to (value, run_length) pairs — then
-    both are DECODED and the roundtrip asserted inside the Arrow batch
-    (any bit error fails the gate before the oracle is even
-    consulted). Emitted features are the encoded varint byte length
-    and the RLE run count, which the oracle recomputes arithmetically
-    (varint length = magnitude bucket of the zigzag value) without
-    touching bytes — closed-form vs real-codec."""
-    ev = datagen._read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        "event_type",
-        F.row_number().over(w).alias("rn"),
-    )
-    g = s.groupBy("user_id").agg(
-        F.sort_array(F.collect_list(F.struct("rn", "cents", "event_type"))).alias("seq")
-    )
-
-    def batches(it):
-        import pandas as pd
-
-        def varint(n: int) -> bytes:
-            out = bytearray()
-            while True:
-                b = n & 0x7F
-                n >>= 7
-                if n:
-                    out.append(b | 0x80)
-                else:
-                    out.append(b)
-                    return bytes(out)
-
-        rows = []
-        for pdf in it:
-            for uid, seq in zip(pdf["user_id"], pdf["seq"]):
-                cents = [int(x["cents"]) for x in seq]
-                types = [str(x["event_type"]) for x in seq]
-                prev, enc = 0, bytearray()
-                for c in cents:
-                    delta = c - prev
-                    prev = c
-                    zz = 2 * delta if delta >= 0 else -2 * delta - 1
-                    enc += varint(zz)
-                # decode + assert roundtrip
-                dec, acc, shift, cur = [], 0, 0, 0
-                for byte in enc:
-                    cur |= (byte & 0x7F) << shift
-                    if byte & 0x80:
-                        shift += 7
-                    else:
-                        delta = (cur >> 1) if cur % 2 == 0 else -((cur + 1) >> 1)
-                        acc += delta
-                        dec.append(acc)
-                        cur, shift = 0, 0
-                assert dec == cents, "varint/delta roundtrip failed"
-                runs = []
-                for t in types:
-                    if runs and runs[-1][0] == t:
-                        runs[-1][1] += 1
-                    else:
-                        runs.append([t, 1])
-                rebuilt = [t for t, n in runs for _ in range(n)]
-                assert rebuilt == types, "RLE roundtrip failed"
-                rows.append((int(uid), len(cents), len(enc), len(runs)))
-            yield pd.DataFrame(
-                rows, columns=["user_id", "n_vals", "varint_bytes", "n_runs"]
-            )
-            rows = []
-
-    return g.mapInPandas(
-        batches, "user_id long, n_vals long, varint_bytes long, n_runs long"
-    ).orderBy("user_id")
 
 
 @q(
@@ -19131,68 +17115,6 @@ def q_snapshot_string_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "weighted_median_groups",
-    oracle="""
-WITH s AS (
-  SELECT event_type, CAST(round(value*100) AS BIGINT) AS v,
-         event_id % 9 + 1 AS w
-  FROM events
-),
-c AS (
-  SELECT event_type, v, sum(w) AS wv FROM s GROUP BY event_type, v
-),
-cum AS (
-  SELECT event_type, v, wv,
-         sum(wv) OVER (PARTITION BY event_type ORDER BY v) AS cw,
-         sum(wv) OVER (PARTITION BY event_type) AS tw
-  FROM c
-)
-SELECT event_type,
-       CAST(min(CASE WHEN 2 * cw >= tw THEN v END) AS BIGINT) AS weighted_median,
-       CAST(max(tw) AS BIGINT) AS total_weight
-FROM cum GROUP BY event_type ORDER BY event_type
-""",
-)
-def q_weighted_median_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT WEIGHTED MEDIAN per group (the robust center for
-    importance-weighted corpora — sample weights, dedup multiplicity,
-    boost factors): smallest value whose cumulative weight reaches
-    half the group total, computed on per-(group, value) weight sums
-    (the groupBy collapses ties FIRST, so the window's partition is
-    bounded by distinct values, not rows — at 10^12 rows with
-    quantized values that is the difference between a window over
-    billions and over thousands). Integer weights, integer 2*cw >= tw
-    threshold — no interpolation ambiguity."""
-    ev = datagen._read(spark, sf_dir, "events").select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-        (F.col("event_id") % 9 + 1).alias("w"),
-    )
-    c = ev.groupBy("event_type", "v").agg(F.sum("w").alias("wv"))
-    wc = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy("event_type")
-    cum = c.select(
-        "event_type", "v", "wv",
-        F.sum("wv").over(wc).alias("cw"),
-        F.sum("wv").over(wt).alias("tw"),
-    )
-    return (
-        cum.groupBy("event_type")
-        .agg(
-            F.min(F.when(2 * F.col("cw") >= F.col("tw"), F.col("v")))
-            .cast("long")
-            .alias("weighted_median"),
-            F.max("tw").cast("long").alias("total_weight"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@q(
     "maxsim_retrieval",
     oracle="""
 WITH qv AS (
@@ -19526,214 +17448,6 @@ def q_aqe_coalesce_assert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AQE post-shuffle coalescing did not engage:\n" + plan[:2000]
     )
     return spark.createDataFrame(rows, out.schema).orderBy("event_type")
-
-
-@q(
-    "l_diversity_check",
-    oracle="""
-WITH ev AS (
-  SELECT DISTINCT event_id, user_id % 20 AS age_bucket,
-         (event_id * 7) % 5 AS region, event_type AS sensitive
-  FROM events
-),
-g AS (
-  SELECT age_bucket, region,
-         CAST(count(*) AS BIGINT) AS group_n,
-         CAST(count(DISTINCT sensitive) AS BIGINT) AS l_distinct
-  FROM ev GROUP BY age_bucket, region
-)
-SELECT CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(sum(CASE WHEN l_distinct >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_diverse,
-       CAST(sum(CASE WHEN l_distinct < 3 THEN group_n ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-       CAST(min(l_distinct) AS BIGINT) AS min_l
-FROM g
-""",
-)
-def q_l_diversity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L-DIVERSITY AUDIT (the disclosure check k-anonymity misses: a
-    quasi-identifier group can be k-large yet reveal everyone's
-    sensitive value if the group is homogeneous): per (age_bucket,
-    region) group, the count of DISTINCT sensitive values must reach
-    l=3, and the census reports groups, diverse groups, rows at risk,
-    and the worst group's diversity. countDistinct rewrites to a
-    well-distributed two-phase aggregate on (group, value) — the same
-    skew-safe shape the inverted index uses."""
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "user_id", "event_type")
-        .distinct()
-    )
-    g = (
-        ev.select(
-            (F.col("user_id") % 20).alias("age_bucket"),
-            ((F.col("event_id") * 7) % 5).alias("region"),
-            F.col("event_type").alias("sensitive"),
-        )
-        .groupBy("age_bucket", "region")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("group_n"),
-            F.countDistinct("sensitive").cast("long").alias("l_distinct"),
-        )
-    )
-    return g.agg(
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.sum((F.col("l_distinct") >= 3).cast("long")).cast("long").alias("n_diverse"),
-        F.sum(F.when(F.col("l_distinct") < 3, F.col("group_n")).otherwise(0))
-        .cast("long")
-        .alias("n_rows_at_risk"),
-        F.min("l_distinct").cast("long").alias("min_l"),
-    )
-
-
-@q(
-    "mode_per_group",
-    oracle="""
-WITH ev AS (
-  SELECT DISTINCT event_id, event_type, CAST(round(value*100) AS BIGINT) % 40 AS vb
-  FROM events
-),
-c AS (SELECT event_type, vb, CAST(count(*) AS BIGINT) AS n FROM ev GROUP BY event_type, vb),
-r AS (
-  SELECT event_type, vb, n,
-         row_number() OVER (PARTITION BY event_type ORDER BY n DESC, vb) AS rn
-  FROM c
-)
-SELECT event_type, CAST(vb AS BIGINT) AS mode_value, n AS mode_count
-FROM r WHERE rn = 1 ORDER BY event_type
-""",
-)
-def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DETERMINISTIC MODE per group (most frequent value, ties to the
-    smallest — the categorical summary profilers and imputers need,
-    absent from SQL's aggregate canon): counts collapse per (group,
-    value) FIRST, then max_by over the (count DESC, value ASC) struct
-    picks the winner without a window — two shuffles, both on
-    well-distributed keys, never a per-row sort. The explicit
-    tiebreak is what makes mode gateable at all (an undefined-tie mode
-    is nondeterministic across partitionings)."""
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "event_type", F.round(F.col("value") * 100).cast("long").alias("c"))
-        .distinct()
-    )
-    c = ev.select("event_type", (F.col("c") % 40).alias("vb")).groupBy(
-        "event_type", "vb"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    # max(struct(n, -vb)) == (count DESC, value ASC) without a window
-    top = c.groupBy("event_type").agg(
-        F.max(F.struct(F.col("n"), (-F.col("vb")).alias("nv"))).alias("t")
-    )
-    return top.select(
-        "event_type",
-        (-F.col("t.nv")).cast("long").alias("mode_value"),
-        F.col("t.n").alias("mode_count"),
-    ).orderBy("event_type")
-
-
-@q(
-    "getis_ord_hotspots",
-    oracle="""
-WITH g AS (
-  SELECT ((doc_id * 37) % 1800) // 300 AS gx, ((doc_id * 59) % 1800) // 300 AS gy
-  FROM documents
-),
-counts AS (SELECT gx, gy, CAST(count(*) AS BIGINT) AS v FROM g GROUP BY gx, gy),
-spine AS (
-  SELECT a.gx, b.gy
-  FROM (SELECT unnest(range(6)) AS gx) a CROSS JOIN (SELECT unnest(range(6)) AS gy) b
-),
-cells AS (
-  SELECT s.gx, s.gy, COALESCE(c.v, 0) AS v
-  FROM spine s LEFT JOIN counts c ON s.gx = c.gx AND s.gy = c.gy
-),
-tot AS (SELECT CAST(sum(v) AS BIGINT) AS sv FROM cells),
-nbr AS (
-  SELECT a.gx, a.gy,
-         CAST(count(*) AS BIGINT) AS nbr_n,
-         CAST(sum(b.v) AS BIGINT) AS nbr_sum
-  FROM cells a JOIN cells b
-    ON abs(a.gx - b.gx) <= 1 AND abs(a.gy - b.gy) <= 1
-  GROUP BY a.gx, a.gy
-)
-SELECT CAST(n.gx AS BIGINT) AS gx, CAST(n.gy AS BIGINT) AS gy, c.v,
-       n.nbr_n, n.nbr_sum,
-       CAST(36 * n.nbr_sum - n.nbr_n * (SELECT sv FROM tot) AS BIGINT) AS gi_num,
-       CAST(CASE WHEN 36 * n.nbr_sum > n.nbr_n * (SELECT sv FROM tot)
-                 THEN 1 ELSE 0 END AS BIGINT) AS is_hot
-FROM nbr n JOIN cells c ON n.gx = c.gx AND n.gy = c.gy
-ORDER BY gx, gy
-""",
-)
-def q_getis_ord_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOCAL hotspot detection — the Getis-Ord Gi* statistic per grid
-    cell (the per-cell complement to morans_i_grid's single global
-    number; GIS suites pair them): each cell's queen-neighbourhood
-    (3x3 incl. self, clipped at the grid edge) point-count sum is
-    compared against the global mean scaled by the neighbourhood size.
-    The exact-integer core is gi_num = n*nbr_sum - nbr_n*sum(v) (the
-    Gi* numerator scaled by n; its sign is hot-vs-cold), so the gate
-    hashes BIGINTs only — the sqrt-bearing denominator is a per-cell
-    monotone transform that cannot change the hot/cold partition.
-    Scale shape: neighbourhoods are materialized as an EQUI join (each
-    cell scatters its value to its 9 neighbour coordinates, meeting
-    the target cell on (gx, gy)) — never an |dx|<=1 inequality join,
-    so the same plan works when the grid is millions of cells, and the
-    scatter factor is a constant 9."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    g = docs.select(
-        F.expr("((doc_id * 37) % 1800) div 300").alias("gx"),
-        F.expr("((doc_id * 59) % 1800) div 300").alias("gy"),
-    )
-    counts = g.groupBy("gx", "gy").agg(F.count(F.lit(1)).cast("long").alias("v"))
-    spine = (
-        spark.range(6)
-        .select(F.col("id").alias("gx"))
-        .crossJoin(spark.range(6).select(F.col("id").alias("gy")))
-    )
-    cells = spine.join(counts, ["gx", "gy"], "left").select(
-        "gx", "gy", F.coalesce("v", F.lit(0)).cast("long").alias("v")
-    )
-    tot = cells.agg(F.sum("v").cast("long").alias("sv"))
-    # scatter: every cell sends (v) to its 9 neighbour coordinates; the
-    # join back onto the cell spine clips out-of-grid probes
-    probes = cells.select(
-        F.col("v").alias("vb"),
-        F.explode(
-            F.expr(
-                "array(struct(gx-1 AS tx, gy-1 AS ty), struct(gx-1 AS tx, gy AS ty), "
-                "struct(gx-1 AS tx, gy+1 AS ty), struct(gx AS tx, gy-1 AS ty), "
-                "struct(gx AS tx, gy AS ty), struct(gx AS tx, gy+1 AS ty), "
-                "struct(gx+1 AS tx, gy-1 AS ty), struct(gx+1 AS tx, gy AS ty), "
-                "struct(gx+1 AS tx, gy+1 AS ty))"
-            )
-        ).alias("nb"),
-    ).select("vb", F.col("nb.tx").alias("gx"), F.col("nb.ty").alias("gy"))
-    nbr = (
-        probes.join(F.broadcast(cells.select("gx", "gy")), ["gx", "gy"])
-        .groupBy("gx", "gy")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("nbr_n"),
-            F.sum("vb").cast("long").alias("nbr_sum"),
-        )
-    )
-    return (
-        nbr.join(F.broadcast(cells), ["gx", "gy"])
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("gx").cast("long").alias("gx"),
-            F.col("gy").cast("long").alias("gy"),
-            "v",
-            "nbr_n",
-            "nbr_sum",
-            (F.lit(36) * F.col("nbr_sum") - F.col("nbr_n") * F.col("sv"))
-            .cast("long")
-            .alias("gi_num"),
-            (F.lit(36) * F.col("nbr_sum") > F.col("nbr_n") * F.col("sv"))
-            .cast("long")
-            .alias("is_hot"),
-        )
-        .orderBy("gx", "gy")
-    )
 
 
 @q(
@@ -20077,58 +17791,6 @@ def q_trajectory_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "benford_digit_test",
-    oracle="""
-WITH cents AS (
-  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS c FROM lineitem
-),
-dig AS (
-  SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS BIGINT) AS digit FROM cents
-  WHERE c > 0
-),
-n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM dig),
-obs AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_d FROM dig GROUP BY digit)
-SELECT o.digit, o.n_d,
-       CAST((1000000 * o.n_d) // (SELECT total FROM n) AS BIGINT) AS obs_ppm,
-       round(log10(1.0 + 1.0 / o.digit), 6) AS benford_share
-FROM obs o ORDER BY o.digit
-""",
-)
-def q_benford_digit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENFORD first-digit audit — the fraud/data-quality screen that
-    flags fabricated numeric columns (natural multiplicative data has
-    first digit d with probability log10(1+1/d); uniform synthetics
-    don't): the leading digit comes from the EXACT cents integer
-    (round(price*100) then first character — never from float
-    formatting, which differs across engines), the observed share is
-    an integer ppm floor-division, and the only doubles are the nine
-    closed-form Benford constants (log10 of small rationals, all far
-    from round-to-6-places ties). One groupBy on a 9-value key with a
-    broadcast scalar total — the shape is a map-side-combinable
-    full-scan aggregate that trivially survives 100 TB."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    dig = (
-        li.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"))
-        .filter(F.col("c") > 0)
-        .select(F.substring(F.col("c").cast("string"), 1, 1).cast("long").alias("digit"))
-    )
-    n = dig.agg(F.count(F.lit(1)).cast("long").alias("total"))
-    obs = dig.groupBy("digit").agg(F.count(F.lit(1)).cast("long").alias("n_d"))
-    return (
-        obs.crossJoin(F.broadcast(n))
-        .select(
-            "digit",
-            "n_d",
-            F.floor(F.lit(1000000) * F.col("n_d") / F.col("total"))
-            .cast("long")
-            .alias("obs_ppm"),
-            F.round(F.log10(1.0 + 1.0 / F.col("digit")), 6).alias("benford_share"),
-        )
-        .orderBy("digit")
-    )
-
-
-@q(
     "robots_txt_filter",
     oracle="""
 WITH rules(rule_id, prefix, allow) AS (VALUES
@@ -20328,129 +17990,6 @@ def q_cell_cover_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("d").cast("long").alias("depth"), "n_cells", "area_units")
         .orderBy("depth")
     )
-
-
-@q(
-    "t_closeness_check",
-    oracle="""
-WITH ev AS (
-  SELECT DISTINCT event_id, user_id % 20 AS age_bucket,
-         (event_id * 7) % 5 AS region,
-         CAST(round(value * 100) AS BIGINT) % 20 AS sv
-  FROM events
-),
-spine AS (SELECT unnest(range(20)) AS sv),
-gv AS (
-  SELECT age_bucket, region, sv, CAST(count(*) AS BIGINT) AS n
-  FROM ev GROUP BY age_bucket, region, sv
-),
-groups AS (SELECT DISTINCT age_bucket, region FROM ev),
-full_gv AS (
-  SELECT g.age_bucket, g.region, s.sv, COALESCE(gv.n, 0) AS n
-  FROM groups g CROSS JOIN spine s
-  LEFT JOIN gv ON gv.age_bucket = g.age_bucket AND gv.region = g.region AND gv.sv = s.sv
-),
-cums AS (
-  SELECT age_bucket, region, sv,
-         sum(n) OVER (PARTITION BY age_bucket, region ORDER BY sv
-                      ROWS UNBOUNDED PRECEDING) AS cum_g,
-         sum(n) OVER (PARTITION BY age_bucket, region) AS n_g
-  FROM full_gv
-),
-gl AS (
-  SELECT sv, sum(n) AS gn FROM full_gv GROUP BY sv
-),
-glc AS (
-  SELECT sv, sum(gn) OVER (ORDER BY sv ROWS UNBOUNDED PRECEDING) AS cum_all,
-         sum(gn) OVER () AS n_all
-  FROM gl
-),
-emd AS (
-  SELECT c.age_bucket, c.region, max(c.n_g) AS group_n,
-         CAST(sum(abs(g.n_all * c.cum_g - c.n_g * g.cum_all)) AS BIGINT) AS emd_scaled,
-         CAST(max(19 * c.n_g * g.n_all) AS BIGINT) AS t_den
-  FROM cums c JOIN glc g ON c.sv = g.sv
-  GROUP BY c.age_bucket, c.region
-)
-SELECT CAST(age_bucket AS BIGINT) AS age_bucket, CAST(region AS BIGINT) AS region,
-       CAST(group_n AS BIGINT) AS group_n, emd_scaled,
-       CAST(CASE WHEN 10 * emd_scaled > t_den THEN 1 ELSE 0 END AS BIGINT) AS violates_t
-FROM emd ORDER BY age_bucket, region
-""",
-)
-def q_t_closeness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T-CLOSENESS AUDIT — the third rung of the anonymity ladder
-    (k_anonymity_suppress counts group sizes, l_diversity_check counts
-    distinct sensitive values; t-closeness bounds how far a group's
-    sensitive DISTRIBUTION drifts from the global one, catching the
-    skewed-but-diverse leak the other two miss). Distance is the 1D
-    Wasserstein/EMD over the ordered sensitive domain, kept EXACT by
-    cross-multiplying the two CDFs to a common integer denominator:
-    emd_scaled = sum_v |n_all*cumG_v - n_g*cumAll_v|, and the t>0.1
-    verdict is the integer comparison 10*emd > (m-1)*n_g*n_all — no
-    float division anywhere. Windows partition by group over the
-    20-value domain spine; the global CDF is a broadcast-sized side."""
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "user_id", "value")
-        .distinct()
-        .select(
-            (F.col("user_id") % 20).alias("age_bucket"),
-            ((F.col("event_id") * 7) % 5).alias("region"),
-            (F.round(F.col("value") * 100).cast("long") % 20).alias("sv"),
-        )
-    )
-    spine = spark.range(20).select(F.col("id").alias("sv"))
-    gv = ev.groupBy("age_bucket", "region", "sv").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    groups = ev.select("age_bucket", "region").distinct()
-    full_gv = (
-        groups.crossJoin(F.broadcast(spine))
-        .join(gv, ["age_bucket", "region", "sv"], "left")
-        .select("age_bucket", "region", "sv", F.coalesce("n", F.lit(0)).alias("n"))
-    )
-    wg = Window.partitionBy("age_bucket", "region").orderBy("sv").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wtot = Window.partitionBy("age_bucket", "region")
-    cums = full_gv.select(
-        "age_bucket",
-        "region",
-        "sv",
-        F.sum("n").over(wg).alias("cum_g"),
-        F.sum("n").over(wtot).alias("n_g"),
-    )
-    gl = full_gv.groupBy("sv").agg(F.sum("n").alias("gn"))
-    wa = Window.orderBy("sv").rowsBetween(Window.unboundedPreceding, 0)
-    # 20-row global CDF: the single-partition window is over the
-    # broadcast-sized value spine, not the data
-    glc = gl.select(
-        "sv",
-        F.sum("gn").over(wa).alias("cum_all"),
-    ).crossJoin(F.broadcast(gl.agg(F.sum("gn").alias("n_all"))))
-    emd = (
-        cums.join(F.broadcast(glc), "sv")
-        .groupBy("age_bucket", "region")
-        .agg(
-            F.max("n_g").cast("long").alias("group_n"),
-            F.sum(
-                F.abs(
-                    F.col("n_all") * F.col("cum_g") - F.col("n_g") * F.col("cum_all")
-                )
-            )
-            .cast("long")
-            .alias("emd_scaled"),
-            F.max(F.lit(19) * F.col("n_g") * F.col("n_all")).cast("long").alias("t_den"),
-        )
-    )
-    return emd.select(
-        F.col("age_bucket").cast("long").alias("age_bucket"),
-        F.col("region").cast("long").alias("region"),
-        "group_n",
-        "emd_scaled",
-        (F.lit(10) * F.col("emd_scaled") > F.col("t_den")).cast("long").alias("violates_t"),
-    ).orderBy("age_bucket", "region")
 
 
 @q(
@@ -20802,91 +18341,6 @@ def q_suffix_array_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "decision_tree_table_inference",
-    oracle=r"""
-WITH f AS (
-  SELECT CAST(round(CAST(o_totalprice AS DOUBLE)*100) AS BIGINT) AS f0,
-         datediff('day', DATE '1992-01-01', o_orderdate) AS f1,
-         o_custkey % 97 AS f2
-  FROM orders
-),
-lab AS (
-  SELECT f0, CASE WHEN f0 < 15000000 THEN
-               CASE WHEN f1 < 1200 THEN
-                 CASE WHEN f0 < 5000000 THEN 8 ELSE 9 END
-               ELSE CASE WHEN f2 < 20 THEN 10 ELSE 11 END END
-             ELSE CASE WHEN f2 < 48 THEN
-                 CASE WHEN f1 < 2000 THEN 12 ELSE 13 END
-               ELSE CASE WHEN f0 < 30000000 THEN 14 ELSE 15 END END END AS leaf
-  FROM f
-)
-SELECT CAST(leaf AS BIGINT) AS leaf,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(f0) AS BIGINT) AS sum_f0
-FROM lab GROUP BY leaf ORDER BY leaf
-""",
-)
-def q_decision_tree_table_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decision-tree inference where the MODEL IS DATA: the tree lives
-    in a node TABLE (node_id, feature, threshold, left, right) — the
-    shape a model registry or PMML import produces — and scoring is an
-    iterative pointer walk: depth rounds of broadcast-joining the
-    current node id against the node table and branching on the
-    row's feature value. The oracle compiles the same tree to a static
-    nested CASE, so the two sides share nothing structurally: a wrong
-    child pointer, feature index, or threshold comparison in the walk
-    diverges from the compiled form. Broadcast of a ~15-row dim per
-    round is the 100 TB shape (model size is independent of data
-    size); depth rounds = 3 joins, no shuffle of the fact side.
-    Exact integer features (price cents, epoch-day, custkey mod)."""
-    o = datagen._read(spark, sf_dir, "orders")
-    f = o.select(
-        F.expr("cast(round(cast(o_totalprice as double)*100) as bigint)").alias("f0"),
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date")
-        ).cast("long").alias("f1"),
-        (F.col("o_custkey") % 97).alias("f2"),
-    )
-    # (node_id, feature, threshold, left, right); leaves are ids 8..15
-    nodes = spark.createDataFrame(
-        [
-            (1, 0, 15000000, 2, 3),
-            (2, 1, 1200, 4, 5),
-            (3, 2, 48, 6, 7),
-            (4, 0, 5000000, 8, 9),
-            (5, 2, 20, 10, 11),
-            (6, 1, 2000, 12, 13),
-            (7, 0, 30000000, 14, 15),
-        ],
-        "node_id long, feature int, threshold long, left long, right long",
-    )
-    cur = f.withColumn("cur", F.lit(1).cast("long"))
-    for _ in range(3):  # uniform depth-3 walk: every row lands on a leaf
-        n = F.broadcast(nodes)
-        cur = (
-            cur.join(n, cur.cur == n.node_id, "inner")
-            .withColumn(
-                "fv",
-                F.when(F.col("feature") == 0, F.col("f0"))
-                .when(F.col("feature") == 1, F.col("f1"))
-                .otherwise(F.col("f2")),
-            )
-            .withColumn(
-                "cur2",
-                F.when(F.col("fv") < F.col("threshold"), F.col("left")).otherwise(
-                    F.col("right")
-                ),
-            )
-            .select("f0", "f1", "f2", F.col("cur2").alias("cur"))
-        )
-    return (
-        cur.groupBy(F.col("cur").alias("leaf"))
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("f0").alias("sum_f0"))
-        .orderBy("leaf")
-    )
-
-
-@q(
     "semdedup_clusters",
     oracle=r"""
 WITH base AS (
@@ -20928,13 +18382,13 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant): within each embedding cluster, a vector is dropped iff
     some LOWER-ID vector in the same cluster is cosine-similar above
     0.9 — the deterministic form of the paper's keep-one-per-
-    semantic-group rule, with the kmeans cluster id played by the
-    `label` column (cluster training itself is gated separately by
-    kmeans_clusters). The corpus plants a near-duplicate for every
-    fifth vector (last 4 of 64 dims zeroed, ~6% energy loss, cos
-    ~0.97) so both branches fire: planted copies drop against their
-    originals, genuinely distant pairs survive, and tail-heavy
-    vectors whose zeroed dims carried >19% energy stay below the
+    semantic-group rule, with the k-means cluster id played by the
+    `label` column (cluster training is out of scope). The corpus
+    plants a near-duplicate for every fifth vector (last 4 of 64 dims
+    zeroed, ~6% energy loss, cos ~0.97) so both branches fire: planted
+    copies drop against their originals, genuinely distant pairs
+    survive, and tail-heavy vectors whose zeroed dims carried >19%
+    energy stay below the
     threshold (the data contains such a survivor — both sides must
     agree on it). Cosine >= 0.9 is evaluated in EXACT integers on
     centi-quantized components via cross-multiplication
@@ -20991,112 +18445,6 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "kept_checksum",
         )
         .orderBy("label")
-    )
-
-
-@q(
-    "lttb_downsample",
-    oracle=r"""
-WITH c0 AS (
-  SELECT user_id, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-         count(*) AS y
-  FROM events
-  WHERE CAST(ts AS DATE) >= DATE '2024-01-01'
-    AND datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 32
-  GROUP BY 1, 2
-),
-b AS (
-  SELECT user_id, x // 4 AS bkt, count(*) AS n,
-         sum(x) AS sx, sum(y) AS sy
-  FROM c0 GROUP BY user_id, x // 4
-),
-cand AS (
-  SELECT c.user_id, c.x // 4 AS bkt, c.x, c.y,
-         (l.sx - l.n * c.x) * (r.sy - r.n * c.y)
-       - (r.sx - r.n * c.x) * (l.sy - l.n * c.y) AS s2
-  FROM c0 c
-  JOIN b l ON l.user_id = c.user_id AND l.bkt = c.x // 4 - 1
-  JOIN b r ON r.user_id = c.user_id AND r.bkt = c.x // 4 + 1
-),
-pick AS (
-  SELECT user_id, bkt, x, y,
-         row_number() OVER (
-           PARTITION BY user_id, bkt ORDER BY abs(s2) DESC, x
-         ) AS rn
-  FROM cand
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_selected,
-       CAST(sum(x * y) AS BIGINT) AS sel_checksum,
-       CAST(sum(x) AS BIGINT) AS sel_days
-FROM pick WHERE rn = 1
-GROUP BY user_id ORDER BY user_id
-""",
-)
-def q_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LTTB downsampling (Steinarsson 2013), fixed-anchor variant:
-    per user-day series, each 4-day bucket keeps the single point
-    forming the LARGEST TRIANGLE with the neighbouring buckets'
-    centroids. Classic LTTB anchors on the previously SELECTED point
-    (inherently sequential); anchoring on the fixed adjacent-bucket
-    centroids removes the chain dependency so every bucket picks
-    independently — the distributed form. Centroid fractions are
-    eliminated by scaling the cross product by n_left*n_right:
-    S = (SXl - nl*x)*(SYr - nr*y) - (SXr - nr*x)*(SYl - nl*y), an
-    exact integer; argmax |S| with min-day tiebreak. Buckets missing
-    a neighbour are skipped (no partial anchors). Per-(user,bucket)
-    windows are bounded at 4 rows — no global window anywhere."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    day0 = F.lit("2024-01-01").cast("date")
-    c0 = (
-        ev.select(
-            "user_id", F.datediff(F.col("ts").cast("date"), day0).alias("x")
-        )
-        .filter((F.col("x") >= 0) & (F.col("x") < 32))
-        .groupBy("user_id", "x")
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    b = c0.groupBy(
-        "user_id", F.expr("x div 4").alias("bkt")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-    )
-    l = b.select(
-        F.col("user_id").alias("ul"), F.col("bkt").alias("bl"),
-        F.col("n").alias("nl"), F.col("sx").alias("sxl"), F.col("sy").alias("syl"),
-    )
-    r = b.select(
-        F.col("user_id").alias("ur"), F.col("bkt").alias("br"),
-        F.col("n").alias("nr"), F.col("sx").alias("sxr"), F.col("sy").alias("syr"),
-    )
-    cand = (
-        c0.withColumn("bkt", F.expr("x div 4"))
-        .join(l, (F.col("ul") == F.col("user_id")) & (F.col("bl") == F.col("bkt") - 1))
-        .join(r, (F.col("ur") == F.col("user_id")) & (F.col("br") == F.col("bkt") + 1))
-        .withColumn(
-            "s2",
-            (F.col("sxl") - F.col("nl") * F.col("x"))
-            * (F.col("syr") - F.col("nr") * F.col("y"))
-            - (F.col("sxr") - F.col("nr") * F.col("x"))
-            * (F.col("syl") - F.col("nl") * F.col("y")),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id", "bkt").orderBy(
-        F.abs(F.col("s2")).desc(), F.col("x")
-    )
-    pick = cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return (
-        pick.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_selected"),
-            F.sum(F.col("x") * F.col("y")).alias("sel_checksum"),
-            F.sum("x").alias("sel_days"),
-        )
-        .orderBy("user_id")
     )
 
 
@@ -21495,79 +18843,6 @@ def q_d8_flow_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return d8_flow_accumulation(cells, rounds=16).orderBy("cell")
-
-
-@q(
-    "semivariogram_bins",
-    oracle=r"""
-WITH pts AS (
-  SELECT doc_id, doc_id % 64 AS x, (doc_id * 29) % 61 AS y,
-         (doc_id * 13) % 100 AS z
-  FROM documents
-),
-pairs AS (
-  SELECT (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2,
-         (a.z - b.z) * (a.z - b.z) AS dz2
-  FROM pts a JOIN pts b ON a.doc_id < b.doc_id
-  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) BETWEEN 1 AND 100
-)
-SELECT d2 // 20 AS lag_bin,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(dz2) AS BIGINT) AS gamma_num
-FROM pairs GROUP BY d2 // 20 ORDER BY lag_bin
-""",
-)
-def q_semivariogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMPIRICAL SEMIVARIOGRAM (Matheron's geostatistics estimator,
-    the kriging precursor): for point pairs within range 10, the
-    binned numerator sum((z_i - z_j)^2) and pair count per squared-
-    distance lag bin — reported as exact integer (numerator, count)
-    pairs, never the float ratio (2*gamma(h) = num/count is the
-    consumer's division). Scale shape: the pairwise stage is GRID
-    BLOCKED at cell size == range — each point keys to its cell, the
-    right side explodes to its 3x3 neighbourhood, pairs meet exactly
-    once under the id-order filter (a neighbour appears in a given
-    cell at most once), and the exact d2 predicate touches only
-    blocked candidates. The oracle is the quadratic definition."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pts = docs.select(
-        "doc_id",
-        (F.col("doc_id") % 64).alias("x"),
-        ((F.col("doc_id") * 29) % 61).alias("y"),
-        ((F.col("doc_id") * 13) % 100).alias("z"),
-    )
-    a = pts.select(
-        F.col("doc_id").alias("ia"), F.col("x").alias("xa"),
-        F.col("y").alias("ya"), F.col("z").alias("za"),
-        F.expr("x div 10").alias("cx"), F.expr("y div 10").alias("cy"),
-    )
-    b = (
-        pts.select(
-            F.col("doc_id").alias("ib"), F.col("x").alias("xb"),
-            F.col("y").alias("yb"), F.col("z").alias("zb"),
-        )
-        .withColumn(
-            "cx", F.explode(F.sequence(F.expr("xb div 10") - 1, F.expr("xb div 10") + 1))
-        )
-        .withColumn(
-            "cy", F.explode(F.sequence(F.expr("yb div 10") - 1, F.expr("yb div 10") + 1))
-        )
-    )
-    dx = F.col("xa") - F.col("xb")
-    dy = F.col("ya") - F.col("yb")
-    dz = F.col("za") - F.col("zb")
-    pairs = (
-        a.join(b, ["cx", "cy"])
-        .filter(F.col("ia") < F.col("ib"))
-        .withColumn("d2", dx * dx + dy * dy)
-        .filter((F.col("d2") >= 1) & (F.col("d2") <= 100))
-    )
-    return (
-        pairs.select(F.expr("d2 div 20").alias("lag_bin"), (dz * dz).alias("dz2"))
-        .groupBy("lag_bin")
-        .agg(F.count(F.lit(1)).alias("n_pairs"), F.sum("dz2").alias("gamma_num"))
-        .orderBy("lag_bin")
-    )
 
 
 @q(

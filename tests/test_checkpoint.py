@@ -81,12 +81,16 @@ def test_kill_mid_pipeline_recomputes_incomplete_stage(spark, sf_dir, ckpt_dir):
 def test_metrics_lineage_rows(spark, sf_dir, ckpt_dir, tmp_path):
     r1, out1 = run_pipeline(spark, sf_dir, ckpt_dir, "r1")
     pages = datagen.build_pages(spark, sf_dir).repartition(8)
-    # the ledger adds no Spark job: a stage costs what writing the
-    # DataFrame and reading it back costs
+    # neither the ledger nor the read-back adds a Spark job: a stage
+    # costs what writing the DataFrame costs
     bare = str(tmp_path / "bare")
-    plain = _job_ids(spark, "plain", lambda: (pages.write.parquet(bare), spark.read.parquet(bare)))
-    staged = _job_ids(spark, "staged", lambda: r1.stage("pages8", lambda: pages))
+    plain = _job_ids(spark, "plain", lambda: pages.write.parquet(bare))
+    got = []
+    staged = _job_ids(spark, "staged", lambda: got.append(r1.stage("pages8", lambda: pages)))
     assert len(staged) == len(plain)
+    # the schema-given read sees what an inferred read of the stage sees
+    for stage, df in (("pages8", got[0]), ("geotag", out1)):
+        assert df.schema == spark.read.parquet(os.path.join(ckpt_dir, f"stage={stage}")).schema
     # Spark writes one part file for an empty stage: one row, rows_out 0
     r1.stage("empty", lambda: pages.limit(0))
 

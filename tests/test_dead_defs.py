@@ -1,13 +1,16 @@
-"""Dead-definition guard: every top-level package ``def``/``class`` must
-be referenced somewhere in the repo (package, tests, tools, scripts).
+"""Dead-definition guard: every top-level package ``def``/``class`` and
+module-level constant (``X = ...`` / ``X: T = ...``) must be referenced
+somewhere in the repo (package, tests, tools, scripts).
 
 Pure ``ast`` pass over the source tree — no Spark, no imports of the
-package. A definition counts as referenced when its name appears
-anywhere as an ``ast.Name``, an ``ast.Attribute`` attribute, an import
-alias, or an identifier-shaped string constant (``__all__``, registry
-keys, ``getattr`` names). Definitions carrying a decorator other than
-``pandas_udf`` are registered through that decorator (``@q`` queries,
-``@given`` tests, ...) and are out of scope.
+package. A definition counts as referenced when its name is loaded
+anywhere as an ``ast.Name`` or an ``ast.Attribute`` attribute, or
+appears as an import alias or an identifier-shaped string constant
+(``__all__``, registry keys, ``getattr`` names). Assigning a name is
+not a reference, so a constant is not kept alive by its own
+assignment. Definitions carrying a decorator other than ``pandas_udf``
+are registered through that decorator (``@q`` queries, ``@given``
+tests, ...) and are out of scope, as are dunders (``__version__``).
 
 The reverse direction — code deleted from under a caller that is kept —
 is guarded by ``test_every_relative_import_resolves``, which does import
@@ -49,9 +52,9 @@ def _decorator_name(d: ast.expr) -> str:
 def _references(tree: ast.AST) -> set[str]:
     refs: set[str] = set()
     for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
             refs.add(node.id)
-        elif isinstance(node, ast.Attribute):
+        elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
             refs.add(node.attr)
         elif isinstance(node, ast.alias):
             refs.update(node.name.split("."))
@@ -75,10 +78,16 @@ def find_dead_defs(root: str = ROOT) -> list[str]:
             continue
         rel = os.path.relpath(path, root)
         for node in tree.body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            if all(_decorator_name(d) == "pandas_udf" for d in node.decorator_list):
-                candidates.append((rel, node.name))
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if all(_decorator_name(d) == "pandas_udf" for d in node.decorator_list):
+                    candidates.append((rel, node.name))
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                candidates += [
+                    (rel, t.id)
+                    for t in targets
+                    if isinstance(t, ast.Name) and not (t.id.startswith("__") and t.id.endswith("__"))
+                ]
     return sorted(f"{rel}:{name}" for rel, name in candidates if name not in refs)
 
 

@@ -1,4 +1,4 @@
-"""Hilbert index, Allen relations, consistent hashing: unit coverage."""
+"""Hilbert index and Allen relations: unit coverage."""
 
 import pyspark.sql.functions as F
 
@@ -91,16 +91,3 @@ def test_allen_case_ladder_examples(spark):
     assert rel(2, 6, 0, 4) == "overlapped_by"
     assert "allen_relations" in QUERIES
 
-
-def test_consistent_hash_minimal_movement(spark, sf_correct):
-    from osm_admin_boundary_conflation_spark.queries import QUERIES
-
-    rows = QUERIES["consistent_hash_rebalance"](spark, sf_correct).collect()
-    moved = {(r.old_shard, r.new_shard): r.n_keys for r in rows}
-    # Karger property: only s2's keys move; every other shard is diagonal
-    for (old, new), n in moved.items():
-        if old != "s2":
-            assert old == new, f"non-decommissioned shard moved keys: {old}->{new}"
-        else:
-            assert new != "s2"
-    assert sum(n for (o, _), n in moved.items() if o == "s2") > 0

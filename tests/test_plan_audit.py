@@ -57,6 +57,7 @@ def test_tool_name_lists_name_registered_queries():
     lists = {
         "plan_audit.HARNESS": plan_audit.HARNESS,
         "plan_audit.NESTED_LOOP_SCALAR_OK": plan_audit.NESTED_LOOP_SCALAR_OK,
+        "plan_audit.SINGLE_PART_OK": plan_audit.SINGLE_PART_OK,
         "plan_audit.INLINE_WORLD": plan_audit.INLINE_WORLD,
         "plan_audit.CONFLATE_CHECKPOINTS": plan_audit.CONFLATE_CHECKPOINTS,
         "bench.HEADLINE": bench.HEADLINE,

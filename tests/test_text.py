@@ -183,28 +183,6 @@ def test_sign_lsh_band_occupancy(spark, sf_dir):
     assert occ8["nb"] > len(occ4)
 
 
-def test_kmeans_parallelism_invariance(spark, sf_dir):
-    """Lloyd's assignments are identical across shuffle parallelism —
-    float centroid averaging is order-dependent in the last ulp, so this
-    guards the margin between clusters staying >> summation noise."""
-    from osm_admin_boundary_conflation_spark.operators import kmeans as KM
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-
-    def run():
-        return sorted(tuple(r) for r in KM.lloyd_assignments(emb, 8, 2).collect())
-
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        a = run()
-        spark.conf.set("spark.sql.shuffle.partitions", "17")
-        b = run()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert a == b
-
-
 def test_jvm_simhash_bit_exact(spark):
     """JVM simhash_signatures == functions.text.simhash64 bit-for-bit
     (same md5 token family, same bit-majority rule)."""

@@ -50,7 +50,6 @@ HARNESS = {
     "warc_cdx_fetch",
     "osm_xml_scan",
     "subarea_sync",
-    "kmeans_clusters",
     "ann_ivf_topk",
     "ann_ivf_multiprobe",
     "snapshot_time_travel",
@@ -90,26 +89,16 @@ NESTED_LOOP_SCALAR_OK = {
     "hll_intersect_estimate",  # 1-row truth x 1-row pivoted sums scalar join
     "morans_i_grid",  # constant 5x5 spine + 1-row total scalar joins; adjacency itself is equi
     "merge_three_clause",  # 1-row action counts x 1-row result invariants scalar join
-    "consistent_hash_rebalance",  # keys x constant 40-row broadcast ring (bounded multiplier)
-    "k_anonymity_suppress",  # 1-row census x 1-row min-group scalar joins
-    "retrieval_metrics",  # candidates x constant 5-query broadcast (bounded multiplier)
-    "seasonal_decompose_daily",  # 1-row grand-mean scalar join; day spine is a bounded artifact
     "skew_diagnosis",  # 1-row totals x 1-row gini scalar joins (ranks are two-phase bucket ranks)
     "pmi_pairs_scaled",  # 1-row corpus-N scalar broadcast
     "raster_region_label",  # 1-row fg-count x 1-row region census scalar join
     "grid_line_of_sight",  # 25x25 tower self-pairing (constant dim x dim broadcast)
     "rrf_fusion",  # 1-row query-vector broadcast (ranks are two-phase bucket ranks)
     "stream_dead_letter",  # 1-row main-table stats x 1-row DLQ stats scalar join
-    "idw_interpolate",  # points x constant 40-row broadcast station dim (knn.py: right plan for dim-sized sites)
     "temperature_resample",  # 1-row weight-total scalar broadcast
     "golden_record_merge",  # customers x constant 3-row source-copy broadcast
     "quantile_normalize",  # 1-row min-group-size scalar broadcast
-    "distribution_drift_tv",  # days x constant 5-type spine (bounded multiplier)
-    "getis_ord_hotspots",  # constant 6x6 grid spine + 1-row global-stats scalar
-    "benford_digit_test",  # 1-row corpus-N scalar broadcast
-    "t_closeness_check",  # groups x constant 20-value domain spine
     "douglas_peucker_simplify",  # ways x constant 121-point synthetic spine
-    "decision_tree_table_inference",  # round-1 root join constant-folds to a 1-row broadcast
     "setops_all_semantics",  # 1-row census scalars crossJoined for the identity check
     "stream_output_modes",  # 1-row update-sink stats x 1-row complete-sink stats
     "dedup_incremental_index",  # 1-row delta/dup/kept census scalars crossJoined
@@ -140,10 +129,18 @@ NESTED_LOOP_SCALAR_OK = {
     "kendall_tau_inversions",  # cells x distinct-y-bucket broadcast (bounded metadata grain) + 1-row scalar combine chain
     "rank_join_topk",  # k x k broadcast grid of the two pruned top-k sides (bounded by construction)
     "raster_slope_stencil",  # 64 x 48 constant grid spine (bounded dim x dim broadcast, same as grid_line_of_sight)
-    "rendezvous_hash_assign",  # keys x constant 12-node broadcast (bounded multiplier, consistent_hash sibling)
     "tile_simplify_pyramid",  # rings x constant 3-zoom broadcast (bounded multiplier)
-    "ransac_line_fit",  # points x constant 16-hypothesis broadcast (the RANSAC shape)
     "bitemporal_asof",  # observations x constant 6-probe broadcast grid (bounded multiplier)
+}
+
+# queries whose single-partition exchange was hand-audited as intended;
+# skew_diagnosis and rrf_fusion left this list in r7: their global ranks
+# now run as two-phase bucket ranks (plans/dense_index.global_rank) with
+# no 1-partition window
+SINGLE_PART_OK = {
+    "quality_deciles",
+    "skyline_frontier",
+    "contribution_analysis",
 }
 
 # queries that build their synthetic world INLINE (datagen unions in the
@@ -273,21 +270,7 @@ def main() -> None:
         if r.get("python_row")
         or r.get("dup_udf")
         or (r.get("nested_loop") and r["name"] not in NESTED_LOOP_SCALAR_OK)
-        # skew_diagnosis and rrf_fusion left this exemption list in r7:
-        # their global ranks now run as two-phase bucket ranks
-        # (plans/dense_index.global_rank) with no 1-partition window
-        or (
-            r.get("single_part")
-            # t_closeness: global CDF ranks over the constant 20-value
-            # domain spine — bounded-set global window, hand-audited
-            and r["name"]
-            not in (
-                "quality_deciles",
-                "skyline_frontier",
-                "contribution_analysis",
-                "t_closeness_check",
-            )
-        )
+        or (r.get("single_part") and r["name"] not in SINGLE_PART_OK)
     ]
     out = [
         "# PLAN AUDIT — every registry query's executed plan, summarized",
