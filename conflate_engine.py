@@ -61,8 +61,10 @@ def main() -> None:
     elif args.job == "conflate":
         from osm_admin_boundary_conflation_spark.operators.conflation import conflate
 
+        # look tables up inside the stage lambdas: world.items() would
+        # build the world even when every table stage resumes
         world = datagen_osm.build_osm_world(spark, args.sf_dir)
-        staged = {k: runner.stage(k, lambda df=df: df) for k, df in world.items()}
+        staged = {k: runner.stage(k, lambda k=k: world[k]) for k in world}
         out = runner.stage(
             "verdicts",
             lambda: conflate(

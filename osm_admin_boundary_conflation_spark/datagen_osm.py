@@ -38,9 +38,17 @@ Id spaces: source node = way*10000+i; OSM candidate = 10_000_000+way
 (second candidate 10_500_000+way), its nodes 5e9+way*10000+i; sharing
 way = 11_000_000+way; extra relation = 30_000_000+way; source
 relations' level9 refs r1/r2/r3 = way*4+1/2/3.
+
+``build_osm_world`` returns the world lazily: nothing is built until a
+table is looked up, so a resumed stage that only names a table builds
+nothing. In memory, every table is a narrow projection of one leaf, the
+base ways checkpointed once; no table is cached in memory.
 """
 
 from __future__ import annotations
+
+import os
+from collections.abc import Callable, Iterator, Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -93,9 +101,45 @@ def _node_ids(base, n_pts, closed=None):
     return F.when(closed, ids_closed).otherwise(ids_open)
 
 
-_WORLD_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
 _WORLD_TABLES = ("src_ways", "src_rels", "osm_ways", "osm_node_tags", "osm_rels")
+
+
+class _LazyWorld(Mapping):
+    """Read-only mapping over the five world tables. The first lookup of
+    any name runs ``load`` and builds all five; naming the tables
+    (``keys()``, ``in``, ``len``) builds nothing."""
+
+    def __init__(self, load: Callable[[], dict[str, DataFrame]]):
+        self._load = load
+        self._tables: dict[str, DataFrame] | None = None
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if self._tables is None:
+            self._tables = self._load()
+        return self._tables[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in _WORLD_TABLES
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(_WORLD_TABLES)
+
+    def __len__(self) -> int:
+        return len(_WORLD_TABLES)
+
+
+_WORLD_CACHE: dict[tuple[int, str], _LazyWorld] = {}
+
+
+def _trim_coords(world: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """Null the coords of >=2000-point ways: their verdict is decided by
+    node count alone (conflate.py:365-368), so no gigabyte arrays enter
+    checkpoint storage, parquet or downstream broadcast-size estimates."""
+    return {
+        **world,
+        "src_ways": world["src_ways"].withColumn("coords", F.when(F.size("node_ids") < 2000, F.col("coords"))),
+        "osm_ways": world["osm_ways"].withColumn("coords", F.when(F.size("coords") < 2000, F.col("coords"))),
+    }
 
 
 def materialize_osm_world(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -103,16 +147,8 @@ def materialize_osm_world(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
     measured): conflate-family bench timings then measure ENGINE
     operators, not synthetic-array generation (VERDICT r01 bench
     attribution). Coord payloads of >=2000-node ways are trimmed exactly
-    as the in-memory checkpoint path does."""
-    import os
-
-    world = _build_osm_world(spark, sf_dir)
-    world["src_ways"] = world["src_ways"].withColumn(
-        "coords", F.when(F.size("node_ids") < 2000, F.col("coords"))
-    )
-    world["osm_ways"] = world["osm_ways"].withColumn(
-        "coords", F.when(F.size("coords") < 2000, F.col("coords"))
-    )
+    as the in-memory path does."""
+    world = _trim_coords(_build_osm_world(spark, sf_dir))
     for name in _WORLD_TABLES:
         # small row groups: the way tables carry 2000-element coord/node
         # arrays, so a default 128MB row group decompresses to several
@@ -123,52 +159,57 @@ def materialize_osm_world(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
         ).parquet(os.path.join(out_dir, name))
 
 
-def build_osm_world(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Memoized per (session, sf_dir) with persisted tables: four
-    conflate-family queries share one world instead of regenerating the
-    synthetic arrays per query. If $SPARK_GRAFT_WORLD_DIR points at a
-    materialized world (bench setup), the tables are read from parquet —
-    identical rows, but scan-backed like a real input."""
-    import os
+def build_osm_world(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
+    """The five world tables, memoized per (session, sf_dir) so the
+    conflate-family queries share one world.
 
+    Nothing is built until a table is looked up: a staged job that only
+    names tables inside the build lambdas of stages it resumes builds no
+    world, and starts no Spark job for it. The first lookup builds all
+    five. In memory, they are narrow projections of one eagerly
+    checkpointed leaf (``_build_osm_world``); the two ways tables are
+    trimmed and locally checkpointed on first use, the three small
+    tables are not cached. If $SPARK_GRAFT_WORLD_DIR points at a
+    materialized world (bench setup), the tables are read from parquet
+    instead — identical rows, but scan-backed like a real input — and
+    the three small ones are persisted."""
     key = (id(spark), sf_dir)
-    if key in _WORLD_CACHE:
-        return _WORLD_CACHE[key]
-    wdir = os.environ.get("SPARK_GRAFT_WORLD_DIR")
-    if wdir and os.path.exists(os.path.join(wdir, "src_ways", "_SUCCESS")):
-        world = {name: spark.read.parquet(os.path.join(wdir, name)) for name in _WORLD_TABLES}
-        for name in ("src_rels", "osm_rels", "osm_node_tags"):
-            world[name].persist()
-        _WORLD_CACHE[key] = world
-        return world
-    world = _build_osm_world(spark, sf_dir)
-    # small relation/tag tables: cheap in-memory persist
+    if key not in _WORLD_CACHE:
+        wdir = os.environ.get("SPARK_GRAFT_WORLD_DIR")
+        if wdir and os.path.exists(os.path.join(wdir, "src_ways", "_SUCCESS")):
+            _WORLD_CACHE[key] = _LazyWorld(lambda: _read_osm_world(spark, wdir))
+        else:
+            _WORLD_CACHE[key] = _LazyWorld(lambda: _checkpointed_osm_world(spark, sf_dir))
+    return _WORLD_CACHE[key]
+
+
+def _read_osm_world(spark: SparkSession, wdir: str) -> dict[str, DataFrame]:
+    world = {name: spark.read.parquet(os.path.join(wdir, name)) for name in _WORLD_TABLES}
     for name in ("src_rels", "osm_rels", "osm_node_tags"):
         world[name].persist()
+    return world
+
+
+def _checkpointed_osm_world(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # ways tables are referenced by several DAG branches (membership
     # join, candidate index, reverse node index, geometry join):
-    # localCheckpoint them once so the synthetic arrays are not
-    # regenerated per branch (measured ~30% off conflate wall time).
-    # Checkpoint the TRIMMED variants: coords of >=2000-point ways are
-    # nulled first (their verdict is decided by node count alone,
-    # conflate.py:365-368), so no gigabyte arrays enter checkpoint
-    # storage or downstream broadcast-size estimates.
-    world["src_ways"] = (
-        world["src_ways"]
-        .withColumn("coords", F.when(F.size("node_ids") < 2000, F.col("coords")))
-        .localCheckpoint(eager=False)
-    )
-    world["osm_ways"] = (
-        world["osm_ways"]
-        .withColumn("coords", F.when(F.size("coords") < 2000, F.col("coords")))
-        .localCheckpoint(eager=False)
-    )
-    _WORLD_CACHE[key] = world
+    # localCheckpoint the trimmed variants once, so the synthetic arrays
+    # are not regenerated per branch (measured ~30% off conflate wall
+    # time). No shuffle lies below them, so the lazy checkpoint starts
+    # no job here.
+    world = _trim_coords(_build_osm_world(spark, sf_dir))
+    for name in ("src_ways", "osm_ways"):
+        world[name] = world[name].localCheckpoint(eager=False)
     return world
 
 
 def _build_osm_world(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    w = _base_ways(spark, sf_dir)
+    """All five tables as narrow projections of one leaf: the base ways,
+    locally checkpointed once, so the orders scan and its distinct run
+    once. Without the cut, each of the 11 union branches below scans
+    orders and runs its own distinct shuffle: the filters push below
+    the distinct, so no exchange is reused."""
+    w = _base_ways(spark, sf_dir).localCheckpoint(eager=True)
     c = F.col("case")
     closed = c == 10
 
@@ -350,8 +391,6 @@ def materialize_strip_world(spark: SparkSession, sf_dir: str, out_dir: str) -> N
 def build_strip_world(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segmentation input (see _build_strip_world). Reads the
     materialized parquet copy when $SPARK_GRAFT_STRIP_DIR is set."""
-    import os
-
     sdir = os.environ.get("SPARK_GRAFT_STRIP_DIR")
     if sdir and os.path.exists(os.path.join(sdir, "_SUCCESS")):
         return spark.read.parquet(sdir)

@@ -19,20 +19,27 @@ keys). The Spark-native equivalents:
 
 No Spark job for the metrics: the rows are read from the committed
 part-file footers. `part-NNNNN-*` is written by write task NNNNN, so
-partition_id is the stage's real output layout. Nor for reading a
-recomputed stage back: it is read with the schema it was written with.
+partition_id is the stage's real output layout. Nor for reading a stage
+back, recomputed or resumed: a recomputed stage is read with the schema
+it was just written with, a resumed one with the Spark schema stored in
+its first part file's footer (key `org.apache.spark.sql.parquet.row.
+metadata`, read with pyarrow). A stage directory whose footer lacks that
+key, e.g. one written by another writer, is read with inference.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 SUCCESS_MARK = "_SUCCESS"
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 LEDGER_SCHEMA = pa.schema(
     [
@@ -48,6 +55,18 @@ LEDGER_SCHEMA = pa.schema(
 def _visible(d: str) -> list[str]:
     """Data files Spark reads in `d`: hidden (`.`/`_`) names skipped."""
     return sorted(f for f in os.listdir(d) if not f.startswith((".", "_")))
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema a stage was written with, from the footer of its
+    first part file (Spark writes one even for an empty stage), or None
+    when that footer does not carry one."""
+    files = _visible(path)
+    if not files:
+        return None
+    meta = pq.read_schema(os.path.join(path, files[0])).metadata or {}
+    row_meta = meta.get(SPARK_ROW_METADATA)
+    return None if row_meta is None else StructType.fromJson(json.loads(row_meta))
 
 
 class StageRunner:
@@ -78,7 +97,9 @@ class StageRunner:
         path = self._path(name)
         if self.is_done(name):
             self.resumed.append(name)
-            return self.spark.read.parquet(path)
+            schema = _footer_schema(path)
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            return reader.parquet(path)
         t0 = time.time()
         df = build()
         df.write.mode("overwrite").parquet(path)
@@ -105,7 +126,8 @@ class StageRunner:
         os.replace(tmp, os.path.join(self.ledger, final))
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(self.ledger)
+        # by explicit path: Spark's file index skips the `_metrics` dir itself
+        return self.spark.read.parquet(*(os.path.join(self.ledger, f) for f in _visible(self.ledger)))
 
     def metrics_history(self) -> list[dict]:
         """The run ledger: one entry per recomputed stage, in commit order."""

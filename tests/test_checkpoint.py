@@ -17,12 +17,16 @@ def ckpt_dir(tmp_path):
     return str(tmp_path / "ckpt")
 
 
-def run_pipeline(spark, sf_dir, ckpt_dir, run_id):
-    r = StageRunner(spark, ckpt_dir, run_id=run_id)
+def stage_frames(spark, sf_dir, r):
+    """{stage: DataFrame} of the three-stage pipeline run by `r`."""
     pages = r.stage("pages", lambda: datagen.build_pages(spark, sf_dir))
     b = r.stage("boundaries", lambda: datagen.build_boundaries(spark, sf_dir))
-    out = r.stage("geotag", lambda: SJ.geotag_pages(pages, b))
-    return r, out
+    return {"pages": pages, "boundaries": b, "geotag": r.stage("geotag", lambda: SJ.geotag_pages(pages, b))}
+
+
+def run_pipeline(spark, sf_dir, ckpt_dir, run_id):
+    r = StageRunner(spark, ckpt_dir, run_id=run_id)
+    return r, stage_frames(spark, sf_dir, r)["geotag"]
 
 
 def _job_ids(spark, group, fn):
@@ -47,7 +51,9 @@ def _part_rows(stage_dir):
 
 
 def test_resume_skips_finished_stages(spark, sf_dir, ckpt_dir):
-    r1, out1 = run_pipeline(spark, sf_dir, ckpt_dir, "r1")
+    r1 = StageRunner(spark, ckpt_dir, run_id="r1")
+    frames1 = stage_frames(spark, sf_dir, r1)
+    out1 = frames1["geotag"]
     assert r1.recomputed == ["pages", "boundaries", "geotag"]
     rows1 = sorted(map(tuple, out1.select("url", "level9_id", "verdict").collect()))
     ledger = r1.metrics_history()
@@ -57,8 +63,14 @@ def test_resume_skips_finished_stages(spark, sf_dir, ckpt_dir):
     # a torn ledger write leaves only a dot-prefixed temp file behind
     with open(os.path.join(ckpt_dir, "_metrics", ".00003-geotag.parquet.tmp"), "wb") as f:
         f.write(b"PAR1 torn")
-    r2, out2 = run_pipeline(spark, sf_dir, ckpt_dir, "r2")
+    r2 = StageRunner(spark, ckpt_dir, run_id="r2")
+    frames2 = {}
+    resumed = _job_ids(spark, "resumed", lambda: frames2.update(stage_frames(spark, sf_dir, r2)))
     assert r2.recomputed == [] and r2.resumed == ["pages", "boundaries", "geotag"]
+    # a resumed stage is read with its footer schema: no inference job
+    assert len(resumed) == 0, resumed
+    assert {k: df.schema for k, df in frames2.items()} == {k: df.schema for k, df in frames1.items()}
+    out2 = frames2["geotag"]
     rows2 = sorted(map(tuple, out2.select("url", "level9_id", "verdict").collect()))
     assert rows1 == rows2
     # the resumed rerun adds no ledger file, and the temp file is not read

@@ -151,6 +151,32 @@ def test_plan_cuts_at_two_checkpoints(verdicts, spark, sf_dir, tmp_path):
     )
 
 
+def test_world_builds_on_first_lookup(verdicts, spark, sf_dir, monkeypatch):
+    """``build_osm_world`` starts no Spark job until a table is looked
+    up, so a stage that resumes builds no world. The in-memory world
+    caches no table: the executed plan of ``conflate`` over it holds no
+    InMemoryRelation."""
+    monkeypatch.setattr(datagen_osm, "_WORLD_CACHE", {})
+    monkeypatch.delenv("SPARK_GRAFT_WORLD_DIR", raising=False)
+    sc = spark.sparkContext
+    sc.setJobGroup("world", "world")
+    try:
+        world = datagen_osm.build_osm_world(spark, sf_dir)
+        assert list(world) == ["src_ways", "src_rels", "osm_ways", "osm_node_tags", "osm_rels"]
+        assert "osm_rels" in world and len(world) == 5
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("world") == []
+    assert datagen_osm.build_osm_world(spark, sf_dir) is world
+    out = CF.conflate(*world.values())  # in conflate's argument order
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan, plan
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        tuple(r) for r in verdicts.drop("case").collect()
+    )
+
+
 def test_unglue_matrix(spark, sf_dir):
     """unglue_ways_as_needed=True (conflate.py:150-186,221-238): tagged
     sharers unglue (candidate side for mid nodes, other side for
